@@ -1,26 +1,26 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two tiers (training-data-pipeline ops, beyond the reference's surface):
-  * cosine_topk      — brute-force exact top-k: probe x corpus cross join
-                       with JVM-side higher-order-function dot products,
-                       window top-k. Baseline + correctness oracle.
-  * lsh_cosine_topk  — scale path: random-hyperplane (SRP) LSH bucketing;
-                       only same-bucket pairs are scored. At 10^12 rows the
-                       cross join is impossible; bucketing makes the join
-                       equi on (table, bucket) and AQE handles skew.
+Tiers (training-data-pipeline ops, beyond the reference's surface):
+  * cosine_topk      — brute-force exact top-k (cross join, window top-k);
+                       the baseline and correctness oracle.
+  * lsh_cosine_pairs — near-dup self-join over SRP LSH blocks: one shuffle
+                       of the narrow band stream, then each block scored
+                       locally by a tiled batched-matmul kernel that emits
+                       every pair once.
+  * lsh_cosine_topk / ivf_cosine_topk — bucketed / k-means-cell top-k.
 
-Embeddings are array<float>; pair/probe scoring arithmetic is cast to
-double and stays in codegen (F.aggregate/F.zip_with). The one Python
-surface is SRP bucketing (_srp_buckets_udf): a dense matmul against a
-constant plane matrix, done as one Arrow-batch numpy matmul — the
-expression-tree form was a measured plan-size pathology (see the UDF's
-docstring).
+The Python surface is Arrow UDFs doing one numpy pass per batch over
+embeddings read by one flatten + reshape: SRP bucketing and IVF cell
+assignment (dense matmuls against a constant matrix, whose expression-tree
+form was a measured plan-size pathology) and the block kernel. Top-k
+scoring stays builtin (F.aggregate/F.zip_with), rounded JVM-side.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # noqa: F401 — resolves the Arrow UDF type hints
-from pyspark.sql import DataFrame, Window, functions as F
+import numpy as np
+import pyarrow as pa  # noqa: F401 — resolves the Arrow UDF type hints
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 SRP_BITS = 16  # 2^16 buckets; tune to corpus size / recall target
 
@@ -37,6 +37,17 @@ def _norm(a):
     return F.sqrt(
         F.aggregate(a, F.lit(0.0),
                     lambda acc, x: acc + x.cast("double") * x.cast("double"))
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per probe by cosine, ties to the smaller id."""
+    w = Window.partitionBy("probe_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("probe_id", "neighbor_id", "cosine", "rank")
     )
 
 
@@ -63,65 +74,77 @@ def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
                     / (F.col("pn") * F.col("cn")), 6),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
+
+
+def _srp_planes(bits: int, n_tables: int, dim: int, seed: int,
+                seed_per_table: bool = False) -> np.ndarray:
+    """(n_tables*bits, dim) seeded hyperplanes; see srp_band_blocks."""
+    if seed_per_table:
+        return np.concatenate([
+            np.random.RandomState(seed + t).standard_normal((bits, dim))
+            for t in range(n_tables)
+        ])
+    return np.random.RandomState(seed).standard_normal((n_tables * bits, dim))
+
+
+def _srp_codes(M: np.ndarray, W: np.ndarray, bits: int) -> np.ndarray:
+    """(n, dim) float64 rows -> (n, tables) SRP bucket ids: one matmul
+    against the (dim, tables*bits) plane matrix, sign, bit-pack. Banding
+    and the block kernel share it, so both see the same projections."""
+    S = (M @ W) > 0
+    weights = (1 << np.arange(bits)).astype(np.int64)
+    return (S.reshape(len(M), W.shape[1] // bits, bits) * weights).sum(axis=2)
+
+
+def _dense_rows(col: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """list<float|double> column -> (row validity, (n_valid, dim) matrix of
+    the element type): one flatten + reshape, null rows carry no values."""
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
+    values = col.flatten().to_numpy(zero_copy_only=False)
+    n = int(valid.sum())
+    if len(values) != n * dim:
+        raise ValueError(f"embeddings must have {dim} elements, got "
+                         f"{len(values)} values for {n} rows")
+    return valid, values.reshape(n, dim)
+
+
+def _matrix_udf(fn, dim: int, elem: T.DataType):
+    """Arrow UDF: embedding -> array<elem>, the row of fn(float64 batch
+    matrix) for each non-null row (null in, null out), no per-row Python."""
+    from pyspark.sql.functions import arrow_udf
+
+    @arrow_udf(T.ArrayType(elem))
+    def rows(col: pa.Array) -> pa.Array:
+        valid, M = _dense_rows(col, dim)
+        out = fn(M.astype(np.float64))
+        offsets = np.concatenate([[0], np.cumsum(valid * out.shape[1])])
+        return pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)),
+                                        pa.array(out.ravel()),
+                                        mask=pa.array(~valid))
+
+    return rows
 
 
 def _srp_buckets_udf(planes, bits: int):
-    """Arrow pandas UDF: embedding -> array<long> of per-table SRP bucket
-    ids, ONE numpy matmul per batch ((n, dim) @ (dim, tables*bits), sign,
-    bit-pack). Deterministic: the plane matrix is a seeded literal baked
-    into the UDF closure.
+    """Arrow UDF: embedding -> array<long> of per-table SRP bucket ids, ONE
+    numpy matmul per batch (_srp_codes). Deterministic: the plane matrix is
+    a seeded literal baked into the UDF closure.
 
-    Why a UDF here when every other ANN expression is builtin: the
-    expression-tree forms are pathological at this fan-out — per-plane
-    expressions build n_planes*dim literal nodes (a ~16k-node plan whose
-    analysis/codegen took ~50 s for a 2,000-row corpus, measured round 4),
-    and a single nested-array literal + higher-order functions stalls the
-    analyzer on the 16k-element literal. A dense matmul against a constant
-    matrix is exactly the Arrow-batch case; the scoring path (dot/cosine
-    of PAIRED rows) stays builtin."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
-    n_tables = planes.shape[0] // bits
+    Why a UDF: per-plane expressions build n_planes*dim literal nodes (a
+    ~16k-node plan took ~50 s of analysis/codegen for a 2,000-row corpus)
+    and a nested-array literal + higher-order functions stalls the
+    analyzer; a dense matmul against a constant is the Arrow-batch case."""
     W = planes.T.copy()                      # (dim, tables*bits)
-    weights = (1 << np.arange(bits)).astype(np.int64)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def srp(col: pd.Series) -> pd.Series:
-        rows = col.tolist()
-        out: list[list[int] | None] = [None] * len(rows)
-        valid = [i for i, v in enumerate(rows) if v is not None]
-        if valid:
-            M = np.asarray([rows[i] for i in valid], dtype=np.float64)
-            S = (M @ W) > 0                          # (n, tables*bits)
-            B = (S.reshape(len(valid), n_tables, bits)
-                 * weights).sum(axis=2)              # (n, tables)
-            for j, i in enumerate(valid):
-                out[i] = [int(x) for x in B[j]]
-        return pd.Series(out)
-
-    return srp
+    return _matrix_udf(lambda M: _srp_codes(M, W, bits), W.shape[0],
+                       T.LongType())
 
 
 def srp_bucket(df: DataFrame, vec_col: str = "embedding",
                bits: int = SRP_BITS, dim: int = 64, seed: int = 42) -> DataFrame:
-    """Signed-random-projection bucket id per row (one table).
-
-    Hyperplanes are a deterministic seeded matrix; bucketing is the
-    batched matmul UDF (_srp_buckets_udf)."""
-    import numpy as np
-
-    planes = np.random.RandomState(seed).standard_normal((bits, dim))
-    udf = _srp_buckets_udf(planes, bits)
+    """Signed-random-projection bucket id per row (one table), from the
+    batched matmul UDF over a deterministic seeded plane matrix."""
+    udf = _srp_buckets_udf(_srp_planes(bits, 1, dim, seed), bits)
     return df.withColumn("bucket", udf(F.col(vec_col))[0])
 
 
@@ -129,87 +152,124 @@ def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding", bits: int = 4,
                     n_tables: int = 8, dim: int = 64, seed: int = 42,
                     seed_per_table: bool = False) -> DataFrame:
-    """All SRP tables in ONE pass: -> (id, block_key) rows via a single
-    posexplode, the same banding shape as MinHash-LSH (blocking.lsh_blocks).
-    One scan, one explode, no per-table union — at 10^9 rows this is one
-    shuffle-join key stream instead of n_tables separate plans.
+    """All SRP tables in ONE pass: -> (block_key, id, table, bucket) rows
+    via a single posexplode, the same banding shape as MinHash-LSH
+    (blocking.lsh_blocks). One scan, one explode, no per-table union — at
+    10^9 rows this is one key stream instead of n_tables separate plans.
 
     seed_per_table=True draws table t's hyperplanes from RandomState(seed+t)
     (first `bits` rows) — the exact plane family of the per-table
     srp_bucket(seed=seed+t) loop, so callers migrating from per-table plans
     keep identical bucket assignments. Default False keeps the one-stream
     family used by lsh_cosine_pairs (its equality oracle pins it)."""
-    import numpy as np
-
-    if seed_per_table:
-        planes = np.concatenate([
-            np.random.RandomState(seed + t).standard_normal((bits, dim))
-            for t in range(n_tables)
-        ])
-    else:
-        rng = np.random.RandomState(seed)
-        planes = rng.standard_normal((n_tables * bits, dim))
-    udf = _srp_buckets_udf(planes, bits)
+    udf = _srp_buckets_udf(
+        _srp_planes(bits, n_tables, dim, seed, seed_per_table), bits)
     # block_key is an 8-byte long (xxhash64 of table+bucket), matching the
-    # text path's band keys (blocking.py lsh_blocks): at 10^9+ vectors x 64
-    # tables a varchar "t:b" key is avoidable shuffle bytes + string
-    # comparisons in the banded self-join. Consumers join on the key only
-    # (pair-set oracles pin pairs, not keys), so the encoding is free to be
-    # opaque.
+    # text path's band keys (blocking.lsh_blocks): cheaper to shuffle and
+    # compare than a varchar "t:b" key at 10^9+ vectors x 64 tables.
     return df.select(
         F.col(id_col), F.posexplode(udf(F.col(vec_col))).alias("table", "bucket")
     ).select(
         F.xxhash64(F.col("table"), F.col("bucket")).alias("block_key"),
-        id_col,
+        id_col, "table", "bucket",
     )
 
 
-def _pair_cosine_udf():
-    """Arrow pandas UDF: (va, vb) -> cosine double, numerically IDENTICAL
-    to the builtin higher-order form round(_dot(va,vb)/(_norm(va)*_norm(vb)))
-    before the round: the numpy loop below performs the same IEEE-754
-    double operations in the same order as the F.aggregate left folds
-    (cast each float element to double, multiply, accumulate element 0..d-1,
-    sqrt the norm folds, multiply the two norms, divide) — so the value is
-    bit-identical and the brute-force DuckDB equality oracle is untouched.
+_TILE = 256  # score rows per matmul: <= _TILE * max(m, _TILE) floats each
 
-    Why a UDF: higher-order-function folds evaluate per element per row
-    outside whole-stage codegen; at millions of candidate pairs the
-    interpreted fold dominated the banded-pairs query (measured 45-60 s
-    executor CPU for ~2M pairs at sf0.1, with multi-x lap-to-lap JIT
-    variance). One vectorized numpy pass per Arrow batch does the same
-    arithmetic in milliseconds (guide §4.2). Rounding stays JVM-side
-    (Spark round is BigDecimal HALF_UP — not numpy's rounding)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
 
-    def _fold_cosine(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
-        dot = np.zeros(len(A))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(A))
-        for d in range(A.shape[1]):  # left fold, same order as F.aggregate
-            dot += A[:, d] * B[:, d]
-            na += A[:, d] * A[:, d]
-            nb += B[:, d] * B[:, d]
-        return dot / (np.sqrt(na) * np.sqrt(nb))
+def _score_blocks(ids: np.ndarray, V: np.ndarray, offsets: np.ndarray,
+                  tables: np.ndarray, buckets: np.ndarray, W: np.ndarray,
+                  bits: int, threshold: float, stats: dict | None = None):
+    """Block-local cosine join over a batch of SRP blocks. Block i owns rows
+    offsets[i]:offsets[i+1] of ids/V and is bucket buckets[i] of table
+    tables[i]. Returns (block, vec_id_a < vec_id_b, unrounded cosine).
 
-    @pandas_udf(T.DoubleType())
-    def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        nulls = va.isna().to_numpy() | vb.isna().to_numpy()
-        if not nulls.any():  # hot path: one vstack, no per-row pandas calls
-            A = np.vstack(va.to_numpy()).astype(np.float64)
-            B = np.vstack(vb.to_numpy()).astype(np.float64)
-            return pd.Series(_fold_cosine(A, B))
-        out = pd.Series(np.full(len(va), None, dtype=object))
-        valid = np.where(~nulls)[0]
-        if len(valid):
-            A = np.vstack(va.iloc[valid].to_numpy()).astype(np.float64)
-            B = np.vstack(vb.iloc[valid].to_numpy()).astype(np.float64)
-            out.iloc[valid] = _fold_cosine(A, B)
-        return out
+    1. Screen with float32 normalized cosines, one batched matmul per block
+       size (score arrays of <= _TILE^2 floats, or (_TILE, m) row tiles of
+       a larger block), keeping >= threshold - 1e-3: float32 error is ~1e-6
+       and round(., 4) moves a value by <= 5e-5. NaN (zero-norm) survives,
+       as Spark orders NaN above every number.
+    2. Keep a pair only in the lowest table where its bucket codes agree,
+       so each pair is emitted once.
+    3. Rescore with the float64 left fold over dimensions — the operation
+       order of F.aggregate and the DuckDB oracle, so bit-identical.
+    stats, if given, gets "max_tile" (floats in the largest score array)."""
+    sizes = np.diff(offsets)
+    row_block = np.repeat(np.arange(len(sizes)), sizes)
+    # a vector recurs in up to n_tables blocks: per-vector work runs once
+    uids, first, vec = np.unique(ids, return_index=True, return_inverse=True)
+    Vu = V[first].astype(np.float64)
+    codes = _srp_codes(Vu, W, bits)                     # (n_vec, n_tables)
+    if not np.array_equal(codes[vec, tables[row_block]], buckets[row_block]):
+        raise RuntimeError("SRP codes recomputed in the block kernel differ "
+                           "from the banding's bucket ids")
+    VT = np.ascontiguousarray(Vu.T)
+    nsq = np.zeros(len(Vu))
+    for x in VT:
+        nsq += x * x
+    with np.errstate(divide="ignore", invalid="ignore"):
+        U = (Vu / np.sqrt(nsq)[:, None]).astype(np.float32)
+    cut = np.float32(threshold - 1e-3)
+    ra, rb, max_tile = [np.empty(0, np.int64)], [np.empty(0, np.int64)], 0
+    for m in np.unique(sizes[sizes > 1]).tolist():
+        starts = offsets[:-1][sizes == m]
+        step = max(1, _TILE * _TILE // (m * m))
+        for c in range(0, len(starts), step):
+            rows = starts[c:c + step, None] + np.arange(m)     # (k, m)
+            X = U[vec[rows]]                                   # (k, m, dim)
+            for r0 in range(0, m, _TILE):
+                S = X[:, r0:r0 + _TILE] @ X[:, r0:].transpose(0, 2, 1)
+                max_tile = max(max_tile, S.size)
+                upper = np.arange(S.shape[2]) > np.arange(S.shape[1])[:, None]
+                k, i, j = np.nonzero(~(S < cut) & upper)
+                ra.append(rows[k, r0 + i])
+                rb.append(rows[k, r0 + j])
+    if stats is not None:
+        stats["max_tile"] = max_tile
+    ra, rb = np.concatenate(ra), np.concatenate(rb)
+    blk, ua, ub = row_block[ra], vec[ra], vec[rb]
+    # first table where each pair's codes agree; every pair agrees in its
+    # own block's table, so the open set empties by tables.max()
+    lowest, open_ = np.empty(len(ra), np.int64), np.arange(len(ra))
+    for u, code in enumerate(codes.T):
+        agree = code[ua[open_]] == code[ub[open_]]
+        lowest[open_[agree]] = u
+        open_ = open_[~agree]
+    keep = lowest == tables[blk]
+    blk, ua, ub = blk[keep], ua[keep], ub[keep]
+    dot = np.zeros(len(ua))
+    for x in VT:
+        dot += x[ua] * x[ub]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dot / (np.sqrt(nsq[ua]) * np.sqrt(nsq[ub]))
+    return blk, uids[np.minimum(ua, ub)], uids[np.maximum(ua, ub)], cos
 
-    return cos
+
+def _block_pairs_udf(planes, bits: int, threshold: float):
+    """Arrow UDF: (table, bucket, members array<struct<id, embedding>>) ->
+    the block's pairs, _score_blocks over the whole batch."""
+    from pyspark.sql.functions import arrow_udf
+
+    W = planes.T.copy()
+
+    @arrow_udf("array<struct<vec_id_a:bigint,vec_id_b:bigint,cosine:double>>")
+    def block_pairs(table: pa.Array, bucket: pa.Array,
+                    members: pa.Array) -> pa.Array:
+        off = members.offsets.to_numpy()
+        ids, vecs = members.flatten().flatten()
+        blk, a, b, cos = _score_blocks(
+            ids.to_numpy(), _dense_rows(vecs, W.shape[0])[1], off - off[0],
+            table.to_numpy(), bucket.to_numpy(), W, bits, threshold)
+        order = np.argsort(blk, kind="stable")
+        ends = np.cumsum(np.bincount(blk, minlength=len(members)))
+        return pa.ListArray.from_arrays(
+            pa.array(np.concatenate([[0], ends]).astype(np.int32)),
+            pa.StructArray.from_arrays(
+                [a[order], b[order], cos[order]],
+                names=["vec_id_a", "vec_id_b", "cosine"]))
+
+    return block_pairs
 
 
 def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
@@ -226,76 +286,45 @@ def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
     per-bucket pair fan-out); tables buy back the recall that extra bits
     cost.
 
-    Plan shape (round 6): ONE shuffle of the band stream — buckets are
-    grouped (collect_list, map-side combinable) and each in-block pair is
-    emitted once via nested explodes, the same candidate shape as the text
-    path (blocking.prune_blocks + candidates.candidate_pairs). The former
-    banded self-join shuffled/broadcast the band stream per join side and
-    probed m^2 rows per bucket. Pair dedup is the one pair-sized exchange;
-    vectors are attached by id joins (broadcast here; hash joins of
-    pairs — small relative to the corpus — at scale) and scored by the
-    bit-exact Arrow batch cosine (_pair_cosine_udf)."""
+    Plan shape: ONE shuffle, of the narrow (id, table, bucket) band stream.
+    Vectors are attached after it by a broadcast join, which keeps the
+    (table, bucket) partitioning, so collecting each block's members needs
+    no second exchange. Each block is scored where it lands
+    (_score_blocks): batched matmuls, tiled so a degenerate bucket costs
+    O(tile x m) memory, each pair emitted once — no pair rows, pair-level
+    distinct or pair-to-vector joins. A corpus too large to broadcast
+    attaches vectors by a shuffled id join instead."""
     ids = df.select(id_col, vec_col)
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    # the banding UDF inherits the scan's split count: a small single-file
-    # corpus runs the matmul on ONE task. Spread it — but only when the
-    # scan is actually under-parallel (a 100 TB corpus scan already yields
-    # tens of thousands of splits; the split count is known from footer
-    # metadata, no job runs). The same signal marks the corpus small enough
-    # to broadcast on the vector-attach joins below.
+    par = df.sparkSession.sparkContext.defaultParallelism
+    # the banding UDF inherits the scan's split count: spread an
+    # under-parallel scan (a small single-file corpus would band on ONE
+    # task; a 100 TB scan has many splits, known from footer metadata, no
+    # job runs). The same signal marks the corpus small enough to broadcast.
     small_corpus = ids.rdd.getNumPartitions() < par
     if small_corpus:
         ids = ids.repartition(2 * par)
-    blocks = srp_band_blocks(ids, id_col, vec_col, bits, n_tables, dim, seed)
-    grouped = (
-        blocks.groupBy("block_key")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    # pair generation is quadratic per block while a grouped row is a few
-    # KB: AQE's byte-based coalescing would pack the blocks into 1-2
-    # post-shuffle partitions and serialize the explode. Spread the block
-    # rows round-robin (tiny shuffle; deterministic placement via Spark's
-    # sort-before-repartition) so the fan-out uses the whole cluster.
-    # Pairs come from posexplode + slice over the SORTED id array — each
-    # in-block pair once, already canonical (id_a < id_b), with no
-    # per-element lambda (the F.filter higher-order form paid an
-    # interpreted predicate per array element — measured 6-77 s of
-    # JIT-dependent CPU for ~16M element visits).
-    grouped = grouped.repartition(2 * par)
-    pairs = (
-        grouped.select(F.posexplode("ids").alias("_i", "vec_id_a"), "ids")
-        .select(
-            "vec_id_a",
-            F.explode(F.slice("ids", F.col("_i") + 2, F.size("ids"))
-                      ).alias("vec_id_b"),
-        )
-        .distinct()
-    )
-    # vector attach: project from the ORIGINAL df (not the repartitioned
-    # stream) so the planner sees the bare scan; on a small corpus force
-    # the build side to the vector table — the planner otherwise broadcast
-    # the PAIRS side (a driver-built multi-million-row hash relation,
-    # measured as BuildLeft on a 2M-row pair table). At 10^9 rows neither
-    # side fits a broadcast and the attach degrades to the shuffled
-    # pair-by-id joins the docstring describes.
-    va = df.select(F.col(id_col).alias("vec_id_a"),
-                   F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("vec_id_b"),
-                   F.col(vec_col).alias("vb"))
+    # (table, bucket) is the block; its block_key hash would only add 8
+    # incompressible bytes per shuffled row
+    blocks = srp_band_blocks(ids, id_col, vec_col, bits, n_tables, dim,
+                             seed).drop("block_key")
+    vecs = df.select(id_col, vec_col)
     if small_corpus:
-        va, vb = F.broadcast(va), F.broadcast(vb)
-    # asNondeterministic: the threshold filter references the UDF column;
-    # without it the optimizer pushes the filter below the projection and
-    # evaluates the UDF (and its Arrow transfer) TWICE (guide §4.4 —
-    # verified in the physical plan: two ArrowEvalPython nodes).
-    cos = _pair_cosine_udf().asNondeterministic()
+        # an explicit count: scoring is quadratic per block while a block
+        # row is a few KB, so AQE's byte-based coalescing would pack all
+        # blocks into 1-2 tasks
+        blocks = blocks.repartition(2 * par, "table", "bucket")
+        vecs = F.broadcast(vecs)
+    score = _block_pairs_udf(_srp_planes(bits, n_tables, dim, seed), bits,
+                             threshold)
     return (
-        pairs.join(va, "vec_id_a").join(vb, "vec_id_b")
-        .withColumn("cosine", F.round(cos(F.col("va"), F.col("vb")), 4))
+        blocks.join(vecs, id_col)
+        .groupBy("table", "bucket")
+        .agg(F.collect_list(F.struct(id_col, vec_col)).alias("members"))
+        .filter(F.size("members") > 1)
+        .select(F.explode(score("table", "bucket", "members")).alias("p"))
+        .select("p.vec_id_a", "p.vec_id_b",
+                F.round("p.cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("vec_id_a", "vec_id_b", "cosine")
     )
 
 
@@ -350,8 +379,6 @@ def ivf_train(corpus: DataFrame, n_cells: int = 16, iters: int = 3,
     """
     full = corpus.select(id_col, vec_col)
     if train_sample_mod is not None and train_sample_mod > 1:
-        import numpy as np
-
         rows = (
             full.filter(F.pmod(F.xxhash64(F.col(id_col)),
                                F.lit(train_sample_mod)) == 0)
@@ -402,34 +429,19 @@ def ivf_train(corpus: DataFrame, n_cells: int = 16, iters: int = 3,
 
 
 def _ivf_cells_udf(centroids: list[list[float]], n_nearest: int = 1):
-    """Arrow pandas UDF: embedding -> the n_nearest cell ids by squared
-    L2 distance to the (constant, driver-resident) codebook — one numpy
+    """Arrow UDF: embedding -> the n_nearest cell ids by squared L2
+    distance to the (constant, driver-resident) codebook — one numpy
     distance matrix per batch, ||v-c||^2 = |v|^2 - 2 v.C + |c|^2, stable
     argsort (distance ties break by cell index, matching the former
     array_sort(struct(d, cell)) expression). Same plan-size rationale as
     _srp_buckets_udf: per-centroid literal expressions built
     n_cells*dim-node trees that dominated small-query wall time."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
     C = np.asarray(centroids, dtype=np.float64)          # (cells, dim)
     c_sq = (C * C).sum(axis=1)                           # (cells,)
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def cells(col: pd.Series) -> pd.Series:
-        rows = col.tolist()
-        out: list[list[int] | None] = [None] * len(rows)
-        valid = [i for i, v in enumerate(rows) if v is not None]
-        if valid:
-            M = np.asarray([rows[i] for i in valid], dtype=np.float64)
-            d = c_sq[None, :] - 2.0 * (M @ C.T)          # + |v|^2 (const/row)
-            order = np.argsort(d, axis=1, kind="stable")[:, :n_nearest]
-            for j, i in enumerate(valid):
-                out[i] = [int(x) for x in order[j]]
-        return pd.Series(out)
-
-    return cells
+    return _matrix_udf(
+        lambda M: np.argsort(c_sq[None, :] - 2.0 * (M @ C.T),  # + |v|^2
+                             axis=1, kind="stable")[:, :n_nearest]
+        .astype(np.int32), C.shape[1], T.IntegerType())
 
 
 def ivf_assign(df: DataFrame, centroids: list[list[float]],
@@ -472,14 +484,7 @@ def ivf_cosine_topk(corpus: DataFrame, probes: DataFrame,
                     / (F.col("pn") * F.col("cn")), 6),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def lsh_cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
@@ -532,11 +537,4 @@ def lsh_cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
                     / (F.col("pn") * F.col("cn")), 6),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)

@@ -176,6 +176,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
                          .alias("moved"))
                 .localCheckpoint()
             )
+            # observe() accumulators are not exactly-once: a retried or
+            # speculative task can over-count. An inflated `moved` only
+            # costs one extra jump; labels are unaffected.
             moved = bool(obs.get["moved"] or 0)
             lab = jumped.drop("_moved")
             if not moved:
@@ -196,6 +199,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .observe(obs_n, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
+        # may over-count under task retries (see `moved` above): a spurious
+        # n_next > driver_finish_edges only keeps this level distributed,
+        # and the contracted edges themselves are exact
         n_next = int(obs_n.get["n"])
         if n_next == 0:
             break

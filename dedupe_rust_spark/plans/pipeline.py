@@ -286,70 +286,76 @@ class DedupPipeline:
             return n, int((time.monotonic() - t0) * 1000)
 
         audit_pool = ThreadPoolExecutor(max_workers=1)
-        audit_future = audit_pool.submit(_audit)
+        # an abandoned future would leave the worker thread (and its audit
+        # job) running until interpreter exit if a stage below raises
+        try:
+            audit_future = audit_pool.submit(_audit)
 
-        roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
-        ex_map = blocking.exact_group_map(sig, roots)
-        reps = blocking.exact_representatives(sig, roots)
-        if self.cfg.hot_block_bound is not None:
-            reps = reps.localCheckpoint(eager=False)
-        blocks = blocking.all_blocks(reps)
-        pruned, cap_metrics = blocking.prune_blocks(
-            blocks, self.cfg.max_block, self.cfg.hot_block_bound)
-        if self.cfg.checkpoints:
+            roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
+            ex_map = blocking.exact_group_map(sig, roots)
+            reps = blocking.exact_representatives(sig, roots)
+            if self.cfg.hot_block_bound is not None:
+                reps = reps.localCheckpoint(eager=False)
+            blocks = blocking.all_blocks(reps)
+            pruned, cap_metrics = blocking.prune_blocks(
+                blocks, self.cfg.max_block, self.cfg.hot_block_bound)
+            if self.cfg.checkpoints:
+                t0 = time.monotonic()
+                n_salted = cap_metrics.count()
+                self.stage_metrics.append(
+                    {"stage": "blocks_salted", "rows_out": n_salted,
+                     "run_id": self.run_id,
+                     "wall_ms": int((time.monotonic() - t0) * 1000)})
+
+            pairs = cand.candidate_pairs(
+                pruned, keep_block_key=False,
+                star_min_block=self.cfg.star_min_block)
+            if self.cfg.simhash_prefilter:
+                pairs = cand.simhash_prefilter(pairs, sig,
+                                               self.cfg.max_hamming)
+            # semi pre-filter of the attach joins only when the corpus is big
+            # enough that the un-filtered attach would shuffle it (see
+            # PipelineConfig.attach_prefilter_rows); the row count is already
+            # measured by the signatures checkpoint — no extra job
+            n_sig = next((m["rows_out"] for m in self.stage_metrics
+                          if m["stage"] == "signatures"), 0)
+            prefilter = n_sig >= self.cfg.attach_prefilter_rows
+            # the candidates checkpoint carries the MinHash-Jaccard estimate:
+            # one materialization serves both the resume contract and the
+            # fast/slow scoring split (both branches read it)
+            est = self._checkpoint(
+                scoring.attach_estimates(pairs, sig, prefilter), "candidates")
+
+            scores = scoring.score_estimated(est, sig, self.cfg.lev_match,
+                                             self.cfg.jaccard_match,
+                                             self.cfg.compute_jw,
+                                             prefilter=prefilter)
+            scores = self._checkpoint(scores, "scores")
+
+            # Transitive closure runs over FUZZY edges between exact-group
+            # representatives only; exact copies then inherit their root's
+            # label via one join (blocking.exact_group_map). The exact tier can
+            # never be lost (F1 floor, SURVEY.md §7e): a group's members always
+            # share their root's final label.
             t0 = time.monotonic()
-            n_salted = cap_metrics.count()
+            cc_stats: dict = {}
+            rep_labels = cluster.connected_components(
+                scoring.match_edges(scores), stats=cc_stats)
+            labels = cluster.propagate_to_members(rep_labels, ex_map,
+                                                  sig.select("id", "url"))
             self.stage_metrics.append(
-                {"stage": "blocks_salted", "rows_out": n_salted,
+                {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
                  "run_id": self.run_id,
                  "wall_ms": int((time.monotonic() - t0) * 1000)})
-
-        pairs = cand.candidate_pairs(pruned, keep_block_key=False,
-                                     star_min_block=self.cfg.star_min_block)
-        if self.cfg.simhash_prefilter:
-            pairs = cand.simhash_prefilter(pairs, sig, self.cfg.max_hamming)
-        # semi pre-filter of the attach joins only when the corpus is big
-        # enough that the un-filtered attach would shuffle it (see
-        # PipelineConfig.attach_prefilter_rows); the row count is already
-        # measured by the signatures checkpoint — no extra job
-        n_sig = next((m["rows_out"] for m in self.stage_metrics
-                      if m["stage"] == "signatures"), 0)
-        prefilter = n_sig >= self.cfg.attach_prefilter_rows
-        # the candidates checkpoint carries the MinHash-Jaccard estimate:
-        # one materialization serves both the resume contract and the
-        # fast/slow scoring split (both branches read it)
-        est = self._checkpoint(
-            scoring.attach_estimates(pairs, sig, prefilter), "candidates")
-
-        scores = scoring.score_estimated(est, sig, self.cfg.lev_match,
-                                         self.cfg.jaccard_match,
-                                         self.cfg.compute_jw,
-                                         prefilter=prefilter)
-        scores = self._checkpoint(scores, "scores")
-
-        # Transitive closure runs over FUZZY edges between exact-group
-        # representatives only; exact copies then inherit their root's
-        # label via one join (blocking.exact_group_map). The exact tier can
-        # never be lost (F1 floor, SURVEY.md §7e): a group's members always
-        # share their root's final label.
-        t0 = time.monotonic()
-        cc_stats: dict = {}
-        rep_labels = cluster.connected_components(scoring.match_edges(scores),
-                                                  stats=cc_stats)
-        labels = cluster.propagate_to_members(rep_labels, ex_map,
-                                              sig.select("id", "url"))
-        self.stage_metrics.append(
-            {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
-             "run_id": self.run_id,
-             "wall_ms": int((time.monotonic() - t0) * 1000)})
-        # gate on the concurrent id audit BEFORE materializing output:
-        # raises on any surrogate collision, so no corrupt clusters can
-        # be observed; wall_ms is the audit's own span (overlapped)
-        n_bad_ids, audit_ms = audit_future.result()
-        audit_pool.shutdown(wait=False)
-        self.stage_metrics.append(
-            {"stage": "id_audit", "rows_out": n_bad_ids,
-             "run_id": self.run_id, "wall_ms": audit_ms})
+            # gate on the concurrent id audit BEFORE materializing output:
+            # raises on any surrogate collision, so no corrupt clusters can
+            # be observed; wall_ms is the audit's own span (overlapped)
+            n_bad_ids, audit_ms = audit_future.result()
+            self.stage_metrics.append(
+                {"stage": "id_audit", "rows_out": n_bad_ids,
+                 "run_id": self.run_id, "wall_ms": audit_ms})
+        finally:
+            audit_pool.shutdown(wait=False, cancel_futures=True)
         clusters = self._checkpoint(labels, "clusters")
 
         self.stage_metrics.append(

@@ -252,3 +252,136 @@ class TestBatchScorers:
             tb = sb.astype(np.uint16).astype(np.int16)
             trunc = float(np.mean(ta == tb))
             assert 0 <= trunc - full <= 2 / 128, (a[:30], b[:30])
+
+
+# ------------------------------------------------------- SRP block kernel
+def _spark_round4(x: float) -> float:
+    """Spark's round(double, 4): HALF_UP on the shortest decimal repr."""
+    from decimal import ROUND_HALF_UP, Decimal
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.0001"),
+                                                  rounding=ROUND_HALF_UP))
+
+
+def _fold_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Per-pair left fold over dimensions (the F.aggregate order)."""
+    dot, na, nb = np.zeros(len(A)), np.zeros(len(A)), np.zeros(len(A))
+    for d in range(A.shape[1]):
+        dot += A[:, d] * B[:, d]
+        na += A[:, d] * A[:, d]
+        nb += B[:, d] * B[:, d]
+    return dot / (np.sqrt(na) * np.sqrt(nb))
+
+
+class TestBlockKernel:
+    """ann._score_blocks against a brute-force cosine join, no Spark."""
+
+    BITS, TABLES, DIM, THR = 4, 4, 32, 0.9
+
+    def _vectors(self) -> np.ndarray:
+        rng = np.random.RandomState(7)
+        b, d = self.BITS, self.DIM
+        # table 0's planes are the first BITS axes (see _planes): positive
+        # leading coordinates put a vector in table 0's top bucket, so
+        # these 20k rows form one degenerate block
+        clump = rng.standard_normal((20000, d))
+        clump[:, :b] = np.abs(clump[:, :b]) + 0.05
+        near = clump[:300] + 0.1 * rng.standard_normal((300, d))
+        near[:, :b] = np.abs(near[:, :b])
+        # pairs whose cosine straddles the HALF_UP cut at THR - 5e-5:
+        # partner = c*u + s*w, w orthogonal to u with zero leading coords
+        u = clump[300:340] / np.linalg.norm(clump[300:340], axis=1)[:, None]
+        tail = np.where(np.arange(d) < b, 0.0, u)
+        w = np.where(np.arange(d) < b, 0.0, rng.standard_normal((40, d)))
+        w -= ((w * tail).sum(axis=1)
+              / (tail * tail).sum(axis=1))[:, None] * tail
+        w /= np.linalg.norm(w, axis=1)[:, None]
+        c = self.THR - np.linspace(1e-4, 0.0, 40)[:, None]
+        edge = c * u + np.sqrt(1 - c * c) * w
+        spread = rng.standard_normal((2000, d))
+        return np.concatenate([clump, near, edge, spread]).astype(np.float32)
+
+    def _planes(self) -> np.ndarray:
+        rng = np.random.RandomState(3)
+        planes = rng.standard_normal((self.TABLES * self.BITS, self.DIM))
+        planes[:self.BITS] = np.eye(self.BITS, self.DIM)
+        return planes
+
+    def _blocks(self, V, W):
+        from dedupe_rust_spark.operators import ann
+
+        codes = ann._srp_codes(V, W, self.BITS)
+        members, tables, buckets = [], [], []
+        for t in range(self.TABLES):
+            for code in np.unique(codes[:, t]):
+                rows = np.nonzero(codes[:, t] == code)[0]
+                if len(rows) > 1:
+                    members.append(rows)
+                    tables.append(t)
+                    buckets.append(code)
+        offsets = np.concatenate([[0], np.cumsum([len(r) for r in members])])
+        return (np.concatenate(members), offsets, np.array(tables),
+                np.array(buckets), codes)
+
+    def test_pairs_equal_bruteforce_once_and_tiled(self):
+        from dedupe_rust_spark.operators import ann
+
+        X = self._vectors()
+        V = X.astype(np.float64)
+        ids = np.arange(len(V), dtype=np.int64) * 7 + 3
+        W = self._planes().T.copy()
+        rows, offsets, tables, buckets, codes = self._blocks(V, W)
+        stats: dict = {}
+        blk, a, b, cos = ann._score_blocks(ids[rows], V[rows], offsets,
+                                           tables, buckets, W, self.BITS,
+                                           self.THR, stats=stats)
+        got = list(zip(a.tolist(), b.tolist()))
+        assert len(got) == len(set(got))  # each pair once across tables
+
+        # brute force: float64 screen with a margin, left-fold rescore,
+        # pairs that collide in at least one table, Spark rounding
+        norms = np.sqrt((V * V).sum(axis=1))
+        expect = {}
+        for lo in range(0, len(V), 512):
+            sim = V[lo:lo + 512] @ V.T / np.outer(norms[lo:lo + 512], norms)
+            i, j = np.nonzero(sim >= self.THR - 1e-3)
+            i = i + lo
+            i, j = i[i < j], j[i < j]
+            hit = (codes[i] == codes[j]).any(axis=1)
+            i, j = i[hit], j[hit]
+            for x, y, v in zip(i, j, _fold_cosine(V[i], V[j])):
+                if _spark_round4(v) >= self.THR:
+                    expect[(int(ids[x]), int(ids[y]))] = v
+        have = {p: v for p, v in zip(got, cos.tolist())
+                if _spark_round4(v) >= self.THR}
+        assert have == expect  # values bit-equal to the per-pair fold
+        edge = {p: v for p, v in expect.items() if v < self.THR}
+        assert edge, "no pair rounds up to the threshold"
+        lost = [v for v in cos.tolist() if self.THR - 1e-4 <= v < self.THR
+                and _spark_round4(v) < self.THR]
+        assert lost, "no pair just below the rounding cut"
+        m = int(np.diff(offsets).max())
+        assert m >= 20000
+        assert stats["max_tile"] <= ann._TILE * m
+
+    def test_zero_vectors_keep_nan_pair(self):
+        """Two zero vectors have a NaN cosine, which Spark orders above any
+        threshold: the screen keeps the pair, emitted once."""
+        from dedupe_rust_spark.operators import ann
+
+        V = np.zeros((2, self.DIM))
+        W = self._planes().T.copy()
+        rows, offsets, tables, buckets, _ = self._blocks(V, W)
+        _, a, b, cos = ann._score_blocks(rows, V[rows], offsets, tables,
+                                         buckets, W, self.BITS, self.THR)
+        assert list(zip(a.tolist(), b.tolist())) == [(0, 1)]
+        assert np.isnan(cos[0])
+
+    def test_code_mismatch_fails_loudly(self):
+        from dedupe_rust_spark.operators import ann
+
+        V = self._vectors()[:500].astype(np.float64)
+        W = self._planes().T.copy()
+        rows, offsets, tables, buckets, _ = self._blocks(V, W)
+        with pytest.raises(RuntimeError, match="differ"):
+            ann._score_blocks(rows, V[rows], offsets, tables, buckets + 1,
+                              W, self.BITS, self.THR)

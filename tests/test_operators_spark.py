@@ -124,6 +124,59 @@ class TestANN:
                   for a, b in zip(ia, ib) if ids[a] != ids[b]}
         assert got == expect
 
+    def test_lsh_pairs_plan_one_exchange_no_duplicates(self, spark, emb):
+        """Block-local scoring: the band stream is the only hash exchange
+        (no pair-keyed shuffle, distinct or pair-to-vector join) and each
+        pair is emitted once."""
+        out = ann.lsh_cosine_pairs(emb, threshold=0.35)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning(") == 1, plan
+        assert "hashpartitioning(vec_id_a" not in plan, plan
+        got = out.groupBy("vec_id_a", "vec_id_b").count()
+        assert got.filter(F.col("count") > 1).count() == 0
+
+    def test_lsh_pairs_unbroadcast_path_equal(self, spark, emb):
+        """A scan with enough splits skips the spread + broadcast attach;
+        the pair set must not change."""
+        par = spark.sparkContext.defaultParallelism
+        small = ann.lsh_cosine_pairs(emb, threshold=0.35)
+        split = ann.lsh_cosine_pairs(emb.repartition(2 * par), threshold=0.35)
+        assert small.exceptAll(split).count() == 0
+        assert split.exceptAll(small).count() == 0
+
+    def test_srp_and_ivf_udfs_match_numpy(self, spark, emb):
+        """The Arrow bucket/cell UDFs equal a pure-numpy reference, and a
+        null embedding maps to a null id list."""
+        local = emb.toPandas()
+        mat = np.array([np.asarray(v, dtype=np.float64)
+                        for v in local["embedding"]])
+        row = {int(v): i for i, v in enumerate(local["vec_id"])}
+        planes = np.random.RandomState(42).standard_normal((8 * 4, 64))
+        signs = (mat @ planes.T > 0).reshape(len(mat), 8, 4)
+        codes = (signs * (1 << np.arange(4))).sum(axis=2)
+        blocks = ann.srp_band_blocks(emb, bits=4, n_tables=8).toPandas()
+        assert len(blocks) == 8 * len(mat)
+        for r in blocks.itertuples():
+            assert codes[row[r.vec_id], r.table] == r.bucket
+
+        cents = ann.ivf_train(emb, n_cells=8, iters=2)
+        C = np.asarray(cents)
+        d = (C * C).sum(axis=1)[None, :] - 2.0 * (mat @ C.T)
+        nearest = np.argsort(d, axis=1, kind="stable")[:, :3]
+        with_null = emb.select("vec_id", "embedding").unionByName(
+            spark.createDataFrame([(-1, None)],
+                                  "vec_id long, embedding array<float>"))
+        cells = with_null.select(
+            "vec_id", ann._ivf_cells_udf(cents, 3)("embedding").alias("c"),
+            ann._srp_buckets_udf(planes, 4)("embedding").alias("b"),
+        ).toPandas()
+        for r in cells.itertuples():
+            if r.vec_id == -1:
+                assert r.c is None and r.b is None
+            else:
+                assert list(r.c) == nearest[row[r.vec_id]].tolist()
+                assert list(r.b) == codes[row[r.vec_id]].tolist()
+
 
 class TestMultimodal:
     PNG = bytes.fromhex("89504e470d0a1a0a0000000d49484452"

@@ -267,6 +267,30 @@ def test_id_audit_fires_on_collision(spark):
         _audit_ids(collided)
 
 
+def test_failed_stage_leaves_no_audit_worker(spark, tiny_pages_dir,
+                                             monkeypatch):
+    """A stage that raises while the concurrent id audit is in flight must
+    not strand the audit pool's worker thread, even while the caller
+    still holds the exception (its traceback keeps the pool referenced)."""
+    import threading
+
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected stage failure")
+
+    monkeypatch.setattr(blocking, "all_blocks", boom)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected") as failure:
+        DedupPipeline(spark, tiny_pages_dir,
+                      config=PipelineConfig(checkpoints=False)).run()
+    workers = [t for t in threading.enumerate() if t not in before
+               and t.name.startswith("ThreadPoolExecutor")]
+    for t in workers:
+        t.join(timeout=60)
+    assert not [t.name for t in workers if t.is_alive()], failure.value
+
+
 def test_cc_driver_finish_equals_distributed(spark):
     """The driver-side union-find tail must produce exactly the labels of
     the pure-distributed loop. The random graph needs >1 contraction

@@ -132,6 +132,19 @@ def main() -> None:
         fmt(ann.lsh_cosine_topk(emb, emb.filter(F.col("vec_id") < 3), k=5)),
     ))
 
+    # 7. SRP-LSH near-dup pairs, scored block-locally
+    sections.append((
+        "SRP-LSH near-dup pairs (block-local scoring)",
+        "Exactly ONE hashpartitioning Exchange: the narrow (vec_id, table, "
+        "bucket) band stream. Vectors attach after it by a BroadcastHashJoin "
+        "(BuildRight), which keeps that partitioning, so the per-block "
+        "collect_list needs no second exchange. ONE ArrowEvalPython scores "
+        "each block (batched matmul, emit-once); its pairs come out of a "
+        "Generate (explode). No pair-keyed exchange or distinct, and no "
+        "join of pairs to vectors.",
+        fmt(ann.lsh_cosine_pairs(emb, threshold=0.35)),
+    ))
+
     out = ["# Physical plans of record",
            "",
            "Generated by tools/dump_plans.py — rerun after planner-visible",
