@@ -123,23 +123,6 @@ def exact_group_map(sig: DataFrame,
     )
 
 
-def exact_edges(sig: DataFrame) -> DataFrame:
-    """Star edges url -> min(url) within each identical-text group
-    (url-typed: test/oracle surface, not the hot path — the pipeline
-    propagates exact groups via exact_group_map ids instead).
-
-    Equality is transitive so a star is enough for CC — the reference
-    relies on the same property (groups ARE clusters, main.rs:616-624).
-    """
-    roots = sig.groupBy("text_sha256").agg(F.min("url").alias("_root"))
-    return (
-        sig.select("url", "text_sha256")
-        .join(roots, "text_sha256")
-        .filter(F.col("url") != F.col("_root"))
-        .select(F.col("_root").alias("src"), F.col("url").alias("dst"))
-    )
-
-
 def lsh_blocks(reps: DataFrame) -> DataFrame:
     """Explode precomputed LSH band keys -> (block_key, id). block_key =
     xxhash64(band_index, band_hash) — an 8-byte long; hashing the band

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 IMAGE_META = T.StructType(
     [
@@ -171,24 +171,3 @@ def image_features(df: DataFrame, id_col: str = "url",
             yield pd.DataFrame(out)
 
     return df.select(id_col, bin_col).mapInPandas(_extract, FEATURE_SCHEMA)
-
-
-def dedupe_by_content_hash(df: DataFrame, id_col: str = "url",
-                           bin_col: str = "content") -> DataFrame:
-    """Exact multimodal dedup — the reference's actual algorithm, verbatim
-    in Spark builtins: group by (header dims, prefix hash, full hash),
-    keep groups >= 2. No Python in the plan at all."""
-    hashed = df.select(
-        F.col(id_col).alias("content_id"),
-        F.xxhash64(F.expr(f"substring({bin_col}, 1, 3000)")).alias("prefix_hash"),
-        F.sha2(F.col(bin_col), 256).alias("content_sha256"),
-        F.length(F.col(bin_col)).alias("n_bytes"),
-    )
-    g = (
-        hashed.groupBy("prefix_hash", "content_sha256")
-        .agg(F.min("content_id").alias("cluster_id"), F.count("*").alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return hashed.join(g, ["prefix_hash", "content_sha256"]).select(
-        "content_id", "cluster_id"
-    )

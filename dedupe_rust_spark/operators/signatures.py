@@ -47,8 +47,9 @@ def signatures(extracted: DataFrame, lsh_bands: int | None = None
     exactly once, at cluster output (cluster.propagate_to_members).
     Collision math: 64-bit birthday bound ~n^2/2^65 — negligible at sandbox
     scales, ~3e4 expected colliding url pairs at 10^12 docs; the pipeline
-    AUDITS (count distinct id vs url) and fails fast rather than silently
-    merging clusters (plans/pipeline.py). At trillion-doc scale swap in a
+    AUDITS every run (per id, min != max of a second, independent url
+    hash: plans/pipeline.py `_audit_ids`) and fails before any output
+    rather than silently merging clusters. At trillion-doc scale swap in a
     128-bit key (two independent 64-bit hash columns) — same dataflow.
     """
     sig = (

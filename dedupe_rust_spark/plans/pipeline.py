@@ -1,17 +1,24 @@
-"""End-to-end dedup pipeline: staged DataFrames with checkpointed outputs,
-per-partition lineage metrics, and resume-by-run_id.
+"""End-to-end dedup pipeline: the one composition of the dataflow
+(`DedupPipeline.run`), with per-stage row counts and resume-by-run_id.
 
 Stage graph (SURVEY.md §3.3):
-  read pages -> extract+signatures [ckpt] -> exact edges
-             -> lsh blocks -> candidate pairs [ckpt] -> scores [ckpt]
-             -> edges (fuzzy ∪ exact) -> connected components -> clusters [ckpt]
-             -> metrics [append]
+  pages (dir or DataFrame) -> clean -> spread -> extract+signatures [stage]
+    -> exact collapse -> lsh blocks -> candidate pairs + estimates [stage]
+    -> scores [stage] -> connected components -> propagate -> clusters [stage]
+    -> metrics [append]
 
-Each checkpoint is a parquet dir `out/<stage>/run_id=<R>/` (Iceberg-style
-partition layout; no Iceberg runtime jar in this sandbox — swap the writer
-format on a cluster that has one). A stage whose output dir has _SUCCESS is
-SKIPPED on rerun with the same run_id: that is the resumability contract
-(north rule), tested in tests/test_resume.py.
+Every [stage] goes through `DedupPipeline._stage`, whose materialization
+policy depends only on `out_dir` and `PipelineConfig.checkpoints`:
+  * out_dir set: a parquet dir `out/<stage>/run_id=<R>/cfg=<F>/`
+    (Iceberg-style partition layout; no Iceberg runtime jar is bundled —
+    swap the writer format on a cluster that has one). A stage
+    whose dir has _SUCCESS is read back instead of rebuilt on a rerun with
+    the same run_id and config: the resumability contract (north rule),
+    tested by tests/test_pipeline_spark.py::test_resume_*.
+  * checkpoints=False without out_dir (the throughput fast path): scores,
+    whose only consumer is the edge list, stays lazy and fuses into it.
+  * otherwise: localCheckpoint, with the row count observed on that same
+    job.
 """
 
 from __future__ import annotations
@@ -19,12 +26,13 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .. import ALGO_VERSION
 from ..operators import blocking, candidates as cand, cluster, scoring, signatures as sigs
-from ..sources.pages import clean_pages, read_pages
+from ..sources.pages import clean_pages, read_pages, spread
 
 
 @dataclass
@@ -52,10 +60,11 @@ class PipelineConfig:
     # every slow-path pair was pure dead CPU in the hottest UDF. Opt in for
     # analysis runs that want the column populated.
     compute_jw: bool = False
-    # checkpoints=False is the throughput fast path: stages fuse into a
-    # handful of jobs (no per-stage materialization/count, no per-partition
-    # lineage, no cap census). Same results; resumability and fine-grained
-    # metrics are OFF — use for benches, not production runs.
+    # checkpoints=False is the throughput fast path: no per-partition
+    # lineage, no cap census and, without an out_dir, scores fuses into
+    # the edge list. Same results; fine-grained metrics are OFF — use for
+    # benches, not production runs. An out_dir still writes (and resumes)
+    # every stage as parquet.
     checkpoints: bool = True
     # corpus-row threshold for the scoring attach semi pre-filter
     # (scoring.attach_estimates/score_estimated prefilter flag): below it
@@ -102,53 +111,16 @@ def _audit_ids(sig: DataFrame) -> int:
     return n
 
 
-def dedup_clusters(pages: DataFrame, cfg: PipelineConfig | None = None
-                   ) -> DataFrame:
-    """The full fuzzy dedup dataflow on an in-memory DataFrame — same stage
-    composition as DedupPipeline.run() but checkpoint-free, for catalog /
-    invariant queries that derive `pages` from the driver's tables instead
-    of a parquet dir. Returns labels (url, cluster_id), clustered rows only.
-    """
-    cfg = cfg or PipelineConfig(checkpoints=False)
-    # same under-parallel guard as DedupPipeline.signatures: catalog-derived
-    # pages are 1-3 splits, so the signature UDF would run on 1-3 tasks; a
-    # real corpus scan is already parallel and skips the shuffle (the split
-    # count is parquet footer metadata, no job runs)
-    par = pages.sparkSession.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < 2 * par:
-        pages = pages.repartition(2 * par)
-    sig = sigs.signatures(sigs.extract(pages, cfg.use_golden_text),
-                          cfg.lsh_bands)
-    sig = sig.localCheckpoint()  # consumed by 4 downstream subtrees
-    _audit_ids(sig)  # unconditional fail-fast (signatures.py contract)
-    # the min(id) roots agg (one HashAggregate over the corpus) feeds both
-    # the group map and the representatives — materialize it once
-    roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
-    ex_map = blocking.exact_group_map(sig, roots)
-    reps = blocking.exact_representatives(sig, roots)
-    if cfg.hot_block_bound is not None:
-        # hot-key detection scans the band stream twice (sample + group):
-        # materialize the reps join once so the second pass is explode-only
-        reps = reps.localCheckpoint(eager=False)
-    pruned, _ = blocking.prune_blocks(blocking.all_blocks(reps),
-                                      cfg.max_block, cfg.hot_block_bound)
-    pairs = cand.candidate_pairs(pruned, keep_block_key=False,
-                                 star_min_block=cfg.star_min_block)
-    if cfg.simhash_prefilter:
-        pairs = cand.simhash_prefilter(pairs, sig, cfg.max_hamming)
-    scores = scoring.score_candidates(pairs, sig, cfg.lev_match,
-                                      cfg.jaccard_match, cfg.compute_jw)
-    rep_labels = cluster.connected_components(scoring.match_edges(scores))
-    return cluster.propagate_to_members(rep_labels, ex_map,
-                                        sig.select("id", "url"))
-
-
 class DedupPipeline:
-    def __init__(self, spark: SparkSession, pages_dir: str,
+    """`pages` is a pages dir (or parquet file) for `read_pages`, or an
+    already-built DataFrame with the pages(url, warc_ts, html, text, lang)
+    columns; both go through the same clean -> spread -> extract."""
+
+    def __init__(self, spark: SparkSession, pages: str | DataFrame,
                  out_dir: str | None = None, run_id: str | None = None,
                  config: PipelineConfig | None = None):
         self.spark = spark
-        self.pages_dir = pages_dir
+        self.pages = pages
         self.out_dir = out_dir
         self.run_id = run_id or f"v{ALGO_VERSION}"
         self.cfg = config or PipelineConfig()
@@ -181,101 +153,75 @@ class DedupPipeline:
         )
         return hashlib.blake2b(payload.encode(), digest_size=4).hexdigest()
 
-    # ------------------------------------------------------------ checkpoints
+    # ---------------------------------------------------------------- stages
     def _ckpt_path(self, stage: str) -> str | None:
         if self.out_dir is None:
             return None
         return os.path.join(self.out_dir, stage, f"run_id={self.run_id}",
                             f"cfg={self.cfg_fingerprint}")
 
-    def _checkpoint(self, df: DataFrame, stage: str) -> DataFrame:
-        """Write stage output and read it back (cuts lineage + resumable).
-        Without out_dir, fall back to localCheckpoint (tests/bench)."""
-        self.spark.sparkContext.setJobDescription(f"stage:{stage}")
-        if not self.cfg.checkpoints and stage == "scores":
-            # fast path: scores has exactly one downstream consumer (the
-            # edge list) — let it fuse into that job
-            return df
-        if not self.cfg.checkpoints and stage == "clusters":
-            # small result, >=2 consumers (metrics count + caller): one
-            # cheap materialization, no parquet round-trip. Timed — this
-            # is where the lazy propagate/relabel dataflow actually runs.
-            t0 = time.monotonic()
-            out = df.localCheckpoint()
-            self.stage_metrics.append(
-                {"stage": "clusters", "rows_out": -1, "run_id": self.run_id,
-                 "wall_ms": int((time.monotonic() - t0) * 1000)})
-            return out
-        path = self._ckpt_path(stage)
+    def _stage(self, name: str, build: Callable[[], DataFrame],
+               fuse: bool = False) -> tuple[DataFrame, int]:
+        """Materialize one stage by the module docstring's policy, record
+        its metrics row, and return (output, rows_out). `build` is called
+        only when there is no checkpoint to resume from, so a resumed
+        signatures stage never plans the extract. A `fuse` stage on the
+        fast path is returned lazy, with rows_out -1.
+
+        localCheckpoint rows are counted by an Observation that rides the
+        materializing job (no second count() job); like cluster.py's, it
+        may over-count under task retries, which can only switch on the
+        attach pre-filter (a pure filter). The parquet branch's read-back
+        count() doubles as the resume count."""
+        self.spark.sparkContext.setJobDescription(f"stage:{name}")
+        path = self._ckpt_path(name)
+        if path is None and fuse and not self.cfg.checkpoints:
+            return build(), -1
         t0 = time.monotonic()
+        resumed = bool(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
         if path is None:
-            out = df.localCheckpoint()
-            n = out.count()
-            resumed = False
+            obs = Observation(f"rows_{name}")
+            out = (build().observe(obs, F.count(F.lit(1)).alias("n"))
+                   .localCheckpoint())
+            n = int(obs.get["n"])
         else:
-            resumed = os.path.exists(os.path.join(path, "_SUCCESS"))
             if not resumed:
-                df.write.mode("overwrite").parquet(path)
+                build().write.mode("overwrite").parquet(path)
             out = self.spark.read.parquet(path)
             n = out.count()
         self.stage_metrics.append(
-            {"stage": stage, "rows_out": n,
+            {"stage": name, "rows_out": n,
              "wall_ms": int((time.monotonic() - t0) * 1000),
              "run_id": self.run_id, "resumed": resumed}
         )
-        return out
+        return out, n
 
-    def _stage_done(self, stage: str) -> bool:
-        path = self._ckpt_path(stage)
-        return bool(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
-
-    def _read_stage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self._ckpt_path(stage))
-
-    # ---------------------------------------------------------------- stages
-    def signatures(self) -> DataFrame:
-        if self._stage_done("signatures"):
-            df = self._read_stage("signatures")
-            self.stage_metrics.append({"stage": "signatures", "resumed": True,
-                                       "rows_out": df.count(), "wall_ms": 0,
-                                       "run_id": self.run_id})
-            return df
-        pages = clean_pages(read_pages(self.spark, self.pages_dir),
-                            self.cfg.exclude_hosts)
-        # The synthetic pages table is one small parquet file -> one input
-        # split -> the extraction UDF would run on a single task. Spread it
-        # across the cluster — but ONLY when the scan is actually
-        # under-parallel: an unconditional repartition here would shuffle
-        # the ENTIRE page corpus (html included) on a real 100 TB table
-        # whose scan already yields tens of thousands of splits. The scan
-        # split count is known before any job runs (parquet footer
-        # metadata), so this check is free.
-        par = self.spark.sparkContext.defaultParallelism
-        if pages.rdd.getNumPartitions() < 2 * par:
-            pages = pages.repartition(2 * par)
-        extracted = sigs.extract(pages, self.cfg.use_golden_text)
-        sig = sigs.signatures(extracted, self.cfg.lsh_bands)
-        return self._checkpoint(sig, "signatures")
+    def _signatures(self) -> DataFrame:
+        pages = self.pages
+        if not isinstance(pages, DataFrame):
+            pages = read_pages(self.spark, pages)
+        pages = spread(clean_pages(pages, self.cfg.exclude_hosts))
+        return sigs.signatures(sigs.extract(pages, self.cfg.use_golden_text),
+                               self.cfg.lsh_bands)
 
     def run(self) -> DataFrame:
         """Full pipeline; returns clusters(url, cluster_id), clustered rows only."""
         t_all = time.monotonic()
-        sig = self.signatures()
+        cfg = self.cfg
+        sig, n_sig = self._stage("signatures", self._signatures)
 
-        if self.cfg.checkpoints:
+        if cfg.checkpoints:
             # per-partition lineage for the extract stage (north rule): rows
             # per partition + drop accounting, written into metrics
             self._partition_lineage(sig, "signatures")
         # surrogate-id collision audit — UNCONDITIONAL (fast path included):
-        # a collision would silently merge clusters, so every run is
-        # gated on it, matching the signatures.py docstring claim. One
-        # agg over the already-materialized sig (~0.1 s at 400k). Round 6:
-        # the audit job is submitted from a driver THREAD (guide §2.6 —
-        # concurrent jobs back-fill executors) so its wall overlaps the
-        # blocking/candidates stages instead of adding a serial barrier;
-        # the future is resolved (raising on any collision) BEFORE
-        # clusters are returned, so no corrupt result can ever be
-        # observed — "fail fast" becomes "fail before any output".
+        # a collision would silently merge clusters, so every run is gated
+        # on it, matching the signatures.py docstring claim. The audit job
+        # is submitted from a driver THREAD (guide §2.6 — concurrent jobs
+        # back-fill executors) so its wall overlaps the blocking/candidates
+        # stages instead of adding a serial barrier; the future is resolved
+        # (raising on any collision) BEFORE clusters are materialized, so
+        # no corrupt result can ever be observed.
         from concurrent.futures import ThreadPoolExecutor
 
         def _audit() -> tuple[int, int]:
@@ -291,15 +237,19 @@ class DedupPipeline:
         try:
             audit_future = audit_pool.submit(_audit)
 
+            # the min(id) roots agg (one HashAggregate over the corpus)
+            # feeds both the group map and the representatives
             roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
             ex_map = blocking.exact_group_map(sig, roots)
             reps = blocking.exact_representatives(sig, roots)
-            if self.cfg.hot_block_bound is not None:
+            if cfg.hot_block_bound is not None:
+                # hot-key detection scans the band stream twice (sample +
+                # group): materialize the reps join once so the second
+                # pass is explode-only
                 reps = reps.localCheckpoint(eager=False)
-            blocks = blocking.all_blocks(reps)
             pruned, cap_metrics = blocking.prune_blocks(
-                blocks, self.cfg.max_block, self.cfg.hot_block_bound)
-            if self.cfg.checkpoints:
+                blocking.all_blocks(reps), cfg.max_block, cfg.hot_block_bound)
+            if cfg.checkpoints:
                 t0 = time.monotonic()
                 n_salted = cap_metrics.count()
                 self.stage_metrics.append(
@@ -307,36 +257,28 @@ class DedupPipeline:
                      "run_id": self.run_id,
                      "wall_ms": int((time.monotonic() - t0) * 1000)})
 
-            pairs = cand.candidate_pairs(
-                pruned, keep_block_key=False,
-                star_min_block=self.cfg.star_min_block)
-            if self.cfg.simhash_prefilter:
-                pairs = cand.simhash_prefilter(pairs, sig,
-                                               self.cfg.max_hamming)
-            # semi pre-filter of the attach joins only when the corpus is big
-            # enough that the un-filtered attach would shuffle it (see
-            # PipelineConfig.attach_prefilter_rows); the row count is already
-            # measured by the signatures checkpoint — no extra job
-            n_sig = next((m["rows_out"] for m in self.stage_metrics
-                          if m["stage"] == "signatures"), 0)
-            prefilter = n_sig >= self.cfg.attach_prefilter_rows
-            # the candidates checkpoint carries the MinHash-Jaccard estimate:
+            pairs = cand.candidate_pairs(pruned, keep_block_key=False,
+                                         star_min_block=cfg.star_min_block)
+            if cfg.simhash_prefilter:
+                pairs = cand.simhash_prefilter(pairs, sig, cfg.max_hamming)
+            # semi pre-filter of the attach joins only when the corpus is
+            # big enough that the un-filtered attach would shuffle it (see
+            # PipelineConfig.attach_prefilter_rows)
+            prefilter = n_sig >= cfg.attach_prefilter_rows
+            # the candidates stage carries the MinHash-Jaccard estimate:
             # one materialization serves both the resume contract and the
             # fast/slow scoring split (both branches read it)
-            est = self._checkpoint(
-                scoring.attach_estimates(pairs, sig, prefilter), "candidates")
-
-            scores = scoring.score_estimated(est, sig, self.cfg.lev_match,
-                                             self.cfg.jaccard_match,
-                                             self.cfg.compute_jw,
-                                             prefilter=prefilter)
-            scores = self._checkpoint(scores, "scores")
+            est, _ = self._stage("candidates", lambda: scoring.attach_estimates(
+                pairs, sig, prefilter))
+            scores, _ = self._stage("scores", lambda: scoring.score_estimated(
+                est, sig, cfg.lev_match, cfg.jaccard_match, cfg.compute_jw,
+                prefilter=prefilter), fuse=True)
 
             # Transitive closure runs over FUZZY edges between exact-group
             # representatives only; exact copies then inherit their root's
-            # label via one join (blocking.exact_group_map). The exact tier can
-            # never be lost (F1 floor, SURVEY.md §7e): a group's members always
-            # share their root's final label.
+            # label via one join (blocking.exact_group_map). The exact tier
+            # can never be lost (F1 floor, SURVEY.md §7e): a group's members
+            # always share their root's final label.
             t0 = time.monotonic()
             cc_stats: dict = {}
             rep_labels = cluster.connected_components(
@@ -347,19 +289,18 @@ class DedupPipeline:
                 {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
                  "run_id": self.run_id,
                  "wall_ms": int((time.monotonic() - t0) * 1000)})
-            # gate on the concurrent id audit BEFORE materializing output:
-            # raises on any surrogate collision, so no corrupt clusters can
-            # be observed; wall_ms is the audit's own span (overlapped)
+            # gate on the concurrent id audit BEFORE materializing output;
+            # wall_ms is the audit's own span (overlapped)
             n_bad_ids, audit_ms = audit_future.result()
             self.stage_metrics.append(
                 {"stage": "id_audit", "rows_out": n_bad_ids,
                  "run_id": self.run_id, "wall_ms": audit_ms})
         finally:
             audit_pool.shutdown(wait=False, cancel_futures=True)
-        clusters = self._checkpoint(labels, "clusters")
+        clusters, n_clustered = self._stage("clusters", lambda: labels)
 
         self.stage_metrics.append(
-            {"stage": "pipeline", "rows_out": clusters.count(),
+            {"stage": "pipeline", "rows_out": n_clustered,
              "wall_ms": int((time.monotonic() - t_all) * 1000),
              "run_id": self.run_id})
         self._write_metrics()

@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..sources.pages import spread
+
 # ---------------------------------------------------------------------------
 # dup-injected pages: Spark + SQL twins
 # ---------------------------------------------------------------------------
@@ -41,23 +43,6 @@ _DPAGES_SQL = """
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a small-source DataFrame across the cluster before an
-    expensive per-row stage: the catalog's dpages source is 1-3 parquet
-    splits, so signature/shingle stages would otherwise run on 1-3 tasks
-    of a 32-core cluster (measured: the signature UDF pass was the bulk
-    of minhash_lsh_candidates/simhash_* walls on 3 tasks). Conditional on
-    the actual split count — a 100 TB corpus scan already yields tens of
-    thousands of splits and must NOT pay a full-corpus shuffle (same
-    guard as DedupPipeline.signatures; split count comes from parquet
-    footer metadata, no job runs). Row values are per-row deterministic,
-    so partitioning never changes any query's output."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(2 * par)
-    return df
 
 
 def dpages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,7 +252,7 @@ def q_ngram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingling as a set-cardinality query: distinct word-3-gram count per
     page band — exercises split/explode/windowless agg, SQL-portable."""
     toks = (
-        _spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
+        spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
         .select("url", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
         .filter(F.size("w") >= 3)
     )
@@ -339,7 +324,7 @@ def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     two engines; the oracle corpus never does (gate green), and aligning
     the patterns would require editing the frozen oracle SQL text."""
     tri0 = (
-        _spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
+        spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
         .select("url", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
         .filter(F.size("w") >= 3)
         .select(
@@ -926,6 +911,15 @@ def _dpages_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("host", F.parse_url("url", F.lit("HOST")))
 
 
+def _dedup_labels(spark: SparkSession, pages: DataFrame, **cfg) -> DataFrame:
+    """The full pipeline's (url, cluster_id) labels on golden-text pages,
+    fast path (no out_dir, no checkpoints)."""
+    from .pipeline import DedupPipeline, PipelineConfig
+
+    return DedupPipeline(spark, pages, config=PipelineConfig(
+        use_golden_text=True, checkpoints=False, **cfg)).run()
+
+
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH banded candidate pairs over dpages (fuzzy blocking).
     The fuzzy path runs on surrogate long ids; urls are joined back here at
@@ -934,7 +928,7 @@ def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.candidates import candidate_pairs
     from ..operators.signatures import signatures as sig_stage
 
-    sig = sig_stage(_spread(_dpages_as_pages(spark, sf_dir))
+    sig = sig_stage(spread(_dpages_as_pages(spark, sf_dir))
                     ).localCheckpoint(eager=False)
     reps = blocking.exact_representatives(sig)
     blocks = blocking.lsh_blocks(reps)
@@ -959,11 +953,7 @@ def q_inv_exact_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids) must equal (group size, 1) — which is exactly what the DuckDB twin
     computes from first principles. The reference's semantics anchor:
     equality groups ARE clusters (main.rs:616-624)."""
-    from .pipeline import PipelineConfig, dedup_clusters
-
-    out = dedup_clusters(_dpages_as_pages(spark, sf_dir),
-                         PipelineConfig(use_golden_text=True,
-                                        checkpoints=False))
+    out = _dedup_labels(spark, _dpages_as_pages(spark, sf_dir))
     h = _hashed(spark, sf_dir).select("url", "th")
     groups = (h.groupBy("th").agg(F.count("*").alias("_n"))
               .filter(F.col("_n") > 1).select("th"))
@@ -993,11 +983,7 @@ def q_inv_exact_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB asserts both booleans true for every group from first
     principles; a labeling bug (wrong min, propagate join dropping the
     relabel, off-by-one cluster sizing) flips a row."""
-    from .pipeline import PipelineConfig, dedup_clusters
-
-    out = dedup_clusters(_dpages_as_pages(spark, sf_dir),
-                         PipelineConfig(use_golden_text=True,
-                                        checkpoints=False))
+    out = _dedup_labels(spark, _dpages_as_pages(spark, sf_dir))
     h = _hashed(spark, sf_dir).select("url", "th")
     groups = (h.groupBy("th")
               .agg(F.count("*").alias("_gn"), F.min("url").alias("_gmin"))
@@ -1038,7 +1024,7 @@ def q_inv_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.candidates import candidate_pairs
     from ..operators.signatures import signatures as sig_stage
 
-    sig = sig_stage(_spread(_dpages_as_pages(spark, sf_dir))).localCheckpoint()
+    sig = sig_stage(spread(_dpages_as_pages(spark, sf_dir))).localCheckpoint()
     pruned, _ = blocking.prune_blocks(blocking.lsh_blocks(sig))
     urls = sig.select("id", "url")
     cands = (
@@ -1076,15 +1062,11 @@ def q_inv_star_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every page from first principles; any label that star pruning
     changes (a lost boundary pair that transitivity does not recover)
     flips its row."""
-    from .pipeline import PipelineConfig, dedup_clusters
-
     pages = _dpages_as_pages(spark, sf_dir)
-    star = dedup_clusters(pages, PipelineConfig(
-        use_golden_text=True, checkpoints=False)).withColumnsRenamed(
+    star = _dedup_labels(spark, pages).withColumnsRenamed(
         {"cluster_id": "_star"})
-    clique = dedup_clusters(pages, PipelineConfig(
-        use_golden_text=True, checkpoints=False,
-        star_min_block=None)).withColumnsRenamed({"cluster_id": "_clique"})
+    clique = _dedup_labels(spark, pages, star_min_block=None
+                           ).withColumnsRenamed({"cluster_id": "_clique"})
     urls = dpages(spark, sf_dir).filter(F.col("text").isNotNull()).select("url")
     return (
         urls.join(star, "url", "left").join(clique, "url", "left")
@@ -1105,7 +1087,7 @@ def q_inv_simhash_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     count is 1."""
     from ..functions.udfs import signatures_udf
 
-    d = _spread(_hashed(spark, sf_dir)).withColumn(
+    d = spread(_hashed(spark, sf_dir)).withColumn(
         "simhash", signatures_udf(F.col("text")).getField("simhash"))
     return (
         d.groupBy("th")
@@ -1401,7 +1383,7 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-64 per distinct text (rows-only; pinned by unit vectors)."""
     from ..functions.udfs import signatures_udf
 
-    d = _spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
+    d = spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
     return d.withColumn("sig", signatures_udf(F.col("text"))).select(
         "url", F.col("sig.simhash").alias("simhash")
     )
@@ -1502,7 +1484,7 @@ def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no checkpoint: _simhash_band_pairs consumes sig exactly once (the
     # groupBy); persisting the UDF output here bought nothing and cost the
     # block-manager write (inv_simhash_recall, with TWO consumers, keeps it)
-    sig = (_spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
+    sig = (spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
            .withColumn("sig", signatures_udf(F.col("text")))
            .select("url", F.col("sig.simhash").alias("simhash")))
     return _simhash_band_pairs(sig, SIMHASH_DUP_HAMMING)
@@ -1516,7 +1498,7 @@ def q_inv_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     all exact pairs; equality <=> recall 1 on the exact tier."""
     from ..functions.udfs import signatures_udf
 
-    h = _spread(_hashed(spark, sf_dir))
+    h = spread(_hashed(spark, sf_dir))
     sig = (h.withColumn("sig", signatures_udf(F.col("text")))
            .select("url", "th", F.col("sig.simhash").alias("simhash"))
            .localCheckpoint(eager=False))

@@ -28,7 +28,9 @@ def read_labeled_pairs(spark: SparkSession, pages_dir: str) -> DataFrame:
 
 def clean_pages(df: DataFrame, exclude_hosts: list[str] | None = None) -> DataFrame:
     """Source-side predicates, all Catalyst-pushable (S2/S3/S4/S5 analogs):
-    drop blank/malformed urls, excluded hosts, null html; lowercase lang."""
+    drop blank/malformed urls and excluded hosts; lowercase lang; (re)derive
+    host. Null-html rows pass through: they extract to null text, which
+    `signatures` drops."""
     host = F.parse_url(F.col("url"), F.lit("HOST"))
     out = (
         df.filter(F.col("url").isNotNull() & (F.length("url") > 0))
@@ -39,3 +41,19 @@ def clean_pages(df: DataFrame, exclude_hosts: list[str] | None = None) -> DataFr
     if exclude_hosts:
         out = out.filter(~F.col("host").isin(exclude_hosts))
     return out
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Spread an under-parallel source across the cluster before an
+    expensive per-row stage (extraction, signature and shingle UDFs): the
+    synthetic pages table and the catalog's dpages source are 1-3 parquet
+    splits, so those stages would otherwise run on 1-3 tasks. Conditional
+    on the actual split count: a real corpus scan already yields tens of
+    thousands of splits and must NOT pay a full-corpus shuffle (html
+    included). The split count is parquet footer metadata, so the check
+    runs no job. Row values are per-row deterministic, so partitioning
+    never changes an output."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < 2 * par:
+        return df.repartition(2 * par)
+    return df

@@ -253,13 +253,6 @@ class TestMultimodal:
         assert (out.loc["h", "width"], out.loc["h", "height"]) == (1920, 1080)
         assert out.loc["h", "n_bytes"] == len(self.HEIC)
 
-    def test_dedupe_by_content_hash(self, spark):
-        rows = [("a", b"xxx1"), ("b", b"xxx1"), ("c", b"yyy2"), ("d", b"xxx1")]
-        df = spark.createDataFrame(rows, "url string, content binary")
-        out = multimodal.dedupe_by_content_hash(df).toPandas()
-        assert set(out["content_id"]) == {"a", "b", "d"}
-        assert set(out["cluster_id"]) == {"a"}
-
 
 class TestTextOps:
     def test_quality_columns(self, spark):

@@ -49,6 +49,20 @@ def test_extraction_parity_python_vs_spark(spark, tiny_pages_dir):
         assert extract_text(raw) == expect
 
 
+def _exact_url_edges(sig):
+    """The production exact tier (blocking.exact_group_map) as url star
+    edges root -> member: the rows with id != root_id, urls from sig."""
+    urls = sig.select("id", "url")
+    return (
+        blocking.exact_group_map(sig)
+        .filter(F.col("id") != F.col("root_id"))
+        .join(urls.withColumnsRenamed({"id": "root_id", "url": "src"}),
+              "root_id")
+        .join(urls.withColumnRenamed("url", "dst"), "id")
+        .select("src", "dst")
+    )
+
+
 # ---------------------------------------------------------------- oracle
 def test_exact_clusters_match_bruteforce(spark, sig):
     """Equality-grouping == full O(n^2) pairwise equality (the transitivity
@@ -61,7 +75,7 @@ def test_exact_clusters_match_bruteforce(spark, sig):
         tuple(sorted(v)) for v in by_hash.values() if len(v) > 1
     )
     got = (
-        blocking.exact_edges(sig)
+        _exact_url_edges(sig)
         .groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("members"))
         .toPandas()
@@ -98,7 +112,7 @@ def test_f1_on_labeled_pairs(spark, tiny_pages_dir, clusters):
 # -------------------------------------------------------------- properties
 def test_partition_invariance(spark, sig):
     """Same clusters under different partitioning (FIXTURES.md §5.2.4)."""
-    edges = blocking.exact_edges(sig)
+    edges = _exact_url_edges(sig)
     c2 = cluster.connected_components(edges.repartition(2))
     c32 = cluster.connected_components(edges.repartition(32))
     assert c2.exceptAll(c32).count() == 0 and c32.exceptAll(c2).count() == 0
@@ -479,6 +493,41 @@ def test_fast_path_equals_checkpointed(spark, tiny_pages_dir):
                          config=PipelineConfig(checkpoints=False)).run()
     assert slow.exceptAll(fast).count() == 0
     assert fast.exceptAll(slow).count() == 0
+
+
+def test_dataframe_source_equals_dir_source(spark, tiny_pages_dir):
+    """An already-built pages DataFrame runs the same clean -> spread ->
+    extract composition as the pages dir it was read from."""
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    fast = PipelineConfig(checkpoints=False)
+    from_dir = DedupPipeline(spark, tiny_pages_dir, config=fast).run()
+    from_df = DedupPipeline(spark, read_pages(spark, tiny_pages_dir),
+                            config=fast).run()
+    assert from_dir.count() > 0
+    assert from_dir.exceptAll(from_df).count() == 0
+    assert from_df.exceptAll(from_dir).count() == 0
+
+
+def test_stage_rows_out_equal_counts(spark, tiny_pages_dir, tmp_path):
+    """rows_out of the materialized stages equals a count() of the stage
+    output, on the fast path and the checkpointed path alike; the parquet
+    checkpoints of an out_dir run are the reference outputs."""
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    ref = DedupPipeline(spark, tiny_pages_dir, out_dir=str(tmp_path),
+                        run_id="ROWS")
+    expect = {"pipeline": ref.run().count()}
+    for stage in ("signatures", "candidates", "clusters"):
+        expect[stage] = spark.read.parquet(ref._ckpt_path(stage)).count()
+    assert expect["clusters"] == expect["pipeline"] > 0
+    for checkpoints in (False, True):
+        pipe = DedupPipeline(spark, tiny_pages_dir,
+                             config=PipelineConfig(checkpoints=checkpoints))
+        assert pipe.run().count() == expect["pipeline"]
+        got = {m["stage"]: m["rows_out"] for m in pipe.stage_metrics
+               if m["stage"] in expect}
+        assert got == expect, checkpoints
 
 
 def test_write_report_golden_shape(spark, tiny_pages_dir, tmp_path):
