@@ -6,6 +6,8 @@ Stage graph (SURVEY.md §3.3):
     -> exact collapse -> lsh blocks -> candidate pairs + estimates [stage]
     -> scores [stage] -> connected components -> propagate -> clusters [stage]
     -> metrics [append]
+Everything between signatures and clusters is the clusters stage's build
+(`DedupPipeline._labels`), so a resumed clusters stage skips all of it.
 
 Every [stage] goes through `DedupPipeline._stage`, whose materialization
 policy depends only on `out_dir` and `PipelineConfig.checkpoints`:
@@ -165,28 +167,33 @@ class DedupPipeline:
         """Materialize one stage by the module docstring's policy, record
         its metrics row, and return (output, rows_out). `build` is called
         only when there is no checkpoint to resume from, so a resumed
-        signatures stage never plans the extract. A `fuse` stage on the
-        fast path is returned lazy, with rows_out -1.
+        signatures stage never plans the extract and a resumed clusters
+        stage runs nothing downstream of signatures. wall_ms times the
+        materialization only, not `build` (which may run stages of its
+        own). A `fuse` stage on the fast path is returned lazy, with
+        rows_out -1.
 
         localCheckpoint rows are counted by an Observation that rides the
         materializing job (no second count() job); like cluster.py's, it
         may over-count under task retries, which can only switch on the
         attach pre-filter (a pure filter). The parquet branch's read-back
         count() doubles as the resume count."""
-        self.spark.sparkContext.setJobDescription(f"stage:{name}")
         path = self._ckpt_path(name)
         if path is None and fuse and not self.cfg.checkpoints:
             return build(), -1
-        t0 = time.monotonic()
         resumed = bool(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
+        df = None if resumed else build()
+        # after build(): a build may run stages of its own
+        self.spark.sparkContext.setJobDescription(f"stage:{name}")
+        t0 = time.monotonic()
         if path is None:
             obs = Observation(f"rows_{name}")
-            out = (build().observe(obs, F.count(F.lit(1)).alias("n"))
+            out = (df.observe(obs, F.count(F.lit(1)).alias("n"))
                    .localCheckpoint())
             n = int(obs.get["n"])
         else:
             if not resumed:
-                build().write.mode("overwrite").parquet(path)
+                df.write.mode("overwrite").parquet(path)
             out = self.spark.read.parquet(path)
             n = out.count()
         self.stage_metrics.append(
@@ -207,21 +214,39 @@ class DedupPipeline:
     def run(self) -> DataFrame:
         """Full pipeline; returns clusters(url, cluster_id), clustered rows only."""
         t_all = time.monotonic()
-        cfg = self.cfg
         sig, n_sig = self._stage("signatures", self._signatures)
-
-        if cfg.checkpoints:
+        if self.cfg.checkpoints:
             # per-partition lineage for the extract stage (north rule): rows
             # per partition + drop accounting, written into metrics
             self._partition_lineage(sig, "signatures")
+        # everything downstream of signatures is the clusters stage's
+        # build, so a rerun that resumes clusters runs none of it
+        clusters, n_clustered = self._stage(
+            "clusters", lambda: self._labels(sig, n_sig))
+
+        self.stage_metrics.append(
+            {"stage": "pipeline", "rows_out": n_clustered,
+             "wall_ms": int((time.monotonic() - t_all) * 1000),
+             "run_id": self.run_id})
+        self._write_metrics()
+        return clusters
+
+    def _labels(self, sig: DataFrame, n_sig: int) -> DataFrame:
+        """signatures -> (url, cluster_id) labels: exact collapse, blocking,
+        the candidates and scores stages, connected components and
+        propagation, gated on the surrogate-id audit."""
+        cfg = self.cfg
         # surrogate-id collision audit — UNCONDITIONAL (fast path included):
         # a collision would silently merge clusters, so every run is gated
         # on it, matching the signatures.py docstring claim. The audit job
         # is submitted from a driver THREAD (guide §2.6 — concurrent jobs
         # back-fill executors) so its wall overlaps the blocking/candidates
         # stages instead of adding a serial barrier; the future is resolved
-        # (raising on any collision) BEFORE clusters are materialized, so
-        # no corrupt result can ever be observed.
+        # (raising on any collision) before this returns, i.e. BEFORE
+        # clusters are materialized, so no corrupt result can ever be
+        # observed. A rerun that resumes clusters skips the audit: that
+        # stage's _SUCCESS is written only after its own run's audit
+        # resolved.
         from concurrent.futures import ThreadPoolExecutor
 
         def _audit() -> tuple[int, int]:
@@ -289,22 +314,15 @@ class DedupPipeline:
                 {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
                  "run_id": self.run_id,
                  "wall_ms": int((time.monotonic() - t0) * 1000)})
-            # gate on the concurrent id audit BEFORE materializing output;
-            # wall_ms is the audit's own span (overlapped)
+            # gate on the concurrent id audit; wall_ms is the audit's own
+            # span (overlapped)
             n_bad_ids, audit_ms = audit_future.result()
             self.stage_metrics.append(
                 {"stage": "id_audit", "rows_out": n_bad_ids,
                  "run_id": self.run_id, "wall_ms": audit_ms})
         finally:
             audit_pool.shutdown(wait=False, cancel_futures=True)
-        clusters, n_clustered = self._stage("clusters", lambda: labels)
-
-        self.stage_metrics.append(
-            {"stage": "pipeline", "rows_out": n_clustered,
-             "wall_ms": int((time.monotonic() - t_all) * 1000),
-             "run_id": self.run_id})
-        self._write_metrics()
-        return clusters
+        return labels
 
     def write_report(self, clusters: DataFrame,
                      max_inline_groups: int = 1000) -> dict:

@@ -1196,29 +1196,15 @@ def q_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_cosine_topk(emb, probes, k=5, bits=4, n_tables=8)
 
 
-def q_inv_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HARD ORACLE for bucketed ANN top-k (tie-proof): for each probe,
-    count how many of the LSH top-k picks have cosine >= the brute-force
-    k-th cosine. Float ties make "same neighbor ids" engine-fragile, but
-    "every pick is at least as close as the true k-th neighbor" is exact —
-    and the DuckDB twin recomputes the k-th cosine from first principles,
-    so both the threshold value AND the count (= k iff LSH top-k is
-    rank-equivalent to brute force) are checked. Covers the two rows-only
-    top-k entries (ann_cosine_topk / lsh_cosine_topk)."""
+def _kth_recall(emb: DataFrame, probes: DataFrame, picks: DataFrame,
+                k: int) -> DataFrame:
+    """(probe_id, k, kth_cosine, n_in_topk): per probe, the brute-force
+    k-th cosine over `emb` and how many of its top-k `picks`
+    (probe_id, neighbor_id) reach it — the tie-proof recall check shared
+    by inv_ann_recall and inv_ivf_recall."""
     from pyspark.sql import Window
 
-    from ..operators.ann import _dot, _norm, lsh_cosine_topk
-
-    k = 5
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    probes = emb.filter(F.col("vec_id") < 10)
-    # amplification sized for top-k recall 1: the k-th neighbor sits at
-    # cosine ~0.26-0.35 here, where a 4-bit table collides w.p. ~0.12 —
-    # 64 tables drive the per-neighbor miss rate to ~3e-4 (same table
-    # count the oracled lsh_emb_dups pairs path uses). The 8-table catalog
-    # entry (lsh_cosine_topk) stays as the cheap operating point.
-    picks = lsh_cosine_topk(emb, probes, k=k, bits=4, n_tables=64).select(
-        "probe_id", "neighbor_id")
+    from ..operators.ann import _dot, _norm
 
     # cosine at round-4 (engine-portable float contract, like emb_cosine_dups)
     pv = probes.select(F.col("vec_id").alias("probe_id"),
@@ -1247,6 +1233,31 @@ def q_inv_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("probe_id", F.lit(k).cast("long").alias("k"),
                 "kth_cosine", F.col("n_in_topk").cast("long"))
     )
+
+
+def q_inv_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HARD ORACLE for bucketed ANN top-k (tie-proof): for each probe,
+    count how many of the LSH top-k picks have cosine >= the brute-force
+    k-th cosine. Float ties make "same neighbor ids" engine-fragile, but
+    "every pick is at least as close as the true k-th neighbor" is exact —
+    and the DuckDB twin recomputes the k-th cosine from first principles,
+    so both the threshold value AND the count (= k iff LSH top-k is
+    rank-equivalent to brute force) are checked. Covers the two rows-only
+    top-k entries (ann_cosine_topk / lsh_cosine_topk)."""
+    from ..operators.ann import lsh_cosine_topk
+
+    k = 5
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    probes = emb.filter(F.col("vec_id") < 10)
+    # amplification sized for top-k recall 1: the k-th neighbor sits at
+    # cosine ~0.26-0.35 here, where a 4-bit table collides w.p. ~0.12 —
+    # 64 tables drive the per-neighbor miss rate to ~3e-4 (same table
+    # count the oracled lsh_emb_dups pairs path uses). The 8-table catalog
+    # entry (lsh_cosine_topk) stays as the cheap operating point.
+    picks = lsh_cosine_topk(emb, probes, k=k, bits=4, n_tables=64).select(
+        "probe_id", "neighbor_id")
+
+    return _kth_recall(emb, probes, picks, k)
 
 
 _SQL_COS4 = """round(list_sum(list_transform(list_zip(p.embedding, e.embedding),
@@ -1342,9 +1353,7 @@ def q_inv_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the k-th cosine from first principles). A bug anywhere in
     cell assignment / probe-cell ranking / the cell join (a dropped or
     double-counted cell) breaks the equality."""
-    from pyspark.sql import Window
-
-    from ..operators.ann import _dot, _norm, ivf_cosine_topk
+    from ..operators.ann import ivf_cosine_topk
 
     k = 5
     emb, cents = _ivf_centroids(spark, sf_dir)
@@ -1353,30 +1362,7 @@ def q_inv_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                             n_probe=len(cents)).select(
         "probe_id", "neighbor_id")
 
-    pv = probes.select(F.col("vec_id").alias("probe_id"),
-                       F.col("embedding").alias("pv"))
-    cv = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("cv"))
-    cos4 = F.round(_dot(F.col("pv"), F.col("cv"))
-                   / (_norm(F.col("pv")) * _norm(F.col("cv"))), 4)
-    scored = (cv.join(F.broadcast(pv),
-                      F.col("probe_id") != F.col("neighbor_id"))
-              .withColumn("cosine", cos4))
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id"))
-    kth = (scored.withColumn("rk", F.row_number().over(w))
-           .filter(F.col("rk") == k)
-           .select("probe_id", F.col("cosine").alias("kth_cosine")))
-    pick_cos = (picks.join(cv, "neighbor_id").join(F.broadcast(pv), "probe_id")
-                .withColumn("cosine", cos4))
-    return (
-        pick_cos.join(kth, "probe_id")
-        .groupBy("probe_id", "kth_cosine")
-        .agg(F.sum(F.when(F.col("cosine") >= F.col("kth_cosine"), 1)
-                   .otherwise(0)).alias("n_in_topk"))
-        .select("probe_id", F.lit(k).cast("long").alias("k"),
-                "kth_cosine", F.col("n_in_topk").cast("long"))
-    )
+    return _kth_recall(emb, probes, picks, k)
 
 
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,63 +8,60 @@ seen-signature state.
 Design: Structured Streaming file source -> foreachBatch. Each micro-batch
   1. extracts + signs the new pages (same UDFs as batch — identical
      semantics by construction),
-  2. joins the batch's text_sha256 against the persistent signature state
-     (parquet dir; Iceberg table on a real cluster) to emit match edges
-     (new_url -> first seen url with identical text),
-  3. [fuzzy=True] additionally joins the batch's LSH band keys against
-     the state's band keys and scores the candidate pairs with the SAME
-     estimate-split decision as the batch pipeline (MinHash-Jaccard fast
-     path; exact-refinement scorer UDF in the decision band) — near-dup
+  2. joins the batch's text_sha256 against the signature state to emit
+     match edges (new_url -> first seen url with identical text),
+  3. [fuzzy=True] joins the LSH band keys of the batch's not-exactly-seen
+     pages against the band index and scores the candidate pairs with the
+     batch pipeline's own scorer (scoring.score_candidates) — near-dup
      matches against anything already seen, not just byte-identical,
-  4. writes the batch signatures into the state.
-foreachBatch (not a stateful operator) because the state table must be
-shared with the batch pipeline and survive restarts.
+  4. writes the batch into the state.
+foreachBatch (not a stateful operator) because the state must be shared
+with the batch pipeline and survive restarts.
 
-Fuzzy-tier scale shape (round 6 — the formerly documented-only design,
-implemented): the state never shuffles — the (small) batch's band
-stream is broadcast and the state's band INDEX streams past it. Bands
-are stored exploded as (block_key, id) rows hash-partitioned by
-pmod(block_key, BAND_INDEX_PARTS); each batch reads only the partitions
-its own keys touch (path-level pruning, inputFiles-asserted in tests)
-and the join carries 8-byte surrogate ids — text joins in only for
-decision-band refinement inside the shared scorer. Candidate pairs
-(not the corpus) carry minhash/text into scoring. Like the exact tier,
-fuzzy matches are found against PRE-batch state only (within-batch
-pairs surface when either url recurs, or through the batch pipeline
-over the full corpus).
+State: one layer abstraction, two tables. A `Layer` names a table's
+per-batch subdir, its snapshot subdir and its partition column:
+  SIG_LAYER   batches/batch_id=N/sha_prefix=H/   compacted/upto=K/sha_prefix=H/
+  BAND_LAYER  bands/batch_id=N/bk_mod=M/         bands_compacted/upto=K/bk_mod=M/
+The signature table holds SIG_STATE_COLS (FUZZY_STATE_COLS for fuzzy
+streams: the signatures table the batch pipeline checkpoints; a state dir
+belongs to one mode). The band index (fuzzy only) holds (block_key, id)
+rows — blocking.lsh_blocks keys, id = xxhash64(url) — partitioned by
+pmod(block_key, BAND_INDEX_PARTS). `_read_layer` reads either table as
+"newest upto= snapshot + batch_id= dirs below the current batch", and
+`_compact` folds either one. The band read lists only the bk_mod dirs the
+batch's own keys touch (path-level pruning, inputFiles-asserted in tests)
+and joins 8-byte ids; the (small) batch's keys are broadcast so the state
+never shuffles. Like the exact tier, fuzzy matches are found against
+PRE-batch state only (within-batch pairs surface when either url recurs,
+or through the batch pipeline over the full corpus).
 
-Delivery semantics: both sinks are written as `batch_id=N` partition
-directories with mode("overwrite") scoped to that directory — a micro-batch
-retried after a partial failure REWRITES its own partition instead of
-appending duplicates, so the sink contents are idempotent per batch
-(effectively exactly-once at the directory level). A plain append here
-would be at-least-once: retries double match rows and double-count state.
-The match join reads state STRICTLY OLDER than the current batch
-(batch_id < N): a retry of batch N must not see its own failed attempt's
-partial state, or min(url) could resolve inside the batch and the retry
-would emit different matches than a clean first run.
+Delivery semantics: every sink is written as a `batch_id=N` directory with
+mode("overwrite") scoped to that directory — a micro-batch retried after a
+partial failure REWRITES its own dirs instead of appending duplicates, so
+the sinks are idempotent per batch (effectively exactly-once at the
+directory level). State reads take only batch_id < N: a retry of batch N
+must not see its own failed attempt's partial state, or min(url) could
+resolve inside the batch and the retry would emit different matches than
+a clean first run.
 
-State layout:
-  state_dir/batches/batch_id=N/sha_prefix=H/   fresh per-batch state
-  state_dir/compacted/upto=K/sha_prefix=H/     folded batches 0..K
-Every `compact_every` batches, process_batch folds all committed batch
-dirs (< current batch) plus the previous compacted snapshot into a new
-`upto=` snapshot and deletes what it folded — state reads stay O(state),
-not O(batches). Readers take ONLY the max `upto=` snapshot, so a crash
-between writing a new snapshot and deleting the old one never
-double-counts (and duplicates would be harmless anyway: the match join
-aggregates min(url) per sha). sha_prefix partitioning (16 shards) lets
-prefix-restricted reads prune to 1/16 of the files (asserted in
-tests/test_streaming.py).
+Compaction: every `compact_every` batches, process_batch folds each
+table's committed batch dirs (< current batch) plus its previous snapshot
+into a new `upto=` snapshot and deletes what it folded — state reads stay
+O(state), not O(batches). Readers take ONLY the max `upto=` snapshot, so a
+crash between writing a new snapshot and deleting the old one never
+double-counts, and the next fold drops the crash duplicates.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.blocking import lsh_blocks
 from ..operators.signatures import extract, signatures
 from ..schemas import PAGES
 from ..sources.pages import clean_pages
@@ -75,19 +72,23 @@ SIG_STATE_COLS = ["url", "host", "lang", "text_sha256", "n_chars"]
 # decision band) — i.e. the state IS the signatures table, exactly what
 # the batch pipeline checkpoints
 FUZZY_STATE_COLS = SIG_STATE_COLS + ["bands", "minhash", "text"]
+BAND_COLS = ["block_key", "id"]
 DEFAULT_COMPACT_EVERY = 8
 
-# fuzzy band INDEX (round 6 — the formerly documented-only 10^12 design):
-# state bands are stored EXPLODED as (block_key long, id long) rows,
-# hash-partitioned into BAND_INDEX_PARTS dirs by pmod(block_key, P). The
-# per-batch band join reads ONLY the partitions the batch's own keys
-# touch (path-level pruning, asserted by inputFiles in
-# tests/test_streaming.py) and carries 8-byte surrogate ids — never text
-# or url payloads; matched ids join back to the signature state for
-# scoring, and text is attached only inside the decision band
-# (scoring.score_estimated's slow path). P is a layout constant: changing
-# it requires reindexing (compaction rewrites everything anyway).
+# band index partitions: each batch reads only the pmod(block_key, P) dirs
+# its own keys touch. P is a layout constant: changing it requires
+# reindexing (compaction rewrites everything anyway).
 BAND_INDEX_PARTS = 64
+
+
+class Layer(NamedTuple):
+    batches: str    # per-batch dirs: <batches>/batch_id=N/<part>=V/
+    snapshots: str  # folded dirs: <snapshots>/upto=K/<part>=V/
+    part: str       # partition column of both
+
+
+SIG_LAYER = Layer("batches", "compacted", "sha_prefix")
+BAND_LAYER = Layer("bands", "bands_compacted", "bk_mod")
 
 
 def posix_lister(path: str) -> list[str]:
@@ -150,204 +151,115 @@ def _compacted_uptos(state_dir: str, lister=posix_lister,
                   if f.startswith("upto="))
 
 
-def _state(spark: SparkSession, state_dir: str,
-           before_batch: int | None = None,
-           lister=posix_lister,
-           cols: list[str] = SIG_STATE_COLS) -> DataFrame | None:
-    """Accumulated signature state: newest compacted snapshot + batch dirs.
-    before_batch=N excludes state written by batch N or later — the
-    retry-safety contract (a snapshot only ever folds batches < any live
-    batch, so snapshots never need the filter). `cols` selects the stored
-    state schema (SIG_STATE_COLS for exact-only streams, FUZZY_STATE_COLS
-    for fuzzy ones — a state dir belongs to one mode, set at stream
-    start)."""
-    parts: list[DataFrame] = []
-    uptos = _compacted_uptos(state_dir, lister)
-    if uptos:
-        parts.append(
-            spark.read.parquet(
-                os.path.join(state_dir, "compacted", f"upto={uptos[-1]}")
-            ).select(*cols, "sha_prefix")
-        )
-    bids = [b for b in _batch_ids(state_dir, lister)
-            if before_batch is None or b < before_batch]
-    if bids:
-        bdir = os.path.join(state_dir, "batches")
-        parts.append(
-            spark.read.option("basePath", bdir).parquet(
-                *[os.path.join(bdir, f"batch_id={b}") for b in bids]
-            ).select(*cols, "sha_prefix")
-        )
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _band_sig_index(sig: DataFrame) -> DataFrame:
-    """(bk_mod, block_key, id) band-index rows for a signature batch —
-    id = xxhash64(url), the batch pipeline's surrogate key discipline."""
-    return (
-        sig.select(F.xxhash64("url").alias("id"),
-                   F.posexplode("bands").alias("_b", "_h"))
-        .select(F.xxhash64("_b", "_h").alias("block_key"), "id")
-        .withColumn("bk_mod", F.pmod("block_key", F.lit(BAND_INDEX_PARTS)))
-    )
-
-
-def _band_index(spark: SparkSession, state_dir: str,
-                before_batch: int | None = None,
+def _read_layer(spark: SparkSession, state_dir: str, layer: Layer,
+                cols: list[str], before_batch: int | None = None,
                 lister=posix_lister,
-                mods: list[int] | None = None) -> DataFrame | None:
-    """Accumulated band index (block_key, id), pruned at the PATH level to
-    the bk_mod partitions in `mods` (None = all): only the touched 1/P of
-    the index files are ever listed into the scan — the O(state)-per-batch
-    band scan becomes O(state * touched/P). Same snapshot+batches layout
-    and retry contract as _state."""
-    def _mod_paths(base: str) -> list[str]:
-        subs = [f for f in lister(base) if f.startswith("bk_mod=")]
-        if mods is not None:
-            want = {f"bk_mod={m}" for m in mods}
-            subs = [f for f in subs if f in want]
-        return [os.path.join(base, f) for f in subs]
-
-    parts: list[DataFrame] = []
-    uptos = _compacted_uptos(state_dir, lister,
-                             subdir="bands_compacted")
-    if uptos:
-        base = os.path.join(state_dir, "bands_compacted", f"upto={uptos[-1]}")
-        paths = _mod_paths(base)
-        if paths:
-            parts.append(spark.read.option("basePath", base).parquet(*paths)
-                         .select("block_key", "id"))
-    bids = [b for b in _batch_ids(state_dir, lister, subdir="bands")
+                parts: list[int] | None = None) -> DataFrame | None:
+    """One state table: its newest compacted snapshot + its batch dirs,
+    `cols` selected (partition columns included), None when nothing is
+    stored. before_batch=N excludes state written by batch N or later —
+    the retry-safety contract (a snapshot only ever folds batches < any
+    live batch, so snapshots never need the filter). `parts` prunes at the
+    PATH level to those values of the layer's partition column: only
+    their dirs are listed into the scan."""
+    uptos = _compacted_uptos(state_dir, lister, layer.snapshots)
+    bids = [b for b in _batch_ids(state_dir, lister, layer.batches)
             if before_batch is None or b < before_batch]
-    for b in bids:
-        base = os.path.join(state_dir, "bands", f"batch_id={b}")
-        paths = _mod_paths(base)
+    want = None if parts is None else {f"{layer.part}={p}" for p in parts}
+    frames = []
+    for sub, dirs in ((layer.snapshots, [f"upto={u}" for u in uptos[-1:]]),
+                      (layer.batches, [f"batch_id={b}" for b in bids])):
+        root = os.path.join(state_dir, sub)
+        paths = [os.path.join(root, d) for d in dirs]
+        if want is not None:
+            paths = [os.path.join(d, f) for d in paths
+                     for f in lister(d) if f in want]
         if paths:
-            parts.append(spark.read.option("basePath", base).parquet(*paths)
-                         .select("block_key", "id"))
-    if not parts:
-        return None
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            # partition values come back type-inferred: a snapshot whose
+            # sha_prefix dirs are all digits would read as bigint and fail
+            # the union/join with 'a'..'f' prefixes, so keep them strings
+            frames.append(spark.read.option("basePath", root)
+                          .parquet(*paths)
+                          .withColumn(layer.part,
+                                      F.col(layer.part).cast("string"))
+                          .select(*cols))
+    return reduce(DataFrame.unionByName, frames) if frames else None
 
 
-def _compact_bands(spark: SparkSession, state_dir: str, current_batch: int,
-                   lister=posix_lister, remover=posix_remover) -> None:
-    """Fold committed band-index batch dirs + the previous snapshot into
-    bands_compacted/upto=<current_batch-1> — the index twin of _compact
-    (crash dups are full-row identical; harmless for candidates, deduped
-    for size)."""
-    bids = [b for b in _batch_ids(state_dir, lister, subdir="bands")
+def _compact(spark: SparkSession, state_dir: str, layer: Layer,
+             cols: list[str], current_batch: int,
+             lister=posix_lister, remover=posix_remover) -> None:
+    """Fold one table's committed batch dirs (< current_batch) + its
+    previous snapshot into <snapshots>/upto=<current_batch-1>, then delete
+    what was folded. Idempotent: a retried fold overwrites the same upto
+    dir; readers use the MAX upto snapshot so stragglers are ignored until
+    removed. Self-heal: if a previous fold crashed after writing its
+    snapshot but before deleting the folded batch dirs, this fold reads
+    both; crash duplicates are FULL-ROW identical, so they are dropped on
+    the complete row (a url re-crawled with different text keeps both
+    rows, and future matches against either text stay correct)."""
+    bids = [b for b in _batch_ids(state_dir, lister, layer.batches)
             if b < current_batch]
     if not bids:
         return
-    folded = _band_index(spark, state_dir, before_batch=current_batch,
-                         lister=lister)
-    folded = (folded.dropDuplicates(["block_key", "id"])
-              .withColumn("bk_mod",
-                          F.pmod("block_key", F.lit(BAND_INDEX_PARTS))))
     upto = current_batch - 1
-    target = os.path.join(state_dir, "bands_compacted", f"upto={upto}")
-    folded.write.partitionBy("bk_mod").mode("overwrite").parquet(target)
+    (_read_layer(spark, state_dir, layer, cols + [layer.part],
+                 current_batch, lister)
+     .dropDuplicates(cols)
+     .write.partitionBy(layer.part).mode("overwrite")
+     .parquet(os.path.join(state_dir, layer.snapshots, f"upto={upto}")))
     for b in bids:
-        remover(os.path.join(state_dir, "bands", f"batch_id={b}"))
-    for u in _compacted_uptos(state_dir, lister, subdir="bands_compacted"):
+        remover(os.path.join(state_dir, layer.batches, f"batch_id={b}"))
+    for u in _compacted_uptos(state_dir, lister, layer.snapshots):
         if u != upto:
-            remover(os.path.join(state_dir, "bands_compacted", f"upto={u}"))
+            remover(os.path.join(state_dir, layer.snapshots, f"upto={u}"))
 
 
-def _compact(spark: SparkSession, state_dir: str, current_batch: int,
-             lister=posix_lister, remover=posix_remover,
-             cols: list[str] = SIG_STATE_COLS) -> None:
-    """Fold committed batch dirs (< current_batch) + the previous snapshot
-    into compacted/upto=<current_batch-1>, then delete what was folded.
-    Idempotent: a retried fold overwrites the same upto dir; readers use
-    the MAX upto snapshot so stragglers are ignored until removed."""
-    bids = [b for b in _batch_ids(state_dir, lister) if b < current_batch]
-    if not bids:
-        return
-    folded = _state(spark, state_dir, before_batch=current_batch,
-                    lister=lister, cols=cols)
-    # self-heal: if a previous fold crashed after writing its snapshot but
-    # before deleting the folded batch dirs, the next fold reads both.
-    # Crash duplicates are FULL-ROW identical (the same batch rows read
-    # twice), so dedup on the complete state tuple: a url legitimately
-    # re-crawled with different text keeps both (url, text_sha256) rows
-    # and future matches against either text stay correct.
-    folded = folded.dropDuplicates(SIG_STATE_COLS)
-    upto = current_batch - 1
-    target = os.path.join(state_dir, "compacted", f"upto={upto}")
-    folded.write.partitionBy("sha_prefix").mode("overwrite").parquet(target)
-    for b in bids:
-        remover(os.path.join(state_dir, "batches", f"batch_id={b}"))
-    for u in _compacted_uptos(state_dir, lister):
-        if u != upto:
-            remover(os.path.join(state_dir, "compacted", f"upto={u}"))
+def _band_sig_index(sig: DataFrame) -> DataFrame:
+    """(block_key, id, bk_mod) band-index rows for a signature batch:
+    blocking.lsh_blocks keys, id = xxhash64(url) — the batch pipeline's
+    surrogate key discipline."""
+    return (lsh_blocks(sig.select(F.xxhash64("url").alias("id"), "bands"))
+            .withColumn("bk_mod", F.pmod("block_key", F.lit(BAND_INDEX_PARTS))))
 
 
-def _fuzzy_matches(sig: DataFrame, prev: DataFrame,
-                   lev_match: float, jaccard_match: float,
-                   idx: DataFrame | None = None) -> DataFrame:
+def _fuzzy_matches(sig: DataFrame, prev: DataFrame, idx: DataFrame,
+                   lev_match: float, jaccard_match: float) -> DataFrame:
     """Near-dup matches of the batch against pre-batch state:
     (url, matched_url, score) — the best-scoring state match per new url,
     deterministic (ties break to the lexicographically smallest url).
 
-    Candidate generation mirrors the batch pipeline's banding: LSH
-    band-key equi-join, batch band stream broadcast so the state (index)
-    streams past it. When `idx` is given (the band-key-partitioned
-    (block_key, id) index, pruned to the batch's touched partitions by
-    the caller) the join carries 8-byte ids only and matched ids join
-    back to `prev` for urls; without it (index not yet built for a
-    pre-existing state dir) the bands are exploded from `prev` directly.
+    Candidate generation is the batch pipeline's banding: the batch's
+    blocking.lsh_blocks keys are broadcast and equi-joined against `idx`,
+    the (block_key, id) band index already pruned to the batch's touched
+    partitions by the caller, so the join carries 8-byte ids only and
+    matched ids join back to `prev` for urls.
     A url is NEVER a fuzzy match of itself: a re-crawled url whose text
     drifted is excluded here by the url != matched_url filter (its
     batch and state rows stay distinct via the n:/o: namespaces below)
     — version-drift detection would be a different `kind`, not a match.
     The DECISION is not mirrored but REUSED — candidate pairs
-    are fed through scoring.attach_estimates + score_estimated over a
-    two-namespace url-keyed signature table ("n:"/"o:" prefixes keep a
-    re-crawled url's batch row distinct from its state row), so the
-    estimate fast path, refinement band, and lev-OR-jaccard rule are the
-    batch pipeline's own code, not a copy that could drift. Pair-side
-    joins inside the shared code resolve to broadcasts at runtime via
-    AQE (candidates are micro-batch-sized; session.py enables AQE)."""
+    are fed through scoring.score_candidates over a two-namespace
+    url-keyed signature table ("n:"/"o:" prefixes keep a re-crawled url's
+    batch row distinct from its state row), so the estimate fast path,
+    refinement band, and lev-OR-jaccard rule are the batch pipeline's own
+    code, not a copy that could drift. Pair-side joins inside the shared
+    code resolve to broadcasts at runtime via AQE (candidates are
+    micro-batch-sized; session.py enables AQE)."""
     from ..operators import scoring
 
-    nb = sig.select("url", F.posexplode("bands").alias("_b", "_h")).select(
-        F.xxhash64("_b", "_h").alias("block_key"), "url")
-    if idx is not None:
-        hit_ids = (
-            idx.join(F.broadcast(nb), "block_key")
-            .select("url", "id")
-            .distinct()
-        )
-        cand = (
-            hit_ids.join(prev.select(F.xxhash64("url").alias("id"),
-                                     F.col("url").alias("matched_url")),
-                         "id")
-            .filter(F.col("url") != F.col("matched_url"))
-            .select(F.concat(F.lit("n:"), "url").alias("id_a"),
-                    F.concat(F.lit("o:"), "matched_url").alias("id_b"))
-            .distinct()
-        )
-    else:
-        ob = prev.select(F.col("url").alias("matched_url"),
-                         F.posexplode("bands").alias("_b", "_h")).select(
-            F.xxhash64("_b", "_h").alias("block_key"), "matched_url")
-        cand = (
-            ob.join(F.broadcast(nb), "block_key")
-            .filter(F.col("url") != F.col("matched_url"))
-            .select(F.concat(F.lit("n:"), "url").alias("id_a"),
-                    F.concat(F.lit("o:"), "matched_url").alias("id_b"))
-            .distinct()
-        )
+    nb = lsh_blocks(sig.select(F.col("url").alias("id"), "bands"))
+    cand = (
+        idx.join(F.broadcast(nb.withColumnRenamed("id", "url")), "block_key")
+        .select("url", "id")
+        .distinct()
+        .join(prev.select(F.xxhash64("url").alias("id"),
+                          F.col("url").alias("matched_url")), "id")
+        .filter(F.col("url") != F.col("matched_url"))
+        .select(F.concat(F.lit("n:"), "url").alias("id_a"),
+                F.concat(F.lit("o:"), "matched_url").alias("id_b"))
+        .distinct()
+    )
     sig_u = (
         sig.select(F.concat(F.lit("n:"), "url").alias("id"),
                    "minhash", "text")
@@ -403,6 +315,9 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
     state_cols = FUZZY_STATE_COLS if fuzzy else SIG_STATE_COLS
     lev = LEV_MATCH if lev_match is None else lev_match
     jacc = JACCARD_MATCH if jaccard_match is None else jaccard_match
+    match_schema = ("url string, matched_url string, kind string, "
+                    "score double" if fuzzy else
+                    "url string, first_url string, text_sha256 string")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sig = (
@@ -413,68 +328,55 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
         )
         # pre-batch state only: batch_id < N excludes a failed attempt's
         # own partial writes, so retry output == first-run output
-        prev = _state(spark, state_dir, before_batch=batch_id, lister=lister,
-                      cols=state_cols)
+        prev = _read_layer(spark, state_dir, SIG_LAYER,
+                           state_cols + ["sha_prefix"], batch_id, lister)
+        matches = spark.createDataFrame([], match_schema)
         if prev is not None:
             seen = prev.groupBy("sha_prefix", "text_sha256").agg(
                 F.min("url").alias("first_url")
             )
             sha_hits = sig.join(seen, ["sha_prefix", "text_sha256"])
-            exact = (
+            matches = (
                 sha_hits
                 .filter(F.col("url") != F.col("first_url"))
                 .select("url", "first_url", "text_sha256")
             )
-            if fuzzy:
-                # near-dup tier runs only for urls whose text is NOT
-                # already in state byte-identically: exact-matched urls
-                # are settled (score 1.0 beats any fuzzy score), and a
-                # RE-DELIVERED url that is itself the sha-group min must
-                # not resurface as a "fuzzy" match of its own copies —
-                # the anti-join is on sha hits, not on emitted matches
-                fresh = sig.join(sha_hits.select("url"), "url", "left_anti")
-                # touched index partitions: the batch's own band keys mod
-                # P (a <=P-row collect off the checkpointed batch) — the
-                # state read below lists ONLY those bk_mod dirs
-                mods = [r[0] for r in _band_sig_index(fresh)
-                        .select("bk_mod").distinct().collect()]
-                idx = _band_index(spark, state_dir, before_batch=batch_id,
-                                  lister=lister, mods=mods)
-                fz = _fuzzy_matches(fresh, prev, lev, jacc, idx=idx)
-                matches = exact.select(
-                    "url", F.col("first_url").alias("matched_url"),
-                    F.lit("exact").alias("kind"),
-                    F.lit(1.0).alias("score"),
-                ).unionByName(fz.select(
+        if prev is not None and fuzzy:
+            matches = matches.select(
+                "url", F.col("first_url").alias("matched_url"),
+                F.lit("exact").alias("kind"), F.lit(1.0).alias("score"))
+            # near-dup tier runs only for urls whose text is NOT already
+            # in state byte-identically: exact-matched urls are settled
+            # (score 1.0 beats any fuzzy score), and a RE-DELIVERED url
+            # that is itself the sha-group min must not resurface as a
+            # "fuzzy" match of its own copies — the anti-join is on sha
+            # hits, not on emitted matches
+            fresh = sig.join(sha_hits.select("url"), "url", "left_anti")
+            # touched index partitions: the fresh band keys mod P (a <=P-row
+            # collect off the checkpointed batch); the index read lists
+            # ONLY those bk_mod dirs. No dir means no state row shares a
+            # band key with the batch, so there is nothing to score.
+            mods = [r[0] for r in _band_sig_index(fresh)
+                    .select("bk_mod").distinct().collect()]
+            idx = _read_layer(spark, state_dir, BAND_LAYER, BAND_COLS,
+                              batch_id, lister, parts=mods)
+            if idx is not None:
+                fz = _fuzzy_matches(fresh, prev, idx, lev, jacc)
+                matches = matches.unionByName(fz.select(
                     "url", "matched_url", F.lit("fuzzy").alias("kind"),
                     F.col("score").cast("double")))
-            else:
-                matches = exact
-        elif fuzzy:
-            matches = spark.createDataFrame(
-                [], "url string, matched_url string, kind string, "
-                    "score double")
-        else:
-            matches = spark.createDataFrame(
-                [], "url string, first_url string, text_sha256 string"
-            )
-        # idempotent per-batch sinks: overwrite THIS batch's partition dir
+        # idempotent per-batch sinks: overwrite THIS batch's dirs
         matches.write.mode("overwrite").parquet(
             os.path.join(matches_dir, f"batch_id={batch_id}"))
-        sig.write.partitionBy("sha_prefix").mode("overwrite").parquet(
-            os.path.join(state_dir, "batches", f"batch_id={batch_id}"))
+        tables = [(SIG_LAYER, state_cols, sig)]
         if fuzzy:
-            # band-key-partitioned index twin of the batch state write
-            # (same batch_id dir + overwrite idempotency contract)
-            _band_sig_index(sig).write.partitionBy("bk_mod").mode(
-                "overwrite").parquet(
-                os.path.join(state_dir, "bands", f"batch_id={batch_id}"))
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            _compact(spark, state_dir, current_batch=batch_id, lister=lister,
-                     remover=remover, cols=state_cols)
-            if fuzzy:
-                _compact_bands(spark, state_dir, current_batch=batch_id,
-                               lister=lister, remover=remover)
+            tables.append((BAND_LAYER, BAND_COLS, _band_sig_index(sig)))
+        for layer, cols, df in tables:
+            df.write.partitionBy(layer.part).mode("overwrite").parquet(
+                os.path.join(state_dir, layer.batches, f"batch_id={batch_id}"))
+            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+                _compact(spark, state_dir, layer, cols, batch_id, lister,
+                         remover)
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -3,6 +3,9 @@ property, parity). Session-scoped SparkSession, tiny (sf0.001) pages."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -463,9 +466,21 @@ def test_resume_skips_completed_stages(spark, tiny_pages_dir, tmp_path):
     p2 = DedupPipeline(spark, tiny_pages_dir, out_dir=out, run_id="R1")
     c2 = p2.run().toPandas().sort_values("url").reset_index(drop=True)
     pd.testing.assert_frame_equal(c1, c2)
-    resumed = [m for m in p2.stage_metrics if m.get("resumed")]
-    assert any(m["stage"] == "signatures" for m in resumed)
-    assert any(m["stage"] == "candidates" for m in resumed)
+    # a full rerun resumes signatures and clusters and runs nothing between
+    resumed = {m["stage"] for m in p2.stage_metrics if m.get("resumed")}
+    assert {"signatures", "clusters"} <= resumed
+    ran = {m["stage"] for m in p2.stage_metrics}
+    assert not ran & {"candidates", "scores", "cc_loop"}
+
+    # crash in the last stage: without the clusters checkpoint the rerun
+    # rebuilds clusters from the resumed candidates and scores
+    shutil.rmtree(os.path.join(out, "clusters"))
+    p3 = DedupPipeline(spark, tiny_pages_dir, out_dir=out, run_id="R1")
+    c3 = p3.run().toPandas().sort_values("url").reset_index(drop=True)
+    pd.testing.assert_frame_equal(c1, c3)
+    resumed = {m["stage"] for m in p3.stage_metrics if m.get("resumed")}
+    assert {"signatures", "candidates", "scores"} <= resumed
+    assert "clusters" not in resumed
 
 
 def test_resume_invalidated_by_config_change(spark, tiny_pages_dir, tmp_path):

@@ -7,13 +7,21 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from dedupe_rust_spark.datagen import _PA_PAGES, EPOCH
 from dedupe_rust_spark.functions.textcore import render_html
 from dedupe_rust_spark.streaming.incremental import (
-    _batch_ids, _compacted_uptos, _state, posix_lister,
-    start_incremental_dedup,
+    BAND_COLS, BAND_LAYER, SIG_LAYER, SIG_STATE_COLS, _batch_ids,
+    _compacted_uptos, _read_layer, hadoop_lister, hadoop_remover,
+    posix_lister, posix_remover, start_incremental_dedup,
 )
+
+
+def _state(spark, state_dir, lister=posix_lister, cols=SIG_STATE_COLS):
+    """The whole signature state table, as process_batch reads it."""
+    return _read_layer(spark, state_dir, SIG_LAYER, cols + ["sha_prefix"],
+                       lister=lister)
 
 
 def _write_wave(path: str, rows: list[tuple[str, bytes]]) -> None:
@@ -184,18 +192,23 @@ def test_incremental_state_compaction(spark, tmp_path):
     assert _state(spark, state_dir).count() == 6
 
 
-def test_state_listing_is_pluggable_mock_store(spark, tmp_path):
+@pytest.mark.parametrize("store", ["posix", "hadoop"])
+def test_state_listing_is_pluggable_mock_store(spark, tmp_path, store):
     """The compaction contract must hold against a non-POSIX listing
     backend (object stores have no os.listdir): drive the whole two-wave +
     compaction flow through a recording mock lister and assert (a) every
     directory listing went through it, (b) results are identical to the
-    POSIX run. Plus pure-dict coverage: the id parsers consume ONLY what
-    the lister returns, junk entries ignored."""
+    POSIX run. Run over both shipped lister/remover pairs: the POSIX one
+    and the Hadoop FileSystem one (here on the local file system). Plus
+    pure-dict coverage: the id parsers consume ONLY what the lister
+    returns, junk entries ignored."""
     calls: list[str] = []
+    lister, remover = ((posix_lister, posix_remover) if store == "posix"
+                       else (hadoop_lister(spark), hadoop_remover(spark)))
 
     def mock_lister(path: str) -> list[str]:
         calls.append(path)
-        return posix_lister(path)  # same data; the INDIRECTION is the test
+        return lister(path)  # same data; the INDIRECTION is the test
 
     input_dir = str(tmp_path / "in")
     state_dir = str(tmp_path / "state")
@@ -210,7 +223,7 @@ def test_state_listing_is_pluggable_mock_store(spark, tmp_path):
         _write_wave(os.path.join(input_dir, name), rows)
         q = start_incremental_dedup(spark, input_dir, state_dir,
                                     matches_dir, ckpt, compact_every=2,
-                                    lister=mock_lister)
+                                    lister=mock_lister, remover=remover)
         q.awaitTermination(120)
 
     run_wave("w1.parquet", [("https://h1.example.com/a.html", doc_a),
@@ -221,8 +234,10 @@ def test_state_listing_is_pluggable_mock_store(spark, tmp_path):
     # every state listing went through the mock (batches + compacted dirs)
     assert any(p.endswith("batches") for p in calls)
     assert any(p.endswith("compacted") for p in calls)
-    # batch 2 compacted batches 0..1; matches identical to the POSIX flow
+    # batch 2 compacted batches 0..1 and the remover deleted what was
+    # folded; matches identical to the POSIX flow
     assert os.listdir(os.path.join(state_dir, "compacted")) == ["upto=1"]
+    assert os.listdir(os.path.join(state_dir, "batches")) == ["batch_id=2"]
     got = {(r.url, r.first_url) for r in
            spark.read.parquet(matches_dir).toPandas().itertuples()}
     assert got == {("https://h2.example.com/a-copy.html",
@@ -236,6 +251,20 @@ def test_state_listing_is_pluggable_mock_store(spark, tmp_path):
             "/s/compacted": ["upto=7", "junk"]}
     assert _batch_ids("/s", lister=lambda p: fake.get(p, [])) == [0, 3]
     assert _compacted_uptos("/s", lister=lambda p: fake.get(p, [])) == [7]
+
+
+def _near_dup_pair() -> tuple[bytes, bytes]:
+    """An original page and a near-duplicate of it: 3 of 192 words
+    edited (~98% similar), not byte-identical."""
+    base_words = ("alpha beta gamma delta epsilon zeta eta theta iota "
+                  "kappa lambda mu nu xi omicron pi rho sigma tau "
+                  "upsilon phi chi psi omega ").split()
+    body = " ".join(base_words * 8)                      # 192 words
+    near_words = list(base_words * 8)
+    near_words[5], near_words[50], near_words[100] = "edited", "words", "here"
+    near_body = " ".join(near_words)
+    return (render_html("Original Doc", [body]),
+            render_html("Original Doc", [near_body]))
 
 
 def test_incremental_fuzzy_dedup(spark, tmp_path):
@@ -252,15 +281,7 @@ def test_incremental_fuzzy_dedup(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(input_dir)
 
-    base_words = ("alpha beta gamma delta epsilon zeta eta theta iota "
-                  "kappa lambda mu nu xi omicron pi rho sigma tau "
-                  "upsilon phi chi psi omega ").split()
-    body = " ".join(base_words * 8)                      # 192 words
-    near_words = list(base_words * 8)
-    near_words[5], near_words[50], near_words[100] = "edited", "words", "here"
-    near_body = " ".join(near_words)                     # ~98% similar
-    doc_x = render_html("Original Doc", [body])
-    doc_near = render_html("Original Doc", [near_body])
+    doc_x, doc_near = _near_dup_pair()
     doc_other = render_html("Unrelated", ["totally different content " * 10])
 
     def run_wave(name, rows):
@@ -307,6 +328,49 @@ def test_incremental_fuzzy_dedup(spark, tmp_path):
     assert row.iloc[0]["matched_url"] == "https://h2.example.com/x-near.html"
 
 
+def test_fuzzy_match_against_folded_band_index(spark, tmp_path):
+    """A near-dup (not byte-identical) of a page whose band keys live only
+    in the folded band index (bands_compacted/upto=K) is matched with
+    kind='fuzzy': the band index compacts beside the signature state and
+    the per-batch band read sees the snapshot. The fold leaves only the
+    live batch dir under bands/. The folded signature snapshot here holds
+    only digit sha_prefix dirs (2, 7) while batch 2 is 'e': the state read
+    must keep sha_prefix a string rather than infer it as a number."""
+    input_dir = str(tmp_path / "in")
+    state_dir = str(tmp_path / "state")
+    matches_dir = str(tmp_path / "matches")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(input_dir)
+
+    doc_x, doc_near = _near_dup_pair()
+
+    def run_wave(name, rows):
+        _write_wave(os.path.join(input_dir, name), rows)
+        q = start_incremental_dedup(spark, input_dir, state_dir,
+                                    matches_dir, ckpt, compact_every=2,
+                                    fuzzy=True)
+        q.awaitTermination(120)
+
+    run_wave("w1.parquet", [("https://h1.example.com/x.html", doc_x)])
+    run_wave("w2.parquet", [("https://h2.example.com/y.html", render_html(
+        "Unrelated Y", ["nothing shared with the original " * 10]))])
+    # batch 2 folds batches 0..1 of both tables after its own join
+    run_wave("w3.parquet", [("https://h3.example.com/z.html", render_html(
+        "Unrelated Z", ["another page about other things " * 10]))])
+    assert os.listdir(os.path.join(state_dir, "bands_compacted")) == [
+        "upto=1"]
+    assert os.listdir(os.path.join(state_dir, "bands")) == ["batch_id=2"]
+    assert spark.read.parquet(matches_dir).count() == 0
+
+    run_wave("w4.parquet",
+             [("https://h4.example.com/x-near.html", doc_near)])
+    m = spark.read.parquet(matches_dir).toPandas()
+    got = {(r.url, r.matched_url, r.kind) for r in m.itertuples()}
+    assert got == {("https://h4.example.com/x-near.html",
+                    "https://h1.example.com/x.html", "fuzzy")}
+    assert m.iloc[0]["score"] >= 0.5
+
+
 def test_incremental_fuzzy_redelivered_min_url_not_rematched(spark, tmp_path):
     """A re-delivered url whose text is already in state byte-identically
     (and which is itself the sha-group minimum) must produce NO match row
@@ -349,9 +413,7 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
     (path-level pruning — the 10^12 design's per-batch O(touched/P)
     state scan), and the index rows must be (block_key, id) surrogate
     longs, never url/text payloads."""
-    from dedupe_rust_spark.streaming.incremental import (
-        BAND_INDEX_PARTS, _band_index, _band_sig_index,
-    )
+    from dedupe_rust_spark.streaming.incremental import BAND_INDEX_PARTS
 
     input_dir = str(tmp_path / "in")
     state_dir = str(tmp_path / "state")
@@ -373,7 +435,7 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
     run_wave("w2.parquet", docs[3:])
 
     # index rows are surrogate longs only
-    full = _band_index(spark, state_dir)
+    full = _read_layer(spark, state_dir, BAND_LAYER, BAND_COLS)
     assert full is not None
     assert set(full.columns) == {"block_key", "id"}
     assert dict(full.dtypes) == {"block_key": "bigint", "id": "bigint"}
@@ -386,7 +448,8 @@ def test_fuzzy_band_index_partition_pruning(spark, tmp_path):
                       if p.startswith("bk_mod=")})
     assert present, "fuzzy stream must write the band index"
     touched = present[: max(1, len(present) // 2)]
-    pruned = _band_index(spark, state_dir, mods=touched)
+    pruned = _read_layer(spark, state_dir, BAND_LAYER, BAND_COLS,
+                         parts=touched)
     files = pruned.inputFiles()
     assert files, "pruned index read must still see the touched dirs"
     want = {f"bk_mod={m}" for m in touched}
