@@ -4,16 +4,18 @@ Tiers (training-data-pipeline ops, beyond the reference's surface):
   * cosine_topk      — brute-force exact top-k (cross join, window top-k);
                        the baseline and correctness oracle.
   * lsh_cosine_pairs — near-dup self-join over SRP LSH blocks: one shuffle
-                       of the narrow band stream, then each block scored
-                       locally by a tiled batched-matmul kernel that emits
-                       every pair once.
+                       of the narrow band stream into score shards, each
+                       vector attached once per (shard, id), then one
+                       grouped Arrow kernel per shard scores its blocks
+                       (tiled batched matmuls, every pair emitted once).
   * lsh_cosine_topk / ivf_cosine_topk — bucketed / k-means-cell top-k.
 
-The Python surface is Arrow UDFs doing one numpy pass per batch over
-embeddings read by one flatten + reshape: SRP bucketing and IVF cell
-assignment (dense matmuls against a constant matrix, whose expression-tree
-form was a measured plan-size pathology) and the block kernel. Top-k
-scoring stays builtin (F.aggregate/F.zip_with), rounded JVM-side.
+The Python surface reads embeddings by one flatten + reshape: Arrow UDFs
+doing one numpy pass per batch for SRP bucketing and IVF cell assignment
+(dense matmuls against a constant matrix, whose expression-tree form was
+a measured plan-size pathology), and the block kernel, one grouped Arrow
+call per score shard. Top-k scoring stays builtin
+(F.aggregate/F.zip_with), rounded JVM-side.
 """
 
 from __future__ import annotations
@@ -246,30 +248,38 @@ def _score_blocks(ids: np.ndarray, V: np.ndarray, offsets: np.ndarray,
     return blk, uids[np.minimum(ua, ub)], uids[np.maximum(ua, ub)], cos
 
 
-def _block_pairs_udf(planes, bits: int, threshold: float):
-    """Arrow UDF: (table, bucket, members array<struct<id, embedding>>) ->
-    the block's pairs, _score_blocks over the whole batch."""
-    from pyspark.sql.functions import arrow_udf
-
+def _shard_kernel(planes, bits: int, threshold: float, id_col: str,
+                  vec_col: str):
+    """applyInArrow function: one score shard's (id, embedding, blocks
+    array<struct<table, bucket>>) rows -> the shard's pairs (vec_id_a,
+    vec_id_b, unrounded cosine). Every member of a (table, bucket) block is
+    in the same shard, so the shard's complete blocks are rebuilt from the
+    rows' block lists and scored by one _score_blocks call."""
     W = planes.T.copy()
 
-    @arrow_udf("array<struct<vec_id_a:bigint,vec_id_b:bigint,cosine:double>>")
-    def block_pairs(table: pa.Array, bucket: pa.Array,
-                    members: pa.Array) -> pa.Array:
-        off = members.offsets.to_numpy()
-        ids, vecs = members.flatten().flatten()
-        blk, a, b, cos = _score_blocks(
-            ids.to_numpy(), _dense_rows(vecs, W.shape[0])[1], off - off[0],
-            table.to_numpy(), bucket.to_numpy(), W, bits, threshold)
-        order = np.argsort(blk, kind="stable")
-        ends = np.cumsum(np.bincount(blk, minlength=len(members)))
-        return pa.ListArray.from_arrays(
-            pa.array(np.concatenate([[0], ends]).astype(np.int32)),
-            pa.StructArray.from_arrays(
-                [a[order], b[order], cos[order]],
-                names=["vec_id_a", "vec_id_b", "cosine"]))
+    def score_shard(shard: pa.Table) -> pa.Table:
+        blocks = shard.column("blocks").combine_chunks()
+        row = np.repeat(np.arange(len(blocks)),
+                        blocks.value_lengths().to_numpy(zero_copy_only=False))
+        tb = blocks.flatten()
+        table = tb.field("table").to_numpy(zero_copy_only=False)
+        bucket = tb.field("bucket").to_numpy(zero_copy_only=False)
+        order = np.lexsort((bucket, table))
+        row, table, bucket = row[order], table[order], bucket[order]
+        head = np.flatnonzero(np.r_[True, (table[1:] != table[:-1])
+                                    | (bucket[1:] != bucket[:-1])])
+        sizes = np.diff(np.r_[head, len(row)])
+        multi = sizes > 1
+        row = row[np.repeat(multi, sizes)]
+        ids = shard.column(id_col).combine_chunks().to_numpy()
+        V = _dense_rows(shard.column(vec_col).combine_chunks(),
+                        W.shape[0])[1]
+        _, a, b, cos = _score_blocks(
+            ids[row], V[row], np.r_[0, np.cumsum(sizes[multi])],
+            table[head[multi]], bucket[head[multi]], W, bits, threshold)
+        return pa.table({"vec_id_a": a, "vec_id_b": b, "cosine": cos})
 
-    return block_pairs
+    return score_shard
 
 
 def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
@@ -286,44 +296,64 @@ def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
     per-bucket pair fan-out); tables buy back the recall that extra bits
     cost.
 
-    Plan shape: ONE shuffle, of the narrow (id, table, bucket) band stream.
-    Vectors are attached after it by a broadcast join, which keeps the
-    (table, bucket) partitioning, so collecting each block's members needs
-    no second exchange. Each block is scored where it lands
+    Plan shape: ONE shuffle, of the narrow (id, table, bucket) band stream,
+    into S score shards by pmod(xxhash64(table, bucket), S) — an expression,
+    so no shard column rides the shuffle. Each block lands whole in one
+    shard. The rows then group to one (shard, id) row holding that id's
+    blocks in the shard; the partitioning already satisfies that grouping.
+    Vectors attach to those rows by a broadcast join, which keeps the
+    partitioning, so a vector reaches Python at most min(S, n_tables)
+    times, not once per table. One grouped Arrow kernel per shard
+    (_shard_kernel) rebuilds the shard's blocks and scores them
     (_score_blocks): batched matmuls, tiled so a degenerate bucket costs
     O(tile x m) memory, each pair emitted once — no pair rows, pair-level
-    distinct or pair-to-vector joins. A corpus too large to broadcast
-    attaches vectors by a shuffled id join instead."""
+    distinct or pair-to-vector joins. Rounding and the threshold filter
+    stay JVM-side. A corpus too large to broadcast attaches vectors by a
+    shuffled id join instead, then regroups by shard.
+
+    S is 2 x defaultParallelism for a small corpus, else the scan's split
+    count. A shard is one Arrow group handed to one Python call, so it is
+    held whole in that worker: about n x n_tables / S of the n x n_tables
+    (id, table, bucket) entries, and at most min(n, n x n_tables / S)
+    distinct vectors of the n in the corpus. With S tied to the split
+    count that is at most n_tables splits' worth of vectors however large
+    the corpus grows (one degenerate block is still one shard: the
+    kernel's row tiling bounds its score memory, not its member count)."""
     ids = df.select(id_col, vec_col)
     par = df.sparkSession.sparkContext.defaultParallelism
     # the banding UDF inherits the scan's split count: spread an
     # under-parallel scan (a small single-file corpus would band on ONE
     # task; a 100 TB scan has many splits, known from footer metadata, no
-    # job runs). The same signal marks the corpus small enough to broadcast.
-    small_corpus = ids.rdd.getNumPartitions() < par
+    # job runs). The same signal marks the corpus small enough to broadcast
+    # and sizes the score shards.
+    splits = ids.rdd.getNumPartitions()
+    small_corpus = splits < par
+    shards = 2 * par if small_corpus else splits
     if small_corpus:
-        ids = ids.repartition(2 * par)
+        ids = ids.repartition(shards)
     # (table, bucket) is the block; its block_key hash would only add 8
     # incompressible bytes per shuffled row
     blocks = srp_band_blocks(ids, id_col, vec_col, bits, n_tables, dim,
                              seed).drop("block_key")
+    shard = F.pmod(F.xxhash64("table", "bucket"), F.lit(shards))
+    # an explicit count: scoring is quadratic per block while a band row is
+    # a few bytes, so AQE's byte-based coalescing would pack all shards
+    # into 1-2 tasks
+    members = (
+        blocks.repartition(shards, shard)
+        .groupBy(shard.alias("shard"), id_col)
+        .agg(F.collect_list(F.struct("table", "bucket")).alias("blocks"))
+    )
     vecs = df.select(id_col, vec_col)
     if small_corpus:
-        # an explicit count: scoring is quadratic per block while a block
-        # row is a few KB, so AQE's byte-based coalescing would pack all
-        # blocks into 1-2 tasks
-        blocks = blocks.repartition(2 * par, "table", "bucket")
         vecs = F.broadcast(vecs)
-    score = _block_pairs_udf(_srp_planes(bits, n_tables, dim, seed), bits,
-                             threshold)
+    score = _shard_kernel(_srp_planes(bits, n_tables, dim, seed), bits,
+                          threshold, id_col, vec_col)
     return (
-        blocks.join(vecs, id_col)
-        .groupBy("table", "bucket")
-        .agg(F.collect_list(F.struct(id_col, vec_col)).alias("members"))
-        .filter(F.size("members") > 1)
-        .select(F.explode(score("table", "bucket", "members")).alias("p"))
-        .select("p.vec_id_a", "p.vec_id_b",
-                F.round("p.cosine", 4).alias("cosine"))
+        members.join(vecs, id_col)
+        .groupBy("shard")
+        .applyInArrow(score, "vec_id_a long, vec_id_b long, cosine double")
+        .select("vec_id_a", "vec_id_b", F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 

@@ -9,6 +9,29 @@ from pyspark.sql import functions as F
 from dedupe_rust_spark.operators import ann, multimodal, textops
 
 
+def _python_bytes_sent_by_last_query(spark) -> float:
+    """Sum of the "data sent to Python workers" SQL metric over every node
+    of the session's latest SQL execution (readable with the UI off)."""
+    units = {"B": 1, "KiB": 2 ** 10, "MiB": 2 ** 20, "GiB": 2 ** 30}
+    # metrics reach the store through the listener bus, after the action
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    ex = execs.apply(execs.length() - 1).executionId()
+    values = store.executionMetrics(ex)
+    nodes = store.planGraph(ex).allNodes()
+    sent = 0.0
+    for i in range(nodes.length()):
+        metrics = nodes.apply(i).metrics()
+        for j in range(metrics.length()):
+            m = metrics.apply(j)
+            v = values.get(m.accumulatorId())
+            if m.name() == "data sent to Python workers" and v.isDefined():
+                num, unit = v.get().split("\n")[-1].split(" (")[0].split()
+                sent += float(num.replace(",", "")) * units[unit]
+    return sent
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
@@ -143,6 +166,67 @@ class TestANN:
         split = ann.lsh_cosine_pairs(emb.repartition(2 * par), threshold=0.35)
         assert small.exceptAll(split).count() == 0
         assert split.exceptAll(small).count() == 0
+
+    def test_lsh_pairs_python_input_bound(self, spark, emb):
+        """Each vector reaches the Python workers at most min(S, n_tables)
+        times (S = 2 x par score shards for this one-file corpus), not once
+        per table: what the query sends to Python is bounded by the banding
+        input, that many copies of each (id, vector) row and each
+        (table, bucket) entry once, with 25% slack for Arrow framing."""
+        n_tables, dim = 64, 64
+        n = emb.count()
+        copies = min(2 * spark.sparkContext.defaultParallelism, n_tables)
+        row = dim * 4 + 3 * 8   # float32 vector, id, shard, list offsets
+        bound = 1.25 * ((1 + copies) * n * row + n * n_tables * 12)
+        ann.lsh_cosine_pairs(emb, threshold=0.35, n_tables=n_tables,
+                             dim=dim).collect()
+        sent = _python_bytes_sent_by_last_query(spark)
+        assert 0 < sent <= bound, (sent, bound)
+
+    def test_lsh_pairs_degenerate_buckets_any_split(self, spark, tmp_path):
+        """bits=1, n_tables=2 cuts ~5k random vectors into four ~2.5k-member
+        blocks. The pairs equal a numpy brute force over the pairs that
+        share a bucket in some table, and do not depend on the input's
+        split count: 1 split (broadcast attach, 2 x par shards), 2 x par
+        and 7 x par splits (shuffled id attach, that many shards)."""
+        import pandas as pd
+
+        rng = np.random.RandomState(11)
+        n, dim, thr = 5000, 64, 0.35
+        V = rng.standard_normal((n, dim)).astype(np.float32)
+        ids = np.arange(n, dtype=np.int64) * 3 + 1
+        pd.DataFrame({"vec_id": ids, "embedding": list(V)}).to_parquet(
+            tmp_path / "vecs.parquet")
+        df = spark.read.parquet(str(tmp_path / "vecs.parquet"))
+
+        M = V.astype(np.float64)
+        codes = ann._srp_codes(M, ann._srp_planes(1, 2, dim, 42).T, 1)
+        assert np.bincount(codes[:, 0]).min() > 2000
+        norms = np.linalg.norm(M, axis=1)
+        cos = (M @ M.T) / np.outer(norms, norms)
+        hit = (codes[:, None, :] == codes[None, :, :]).any(axis=2)
+        ia, ib = np.nonzero(np.triu((np.round(cos, 4) >= thr) & hit, 1))
+        expect = set(zip(ids[ia].tolist(), ids[ib].tolist()))
+        assert len(expect) > 1000
+
+        par = spark.sparkContext.defaultParallelism
+        outs = []
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "-1")   # only the explicit hint may broadcast
+        try:
+            for parts in (1, 2 * par, 7 * par):
+                got = ann.lsh_cosine_pairs(df.repartition(parts),
+                                           threshold=thr, bits=1,
+                                           n_tables=2, dim=dim)
+                plan = got._jdf.queryExecution().executedPlan().toString()
+                join = "BroadcastHashJoin" if parts == 1 else "SortMergeJoin"
+                assert join in plan, plan
+                outs.append(sorted(got.collect()))
+        finally:
+            spark.conf.set(key, saved)
+        assert {(r.vec_id_a, r.vec_id_b) for r in outs[0]} == expect
+        assert outs[0] == outs[1] == outs[2]
 
     def test_srp_and_ivf_udfs_match_numpy(self, spark, emb):
         """The Arrow bucket/cell UDFs equal a pure-numpy reference, and a

@@ -136,12 +136,16 @@ def main() -> None:
     sections.append((
         "SRP-LSH near-dup pairs (block-local scoring)",
         "Exactly ONE hashpartitioning Exchange: the narrow (vec_id, table, "
-        "bucket) band stream. Vectors attach after it by a BroadcastHashJoin "
-        "(BuildRight), which keeps that partitioning, so the per-block "
-        "collect_list needs no second exchange. ONE ArrowEvalPython scores "
-        "each block (batched matmul, emit-once); its pairs come out of a "
-        "Generate (explode). No pair-keyed exchange or distinct, and no "
-        "join of pairs to vectors.",
+        "bucket) band stream, partitioned by the expression "
+        "pmod(xxhash64(table, bucket), S) into S score shards — no shard "
+        "column is shuffled. The ObjectHashAggregate to one (shard, vec_id) "
+        "row with its collect_list of (table, bucket) is satisfied by that "
+        "partitioning. Vectors attach to those rows by a BroadcastHashJoin "
+        "(BuildRight), which keeps it, so each vector reaches Python at "
+        "most min(S, n_tables) times. ONE FlatMapGroupsInArrow per shard "
+        "rebuilds its blocks and scores them (batched matmul, emit-once); "
+        "round + threshold filter stay JVM-side. No pair-keyed exchange or "
+        "distinct, and no join of pairs to vectors.",
         fmt(ann.lsh_cosine_pairs(emb, threshold=0.35)),
     ))
 
