@@ -3,19 +3,23 @@
 Tiers (training-data-pipeline ops, beyond the reference's surface):
   * cosine_topk      — brute-force exact top-k (cross join, window top-k);
                        the baseline and correctness oracle.
-  * lsh_cosine_pairs — near-dup self-join over SRP LSH blocks: one shuffle
-                       of the narrow band stream into score shards, each
-                       vector attached once per (shard, id), then one
-                       grouped Arrow kernel per shard scores its blocks
-                       (tiled batched matmuls, every pair emitted once).
+  * lsh_cosine_pairs — near-dup self-join over SRP LSH blocks, banded
+                       map-side on the scan's own splits (no spread):
+                       one narrow (shard, id, code_sig) row per vector
+                       and score shard its blocks hash to, one shuffle of
+                       those rows, the vector attached after it, then one
+                       grouped Arrow kernel per shard rebuilds and scores
+                       its blocks (tiled batched matmuls, every pair
+                       emitted once). A shard holds one row per vector it
+                       touches, not one per (table, bucket) entry.
   * lsh_cosine_topk / ivf_cosine_topk — bucketed / k-means-cell top-k.
 
 The Python surface reads embeddings by one flatten + reshape: Arrow UDFs
-doing one numpy pass per batch for SRP bucketing and IVF cell assignment
-(dense matmuls against a constant matrix, whose expression-tree form was
-a measured plan-size pathology), and the block kernel, one grouped Arrow
-call per score shard. Top-k scoring stays builtin
-(F.aggregate/F.zip_with), rounded JVM-side.
+doing one numpy pass per batch for SRP bucketing, score-shard banding and
+IVF cell assignment (dense matmuls against a constant matrix, whose
+expression-tree form was a measured plan-size pathology), and the block
+kernel, one grouped Arrow call per score shard. Top-k scoring stays
+builtin (F.aggregate/F.zip_with), rounded JVM-side.
 """
 
 from __future__ import annotations
@@ -162,8 +166,8 @@ def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
     seed_per_table=True draws table t's hyperplanes from RandomState(seed+t)
     (first `bits` rows) — the exact plane family of the per-table
     srp_bucket(seed=seed+t) loop, so callers migrating from per-table plans
-    keep identical bucket assignments. Default False keeps the one-stream
-    family used by lsh_cosine_pairs (its equality oracle pins it)."""
+    keep identical bucket assignments. Default False is the one-stream
+    family lsh_cosine_pairs bands with (its equality oracle pins it)."""
     udf = _srp_buckets_udf(
         _srp_planes(bits, n_tables, dim, seed, seed_per_table), bits)
     # block_key is an 8-byte long (xxhash64 of table+bucket), matching the
@@ -248,22 +252,88 @@ def _score_blocks(ids: np.ndarray, V: np.ndarray, offsets: np.ndarray,
     return blk, uids[np.minimum(ua, ub)], uids[np.maximum(ua, ub)], cos
 
 
-def _shard_kernel(planes, bits: int, threshold: float, id_col: str,
-                  vec_col: str):
-    """applyInArrow function: one score shard's (id, embedding, blocks
-    array<struct<table, bucket>>) rows -> the shard's pairs (vec_id_a,
-    vec_id_b, unrounded cosine). Every member of a (table, bucket) block is
-    in the same shard, so the shard's complete blocks are rebuilt from the
-    rows' block lists and scored by one _score_blocks call."""
+def _mix64(x: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer over uint64 (wrapping multiplies): a fixed
+    hash that banding and the block kernel compute identically."""
+    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return x ^ (x >> np.uint64(31))
+
+
+def _block_shards(codes: np.ndarray, bits: int, shards: int) -> np.ndarray:
+    """(n, tables) SRP codes -> (n, tables) score shard of each block
+    (table, bucket): a fixed hash of table << bits | bucket, mod shards."""
+    key = (np.arange(codes.shape[1], dtype=np.uint64) << np.uint64(bits)) \
+        | codes.astype(np.uint64)
+    return (_mix64(key) % np.uint64(shards)).astype(np.int32)
+
+
+def _code_sig(codes: np.ndarray) -> np.ndarray:
+    """(n, tables) SRP codes -> one int64 hash of each whole code row."""
+    h = np.zeros(len(codes), np.uint64)
+    for code in codes.T.astype(np.uint64):
+        h = _mix64(h + code + np.uint64(0x9E3779B97F4A7C15))
+    return h.view(np.int64)
+
+
+def _shard_band_udf(planes, bits: int, shards: int):
+    """Arrow UDF: embedding -> struct<sig long, shards array<int>>: the
+    code_sig of the vector's SRP code row and the distinct score shards
+    its n_tables blocks hash to (at most min(shards, n_tables)), one
+    matmul per batch. A null embedding maps to a null struct."""
+    from pyspark.sql.functions import arrow_udf
+
+    W = planes.T.copy()
+    out_type = T.StructType([
+        T.StructField("sig", T.LongType()),
+        T.StructField("shards", T.ArrayType(T.IntegerType())),
+    ])
+
+    @arrow_udf(out_type)
+    def band(col: pa.Array) -> pa.Array:
+        valid, M = _dense_rows(col, W.shape[0])
+        codes = _srp_codes(M.astype(np.float64), W, bits)
+        sh = np.sort(_block_shards(codes, bits, shards), axis=1)
+        first = np.ones_like(sh, dtype=bool)
+        first[:, 1:] = sh[:, 1:] != sh[:, :-1]
+        counts = np.zeros(len(valid), np.int64)
+        counts[valid] = first.sum(axis=1)
+        offsets = pa.array(np.r_[0, np.cumsum(counts)].astype(np.int32))
+        sig = np.zeros(len(valid), np.int64)
+        sig[valid] = _code_sig(codes)
+        return pa.StructArray.from_arrays(
+            [pa.array(sig), pa.ListArray.from_arrays(offsets,
+                                                     pa.array(sh[first]))],
+            fields=[pa.field("sig", pa.int64()),
+                    pa.field("shards", pa.list_(pa.int32()))],
+            mask=pa.array(~valid))
+
+    return band
+
+
+def _shard_kernel(planes, bits: int, shards: int, threshold: float,
+                  id_col: str, vec_col: str):
+    """applyInArrow function: one score shard's (shard, id, code_sig,
+    embedding) rows -> the shard's pairs (vec_id_a, vec_id_b, unrounded
+    cosine). The rows are every vector with a block in this shard, so the
+    shard's complete blocks are the (row, table) entries whose block
+    hashes here; one _score_blocks call scores them. The codes are
+    recomputed once and must reproduce each row's code_sig, else the
+    banding and the kernel disagree on some table's bucket."""
     W = planes.T.copy()
 
     def score_shard(shard: pa.Table) -> pa.Table:
-        blocks = shard.column("blocks").combine_chunks()
-        row = np.repeat(np.arange(len(blocks)),
-                        blocks.value_lengths().to_numpy(zero_copy_only=False))
-        tb = blocks.flatten()
-        table = tb.field("table").to_numpy(zero_copy_only=False)
-        bucket = tb.field("bucket").to_numpy(zero_copy_only=False)
+        ids = shard.column(id_col).combine_chunks().to_numpy()
+        V = _dense_rows(shard.column(vec_col).combine_chunks(),
+                        W.shape[0])[1]
+        codes = _srp_codes(V.astype(np.float64), W, bits)
+        sig = shard.column("code_sig").combine_chunks().to_numpy()
+        if not np.array_equal(_code_sig(codes), sig):
+            raise RuntimeError("SRP codes recomputed in the block kernel "
+                               "differ from the banding's code_sig")
+        here = shard.column("shard")[0].as_py()
+        row, table = np.nonzero(_block_shards(codes, bits, shards) == here)
+        bucket = codes[row, table]
         order = np.lexsort((bucket, table))
         row, table, bucket = row[order], table[order], bucket[order]
         head = np.flatnonzero(np.r_[True, (table[1:] != table[:-1])
@@ -271,9 +341,6 @@ def _shard_kernel(planes, bits: int, threshold: float, id_col: str,
         sizes = np.diff(np.r_[head, len(row)])
         multi = sizes > 1
         row = row[np.repeat(multi, sizes)]
-        ids = shard.column(id_col).combine_chunks().to_numpy()
-        V = _dense_rows(shard.column(vec_col).combine_chunks(),
-                        W.shape[0])[1]
         _, a, b, cos = _score_blocks(
             ids[row], V[row], np.r_[0, np.cumsum(sizes[multi])],
             table[head[multi]], bucket[head[multi]], W, bits, threshold)
@@ -296,62 +363,58 @@ def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
     per-bucket pair fan-out); tables buy back the recall that extra bits
     cost.
 
-    Plan shape: ONE shuffle, of the narrow (id, table, bucket) band stream,
-    into S score shards by pmod(xxhash64(table, bucket), S) — an expression,
-    so no shard column rides the shuffle. Each block lands whole in one
-    shard. The rows then group to one (shard, id) row holding that id's
-    blocks in the shard; the partitioning already satisfies that grouping.
-    Vectors attach to those rows by a broadcast join, which keeps the
-    partitioning, so a vector reaches Python at most min(S, n_tables)
-    times, not once per table. One grouped Arrow kernel per shard
-    (_shard_kernel) rebuilds the shard's blocks and scores them
+    Plan shape: banding runs on the scan's own splits (no spread shuffle;
+    a split is at most maxPartitionBytes and banding it is one matmul per
+    Arrow batch). One Arrow UDF (_shard_band_udf) computes each vector's
+    n_tables SRP codes, hashes every block (table, bucket) to one of S
+    score shards, and returns the distinct shards with code_sig, a 64-bit
+    hash of the whole code row; an explode makes one narrow
+    (shard, id, code_sig) row per (vector, shard) — at most
+    min(S, n_tables) per vector, not one per table. ONE shuffle,
+    repartition(S, shard), moves those rows; every member of a block is
+    in the block's shard. Vectors attach after it by a broadcast join,
+    which keeps the partitioning; a corpus too large to broadcast keeps
+    the embedding on the banded rows instead, so its plan is still one
+    exchange and no join. One grouped Arrow kernel per shard
+    (_shard_kernel) recomputes the codes, checks them against code_sig,
+    rebuilds the blocks hashed to its shard and scores them
     (_score_blocks): batched matmuls, tiled so a degenerate bucket costs
-    O(tile x m) memory, each pair emitted once — no pair rows, pair-level
-    distinct or pair-to-vector joins. Rounding and the threshold filter
-    stay JVM-side. A corpus too large to broadcast attaches vectors by a
-    shuffled id join instead, then regroups by shard.
+    O(tile x m) memory, each pair emitted once — no pair rows,
+    pair-level distinct or pair-to-vector joins. Rounding and the
+    threshold filter stay JVM-side.
 
     S is 2 x defaultParallelism for a small corpus, else the scan's split
     count. A shard is one Arrow group handed to one Python call, so it is
-    held whole in that worker: about n x n_tables / S of the n x n_tables
-    (id, table, bucket) entries, and at most min(n, n x n_tables / S)
-    distinct vectors of the n in the corpus. With S tied to the split
-    count that is at most n_tables splits' worth of vectors however large
-    the corpus grows (one degenerate block is still one shard: the
-    kernel's row tiling bounds its score memory, not its member count)."""
-    ids = df.select(id_col, vec_col)
+    held whole in that worker: one row per vector with a block in the
+    shard, at most min(n, n x n_tables / S) of the n vectors. With S tied
+    to the split count that is at most n_tables splits' worth of vectors
+    however large the corpus grows (one degenerate block is still one
+    shard: the kernel's row tiling bounds its score memory, not its
+    member count)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    # the banding UDF inherits the scan's split count: spread an
-    # under-parallel scan (a small single-file corpus would band on ONE
-    # task; a 100 TB scan has many splits, known from footer metadata, no
-    # job runs). The same signal marks the corpus small enough to broadcast
-    # and sizes the score shards.
-    splits = ids.rdd.getNumPartitions()
+    # a scan's split count is known without a job (footer metadata): a
+    # corpus read in fewer splits than there are cores is small enough to
+    # broadcast, and it sizes the score shards
+    splits = df.rdd.getNumPartitions()
     small_corpus = splits < par
     shards = 2 * par if small_corpus else splits
-    if small_corpus:
-        ids = ids.repartition(shards)
-    # (table, bucket) is the block; its block_key hash would only add 8
-    # incompressible bytes per shuffled row
-    blocks = srp_band_blocks(ids, id_col, vec_col, bits, n_tables, dim,
-                             seed).drop("block_key")
-    shard = F.pmod(F.xxhash64("table", "bucket"), F.lit(shards))
-    # an explicit count: scoring is quadratic per block while a band row is
-    # a few bytes, so AQE's byte-based coalescing would pack all shards
+    planes = _srp_planes(bits, n_tables, dim, seed)
+    band = _shard_band_udf(planes, bits, shards)(F.col(vec_col))
+    vec = [] if small_corpus else [vec_col]   # else attached by broadcast
+    # an explicit count: scoring is quadratic per block while a banded row
+    # is a few bytes, so AQE's byte-based coalescing would pack all shards
     # into 1-2 tasks
-    members = (
-        blocks.repartition(shards, shard)
-        .groupBy(shard.alias("shard"), id_col)
-        .agg(F.collect_list(F.struct("table", "bucket")).alias("blocks"))
+    rows = (
+        df.select(id_col, *vec, band.alias("band"))
+        .select(F.explode("band.shards").alias("shard"), id_col,
+                F.col("band.sig").alias("code_sig"), *vec)
+        .repartition(shards, "shard")
     )
-    vecs = df.select(id_col, vec_col)
     if small_corpus:
-        vecs = F.broadcast(vecs)
-    score = _shard_kernel(_srp_planes(bits, n_tables, dim, seed), bits,
-                          threshold, id_col, vec_col)
+        rows = rows.join(F.broadcast(df.select(id_col, vec_col)), id_col)
+    score = _shard_kernel(planes, bits, shards, threshold, id_col, vec_col)
     return (
-        members.join(vecs, id_col)
-        .groupBy("shard")
+        rows.groupBy("shard")
         .applyInArrow(score, "vec_id_a long, vec_id_b long, cosine double")
         .select("vec_id_a", "vec_id_b", F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)

@@ -385,3 +385,41 @@ class TestBlockKernel:
         with pytest.raises(RuntimeError, match="differ"):
             ann._score_blocks(rows, V[rows], offsets, tables, buckets + 1,
                               W, self.BITS, self.THR)
+
+    def test_shard_kernel_checks_code_sig(self):
+        """The shard kernel recomputes its rows' SRP codes and fails loudly
+        when one row's code_sig disagrees; with matching sigs and a single
+        shard it emits exactly _score_blocks' pairs."""
+        import pyarrow as pa
+
+        from dedupe_rust_spark.operators import ann
+
+        # clump rows 0..249 and their near copies, 20000..20249
+        V = self._vectors()[np.r_[0:250, 20000:20250]]
+        planes = self._planes()
+        W = planes.T.copy()
+        ids = np.arange(len(V), dtype=np.int64) * 7 + 3
+        sig = ann._code_sig(ann._srp_codes(V.astype(np.float64), W,
+                                           self.BITS))
+        kernel = ann._shard_kernel(planes, self.BITS, 1, self.THR,
+                                   "vec_id", "embedding")
+
+        def shard(code_sig):
+            return pa.table({
+                "shard": np.zeros(len(V), np.int32), "vec_id": ids,
+                "code_sig": code_sig,
+                "embedding": pa.array(list(V), pa.list_(pa.float32()))})
+
+        out = kernel(shard(sig))
+        rows, offsets, tables, buckets, _ = self._blocks(
+            V.astype(np.float64), W)
+        _, a, b, _ = ann._score_blocks(ids[rows], V[rows], offsets, tables,
+                                       buckets, W, self.BITS, self.THR)
+        assert len(a) > 0
+        assert sorted(zip(out.column("vec_id_a").to_pylist(),
+                          out.column("vec_id_b").to_pylist())) \
+            == sorted(zip(a.tolist(), b.tolist()))
+        bad = sig.copy()
+        bad[17] ^= 1
+        with pytest.raises(RuntimeError, match="code_sig"):
+            kernel(shard(bad))

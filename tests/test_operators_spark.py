@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 from dedupe_rust_spark.operators import ann, multimodal, textops
 
 
-def _python_bytes_sent_by_last_query(spark) -> float:
-    """Sum of the "data sent to Python workers" SQL metric over every node
-    of the session's latest SQL execution (readable with the UI off)."""
+def _last_query_metric(spark, name: str) -> float:
+    """Sum of one SQL metric (a byte size or a count) over every node of
+    the session's latest SQL execution (readable with the UI off)."""
     units = {"B": 1, "KiB": 2 ** 10, "MiB": 2 ** 20, "GiB": 2 ** 30}
     # metrics reach the store through the listener bus, after the action
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
@@ -20,16 +20,21 @@ def _python_bytes_sent_by_last_query(spark) -> float:
     ex = execs.apply(execs.length() - 1).executionId()
     values = store.executionMetrics(ex)
     nodes = store.planGraph(ex).allNodes()
-    sent = 0.0
+    total = 0.0
     for i in range(nodes.length()):
         metrics = nodes.apply(i).metrics()
         for j in range(metrics.length()):
             m = metrics.apply(j)
             v = values.get(m.accumulatorId())
-            if m.name() == "data sent to Python workers" and v.isDefined():
-                num, unit = v.get().split("\n")[-1].split(" (")[0].split()
-                sent += float(num.replace(",", "")) * units[unit]
-    return sent
+            if m.name() == name and v.isDefined():
+                num, *unit = v.get().split("\n")[-1].split(" (")[0].split()
+                total += float(num.replace(",", "")) * units[unit[0] if unit
+                                                             else "B"]
+    return total
+
+
+def _python_bytes_sent_by_last_query(spark) -> float:
+    return _last_query_metric(spark, "data sent to Python workers")
 
 
 @pytest.fixture(scope="module")
@@ -183,12 +188,25 @@ class TestANN:
         sent = _python_bytes_sent_by_last_query(spark)
         assert 0 < sent <= bound, (sent, bound)
 
+    def test_lsh_pairs_band_exchange_row_bound(self, spark, emb):
+        """Banding is map-side: each vector crosses the one shuffle as at
+        most min(S, n_tables) narrow (shard, id, code_sig) rows, one per
+        score shard its blocks hash to, with no spread of the input and no
+        row per (table, bucket)."""
+        n_tables = 64
+        n = emb.count()
+        shards = 2 * spark.sparkContext.defaultParallelism
+        ann.lsh_cosine_pairs(emb, threshold=0.35, n_tables=n_tables).collect()
+        written = _last_query_metric(spark, "shuffle records written")
+        assert 0 < written <= n * min(shards, n_tables), (written, n)
+
     def test_lsh_pairs_degenerate_buckets_any_split(self, spark, tmp_path):
         """bits=1, n_tables=2 cuts ~5k random vectors into four ~2.5k-member
         blocks. The pairs equal a numpy brute force over the pairs that
         share a bucket in some table, and do not depend on the input's
         split count: 1 split (broadcast attach, 2 x par shards), 2 x par
-        and 7 x par splits (shuffled id attach, that many shards)."""
+        and 7 x par splits (vectors ride the banded rows, that many
+        shards)."""
         import pandas as pd
 
         rng = np.random.RandomState(11)
@@ -220,8 +238,11 @@ class TestANN:
                                            threshold=thr, bits=1,
                                            n_tables=2, dim=dim)
                 plan = got._jdf.queryExecution().executedPlan().toString()
-                join = "BroadcastHashJoin" if parts == 1 else "SortMergeJoin"
-                assert join in plan, plan
+                if parts == 1:
+                    assert "BroadcastHashJoin" in plan, plan
+                else:   # the banded rows carry their vectors: no join
+                    assert "Join" not in plan, plan
+                    assert plan.count("Exchange hashpartitioning(") == 1, plan
                 outs.append(sorted(got.collect()))
         finally:
             spark.conf.set(key, saved)

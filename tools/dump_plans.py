@@ -135,17 +135,19 @@ def main() -> None:
     # 7. SRP-LSH near-dup pairs, scored block-locally
     sections.append((
         "SRP-LSH near-dup pairs (block-local scoring)",
-        "Exactly ONE hashpartitioning Exchange: the narrow (vec_id, table, "
-        "bucket) band stream, partitioned by the expression "
-        "pmod(xxhash64(table, bucket), S) into S score shards — no shard "
-        "column is shuffled. The ObjectHashAggregate to one (shard, vec_id) "
-        "row with its collect_list of (table, bucket) is satisfied by that "
-        "partitioning. Vectors attach to those rows by a BroadcastHashJoin "
-        "(BuildRight), which keeps it, so each vector reaches Python at "
-        "most min(S, n_tables) times. ONE FlatMapGroupsInArrow per shard "
-        "rebuilds its blocks and scores them (batched matmul, emit-once); "
-        "round + threshold filter stay JVM-side. No pair-keyed exchange or "
-        "distinct, and no join of pairs to vectors.",
+        "Exactly ONE hashpartitioning Exchange and no spread of the "
+        "input: ONE ArrowEvalPython (_shard_band_udf) bands each vector "
+        "map-side into struct<sig, shards> and a Generate explode makes one "
+        "narrow (shard, vec_id, code_sig) row per score shard its (table, "
+        "bucket) blocks hash to — at most min(S, n_tables) rows per vector, "
+        "not one per table. Those rows take repartition(S, shard); vectors "
+        "attach after it by a BroadcastHashJoin (BuildRight), which keeps "
+        "the partitioning (a corpus above the broadcast threshold carries "
+        "the embedding on the banded rows instead: no join). ONE "
+        "FlatMapGroupsInArrow per shard recomputes the codes, checks them "
+        "against code_sig, rebuilds its blocks and scores them (batched "
+        "matmul, emit-once); round + threshold filter stay JVM-side. No "
+        "pair-keyed exchange or distinct, and no join of pairs to vectors.",
         fmt(ann.lsh_cosine_pairs(emb, threshold=0.35)),
     ))
 
