@@ -10,7 +10,8 @@ generalized to Common-Crawl-style web pages:
       -> signatures (sha256 / prefix-hash / SimHash / MinHash)
       -> blocking (exact keys + MinHash-LSH bands, salted for skew)
       -> candidate pairs (block self-join, url_a < url_b)
-      -> scoring (vectorized Jaro-Winkler / Levenshtein / Jaccard)
+      -> scoring (vectorized Levenshtein + MinHash-Jaccard estimate,
+         exact Jaccard refine near the threshold)
       -> match edges -> connected components -> clusters
       -> metrics / lineage, checkpointed + resumable
 

@@ -1,10 +1,14 @@
-"""Pairwise similarity scorers: Jaro-Winkler, Levenshtein ratio, Jaccard.
+"""Pairwise similarity scorers: Levenshtein ratio and exact shingle Jaccard.
 
 Reference analog: the deep verification tier (`hash_image` equality,
 /root/reference/src/main.rs:593-624) — the reference only ever tests
 *equality*; these scorers are the fuzzy generalization required by the
-north rule. numpy-vectorized inner loops (no per-char Python in the DP),
-batched over candidate pairs from an Arrow pandas UDF.
+north rule. They are exactly what the match decision reads
+(is_match := lev_sim >= 0.85 OR jaccard >= 0.50, operators/scoring.py):
+the scorer UDF runs lev_sim_batch on every slow-path pair and
+jaccard_batch only to refine a MinHash estimate near the threshold.
+numpy-vectorized inner loops (no per-char Python in the DP), batched over
+candidate pairs from an Arrow pandas UDF.
 """
 
 from __future__ import annotations
@@ -13,61 +17,9 @@ import numpy as np
 
 from .sigcore import shingle_set
 
-SCORE_VERSION = "1"
-
 # Texts longer than this score Levenshtein at token level (words) instead of
 # char level: the DP is O(len_a) numpy row-ops, so cap the row count.
 LEV_CHAR_CAP = 256
-
-# Jaro-Winkler is a prefix-weighted name-similarity metric; on documents we
-# compute it over the head only. O(len^2) matrix + O(len) loop per pair, so
-# this cap bounds the dominant scoring cost (engine semantics, versioned).
-JW_CHAR_CAP = 160
-
-
-def jaro(a: str, b: str) -> float:
-    if a == b:
-        return 1.0
-    la, lb = len(a), len(b)
-    if la == 0 or lb == 0:
-        return 0.0
-    window = max(la, lb) // 2 - 1
-    if window < 0:
-        window = 0
-    aa = np.frombuffer(a.encode("utf-32-le"), dtype=np.uint32)
-    bb = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    # match matrix restricted to the Jaro window, greedy left-to-right
-    eq = aa[:, None] == bb[None, :]
-    idx_a = np.arange(la)[:, None]
-    idx_b = np.arange(lb)[None, :]
-    eq &= np.abs(idx_a - idx_b) <= window
-    b_taken = np.zeros(lb, dtype=bool)
-    a_match: list[int] = []
-    b_match: list[int] = []
-    for i in range(la):
-        row = eq[i] & ~b_taken
-        j = int(np.argmax(row))
-        if row[j]:
-            b_taken[j] = True
-            a_match.append(i)
-            b_match.append(j)
-    m = len(a_match)
-    if m == 0:
-        return 0.0
-    t = int(np.sum(aa[a_match] != bb[np.sort(np.asarray(b_match))])) / 2
-    return (m / la + m / lb + (m - t) / m) / 3
-
-
-def jaro_winkler(a: str, b: str, p: float = 0.1, max_prefix: int = 4) -> float:
-    j = jaro(a, b)
-    if j <= 0.7:
-        return j
-    prefix = 0
-    for ca, cb in zip(a[:max_prefix], b[:max_prefix]):
-        if ca != cb:
-            break
-        prefix += 1
-    return j + prefix * p * (1 - j)
 
 
 def _lev_dp(a_codes: np.ndarray, b_codes: np.ndarray) -> int:
@@ -137,14 +89,6 @@ def jaccard_shingles(a: str, b: str) -> float:
         return 0.0
     inter = len(sa & sb)
     return inter / (len(sa) + len(sb) - inter)
-
-
-def score_pair(a: str, b: str) -> tuple[float, float, float]:
-    return (
-        jaro_winkler(a[:JW_CHAR_CAP], b[:JW_CHAR_CAP]),
-        lev_sim(a, b),
-        jaccard_shingles(a, b),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -225,73 +169,8 @@ def _lev_dp_batch(A: np.ndarray, la: np.ndarray, B: np.ndarray,
     return prev[np.arange(m), lb]
 
 
-def jw_batch(texts_a: list[str], texts_b: list[str],
-             cap: int = JW_CHAR_CAP) -> np.ndarray:
-    """Batched Jaro-Winkler over the capped heads (same semantics as
-    jaro_winkler(a[:cap], b[:cap]))."""
-    n = len(texts_a)
-    codes_a = [_codes(a[:cap]) for a in texts_a]
-    codes_b = [_codes(b[:cap]) for b in texts_b]
-    A, la = _pad_codes(codes_a)
-    B, lb = _pad_codes(codes_b)
-    wb = B.shape[1]
-    win = np.maximum(np.maximum(la, lb) // 2 - 1, 0)
-    jidx = np.arange(wb)
-    taken = np.zeros((n, wb), dtype=bool)
-    mcount = np.zeros(n, dtype=np.int64)
-    a_seq = np.zeros((n, A.shape[1]), dtype=np.uint32)
-    b_pos = np.zeros((n, A.shape[1]), dtype=np.int64)
-    rows = np.arange(n)
-    for i in range(A.shape[1]):
-        live = la > i
-        if not live.any():
-            break
-        row_eq = (B == A[:, i : i + 1]) & ~taken
-        row_eq &= np.abs(jidx[None, :] - i) <= win[:, None]
-        row_eq &= jidx[None, :] < lb[:, None]
-        row_eq &= live[:, None]
-        j = np.argmax(row_eq, axis=1)
-        found = row_eq[rows, j]
-        fr = rows[found]
-        taken[fr, j[found]] = True
-        a_seq[fr, mcount[found]] = A[fr, i]
-        b_pos[fr, mcount[found]] = j[found]
-        mcount[found] += 1
-    # transpositions: matched b codes in b-order vs matched a codes in a-order
-    half_t = np.zeros(n)
-    jaro = np.zeros(n)
-    for p in rows[mcount > 0]:
-        mc = mcount[p]
-        bp = np.sort(b_pos[p, :mc])
-        half_t[p] = np.count_nonzero(a_seq[p, :mc] != B[p, bp]) / 2
-        jaro[p] = (mc / la[p] + mc / lb[p] + (mc - half_t[p]) / mc) / 3
-    # Winkler prefix boost (only when jaro > 0.7)
-    kmax = min(4, A.shape[1], wb)
-    if kmax > 0:
-        pre_eq = (A[:, :kmax] == B[:, :kmax]) & (A[:, :kmax] != _PAD)
-        prefix = np.cumprod(pre_eq, axis=1).sum(axis=1)
-    else:
-        prefix = np.zeros(n, dtype=np.int64)
-    boost = jaro > 0.7
-    jw = np.where(boost, jaro + prefix * 0.1 * (1 - jaro), jaro)
-    # empty == empty is a perfect match (per-pair a==b shortcut)
-    return np.where((la == 0) & (lb == 0), 1.0, jw)
-
-
 def jaccard_batch(texts_a: list[str], texts_b: list[str]) -> np.ndarray:
     return np.fromiter(
         (jaccard_shingles(a, b) for a, b in zip(texts_a, texts_b)),
         dtype=np.float64, count=len(texts_a),
-    )
-
-
-def score_batch(texts_a: list[str], texts_b: list[str]
-                ) -> tuple[np.ndarray, np.ndarray]:
-    """Hot-path scorer batch: (jw, lev_sim) only. Jaccard is estimated
-    JVM-side from MinHash signatures (operators/scoring.py) — re-shingling
-    both texts per pair here was round-1's dominant Python cost; the exact
-    shingle Jaccard above stays as the pytest oracle for the estimate."""
-    return (
-        jw_batch(texts_a, texts_b),
-        lev_sim_batch(texts_a, texts_b),
     )

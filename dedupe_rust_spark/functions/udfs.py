@@ -4,8 +4,9 @@ Exactly three UDF families (SURVEY.md §2.1), everything else is built-in
 Catalyst expressions:
   * extract_text_udf : html binary -> text        (parity-critical, G3/D3)
   * signatures_udf   : text -> (simhash, LSH bands, minhash) (H1 gen.)
-  * score_pairs_udf  : (text_a, text_b) -> (jw, lev_sim) (D1/D2; jaccard
-    is MinHash-estimated JVM-side in operators/scoring.py)
+  * score_pairs_udf  : (text_a, text_b, jacc_est) -> (lev_sim, jaccard)
+    (D1/D2; jaccard is MinHash-estimated JVM-side in operators/scoring.py
+    and refined here only near the threshold)
 
 All are Series-scalar UDFs over Arrow batches; the inner loops are the
 numpy-vectorized cores in textcore / sigcore / scorecore.
@@ -95,49 +96,35 @@ JACC_REFINE_LO, JACC_REFINE_HI = refine_bounds(0.50)
 
 
 def make_score_pairs_udf(refine_lo: float = JACC_REFINE_LO,
-                         refine_hi: float = JACC_REFINE_HI,
-                         compute_jw: bool = True):
-    """Build the pair-scorer pandas UDF for a given refine band.
-
-    compute_jw=False skips the Jaro-Winkler batch entirely (jaro_winkler
-    column = null): jw does not participate in the match decision
-    (is_match = lev OR jaccard, operators/scoring.py), so in the hot
-    pipeline it is dead CPU — an O(cap^2) matrix loop per Arrow batch.
-    It stays available for callers that ask for it (reports, analysis).
-    """
+                         refine_hi: float = JACC_REFINE_HI):
+    """Build the pair-scorer pandas UDF for a given refine band: the two
+    columns the match decision reads (is_match = lev OR jaccard,
+    operators/scoring.py), nothing else."""
 
     @pandas_udf(SCORE_UDF_RESULT)
     def score_pairs(text_a: pd.Series, text_b: pd.Series,
                     jacc_est: pd.Series) -> pd.DataFrame:
-        n = len(text_a)
-        jw = np.zeros(n)
-        lev = np.zeros(n)
+        lev = np.zeros(len(text_a))
         jac = jacc_est.to_numpy(dtype=np.float64, na_value=0.0).copy()
         keep = [
             i for i, (a, b) in enumerate(zip(text_a, text_b))
             if isinstance(a, str) and isinstance(b, str)
         ]
         if keep:
-            ta = [text_a.iloc[i] for i in keep]
-            tb = [text_b.iloc[i] for i in keep]
-            lev[keep] = scorecore.lev_sim_batch(ta, tb)
-            if compute_jw:
-                jw[keep] = scorecore.jw_batch(ta, tb)
+            lev[keep] = scorecore.lev_sim_batch(
+                [text_a.iloc[i] for i in keep],
+                [text_b.iloc[i] for i in keep])
             refine = [i for i in keep
                       if refine_lo <= jac[i] <= refine_hi]
             if refine:
                 jac[refine] = scorecore.jaccard_batch(
                     [text_a.iloc[i] for i in refine],
                     [text_b.iloc[i] for i in refine])
-        jw_out = (pd.Series(jw) if compute_jw
-                  else pd.array([None] * n, dtype="Float64"))  # real nulls,
-        # matching the fast path's lit(None) — NaN would survive as NaN
-        return pd.DataFrame(
-            {"jaro_winkler": jw_out, "lev_sim": lev, "jaccard": jac})
+        return pd.DataFrame({"lev_sim": lev, "jaccard": jac})
 
     return score_pairs
 
 
-# default instance (jw on, 0.50-threshold band) — unit tests and the bench
-# warmup exercise the full scorer surface through this
+# default instance (0.50-threshold band) — unit tests and the bench warmup
+# exercise the scorer through this
 score_pairs_udf = make_score_pairs_udf()

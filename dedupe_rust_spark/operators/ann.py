@@ -28,8 +28,6 @@ import numpy as np
 import pyarrow as pa  # noqa: F401 — resolves the Arrow UDF type hints
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-SRP_BITS = 16  # 2^16 buckets; tune to corpus size / recall target
-
 
 def _dot(a, b):
     return F.aggregate(
@@ -146,14 +144,6 @@ def _srp_buckets_udf(planes, bits: int):
                        T.LongType())
 
 
-def srp_bucket(df: DataFrame, vec_col: str = "embedding",
-               bits: int = SRP_BITS, dim: int = 64, seed: int = 42) -> DataFrame:
-    """Signed-random-projection bucket id per row (one table), from the
-    batched matmul UDF over a deterministic seeded plane matrix."""
-    udf = _srp_buckets_udf(_srp_planes(bits, 1, dim, seed), bits)
-    return df.withColumn("bucket", udf(F.col(vec_col))[0])
-
-
 def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding", bits: int = 4,
                     n_tables: int = 8, dim: int = 64, seed: int = 42,
@@ -164,10 +154,10 @@ def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
     10^9 rows this is one key stream instead of n_tables separate plans.
 
     seed_per_table=True draws table t's hyperplanes from RandomState(seed+t)
-    (first `bits` rows) — the exact plane family of the per-table
-    srp_bucket(seed=seed+t) loop, so callers migrating from per-table plans
-    keep identical bucket assignments. Default False is the one-stream
-    family lsh_cosine_pairs bands with (its equality oracle pins it)."""
+    (first `bits` rows) — the exact plane family of a one-table-per-seed
+    loop, so callers migrating from per-table plans keep identical bucket
+    assignments. Default False is the one-stream family lsh_cosine_pairs
+    bands with (its equality oracle pins it)."""
     udf = _srp_buckets_udf(
         _srp_planes(bits, n_tables, dim, seed, seed_per_table), bits)
     # block_key is an 8-byte long (xxhash64 of table+bucket), matching the
@@ -184,12 +174,14 @@ def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
 _TILE = 256  # score rows per matmul: <= _TILE * max(m, _TILE) floats each
 
 
-def _score_blocks(ids: np.ndarray, V: np.ndarray, offsets: np.ndarray,
-                  tables: np.ndarray, buckets: np.ndarray, W: np.ndarray,
-                  bits: int, threshold: float, stats: dict | None = None):
-    """Block-local cosine join over a batch of SRP blocks. Block i owns rows
-    offsets[i]:offsets[i+1] of ids/V and is bucket buckets[i] of table
-    tables[i]. Returns (block, vec_id_a < vec_id_b, unrounded cosine).
+def _score_blocks(V: np.ndarray, codes: np.ndarray, rows: np.ndarray,
+                  offsets: np.ndarray, tables: np.ndarray, threshold: float,
+                  stats: dict | None = None):
+    """Block-local cosine join over a batch of SRP blocks. V is a float64
+    (n, dim) matrix and codes its (n, n_tables) SRP codes (_srp_codes).
+    Block i owns the V rows rows[offsets[i]:offsets[i+1]], which share
+    their table-tables[i] code. Returns (row_a, row_b, unrounded cosine),
+    row indices into V, each pair once.
 
     1. Screen with float32 normalized cosines, one batched matmul per block
        size (score arrays of <= _TILE^2 floats, or (_TILE, m) row tiles of
@@ -203,53 +195,47 @@ def _score_blocks(ids: np.ndarray, V: np.ndarray, offsets: np.ndarray,
     stats, if given, gets "max_tile" (floats in the largest score array)."""
     sizes = np.diff(offsets)
     row_block = np.repeat(np.arange(len(sizes)), sizes)
-    # a vector recurs in up to n_tables blocks: per-vector work runs once
-    uids, first, vec = np.unique(ids, return_index=True, return_inverse=True)
-    Vu = V[first].astype(np.float64)
-    codes = _srp_codes(Vu, W, bits)                     # (n_vec, n_tables)
-    if not np.array_equal(codes[vec, tables[row_block]], buckets[row_block]):
-        raise RuntimeError("SRP codes recomputed in the block kernel differ "
-                           "from the banding's bucket ids")
-    VT = np.ascontiguousarray(Vu.T)
-    nsq = np.zeros(len(Vu))
+    VT = np.ascontiguousarray(V.T)
+    nsq = np.zeros(len(V))
     for x in VT:
         nsq += x * x
     with np.errstate(divide="ignore", invalid="ignore"):
-        U = (Vu / np.sqrt(nsq)[:, None]).astype(np.float32)
+        U = (V / np.sqrt(nsq)[:, None]).astype(np.float32)
     cut = np.float32(threshold - 1e-3)
-    ra, rb, max_tile = [np.empty(0, np.int64)], [np.empty(0, np.int64)], 0
+    pos_a, pos_b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    max_tile = 0
     for m in np.unique(sizes[sizes > 1]).tolist():
         starts = offsets[:-1][sizes == m]
         step = max(1, _TILE * _TILE // (m * m))
         for c in range(0, len(starts), step):
-            rows = starts[c:c + step, None] + np.arange(m)     # (k, m)
-            X = U[vec[rows]]                                   # (k, m, dim)
+            pos = starts[c:c + step, None] + np.arange(m)      # (k, m)
+            X = U[rows[pos]]                                   # (k, m, dim)
             for r0 in range(0, m, _TILE):
                 S = X[:, r0:r0 + _TILE] @ X[:, r0:].transpose(0, 2, 1)
                 max_tile = max(max_tile, S.size)
                 upper = np.arange(S.shape[2]) > np.arange(S.shape[1])[:, None]
                 k, i, j = np.nonzero(~(S < cut) & upper)
-                ra.append(rows[k, r0 + i])
-                rb.append(rows[k, r0 + j])
+                pos_a.append(pos[k, r0 + i])
+                pos_b.append(pos[k, r0 + j])
     if stats is not None:
         stats["max_tile"] = max_tile
-    ra, rb = np.concatenate(ra), np.concatenate(rb)
-    blk, ua, ub = row_block[ra], vec[ra], vec[rb]
+    pos_a, pos_b = np.concatenate(pos_a), np.concatenate(pos_b)
+    blk, ra, rb = row_block[pos_a], rows[pos_a], rows[pos_b]
     # first table where each pair's codes agree; every pair agrees in its
     # own block's table, so the open set empties by tables.max()
     lowest, open_ = np.empty(len(ra), np.int64), np.arange(len(ra))
     for u, code in enumerate(codes.T):
-        agree = code[ua[open_]] == code[ub[open_]]
+        agree = code[ra[open_]] == code[rb[open_]]
         lowest[open_[agree]] = u
         open_ = open_[~agree]
     keep = lowest == tables[blk]
-    blk, ua, ub = blk[keep], ua[keep], ub[keep]
-    dot = np.zeros(len(ua))
+    ra, rb = ra[keep], rb[keep]
+    dot = np.zeros(len(ra))
     for x in VT:
-        dot += x[ua] * x[ub]
+        dot += x[ra] * x[rb]
     with np.errstate(divide="ignore", invalid="ignore"):
-        cos = dot / (np.sqrt(nsq[ua]) * np.sqrt(nsq[ub]))
-    return blk, uids[np.minimum(ua, ub)], uids[np.maximum(ua, ub)], cos
+        cos = dot / (np.sqrt(nsq[ra]) * np.sqrt(nsq[rb]))
+    return ra, rb, cos
 
 
 def _mix64(x: np.ndarray) -> np.ndarray:
@@ -318,15 +304,15 @@ def _shard_kernel(planes, bits: int, shards: int, threshold: float,
     cosine). The rows are every vector with a block in this shard, so the
     shard's complete blocks are the (row, table) entries whose block
     hashes here; one _score_blocks call scores them. The codes are
-    recomputed once and must reproduce each row's code_sig, else the
-    banding and the kernel disagree on some table's bucket."""
+    computed once per shard and must reproduce each row's code_sig, else
+    the banding and the kernel disagree on some table's bucket."""
     W = planes.T.copy()
 
     def score_shard(shard: pa.Table) -> pa.Table:
         ids = shard.column(id_col).combine_chunks().to_numpy()
         V = _dense_rows(shard.column(vec_col).combine_chunks(),
-                        W.shape[0])[1]
-        codes = _srp_codes(V.astype(np.float64), W, bits)
+                        W.shape[0])[1].astype(np.float64)
+        codes = _srp_codes(V, W, bits)
         sig = shard.column("code_sig").combine_chunks().to_numpy()
         if not np.array_equal(_code_sig(codes), sig):
             raise RuntimeError("SRP codes recomputed in the block kernel "
@@ -340,11 +326,12 @@ def _shard_kernel(planes, bits: int, shards: int, threshold: float,
                                     | (bucket[1:] != bucket[:-1])])
         sizes = np.diff(np.r_[head, len(row)])
         multi = sizes > 1
-        row = row[np.repeat(multi, sizes)]
-        _, a, b, cos = _score_blocks(
-            ids[row], V[row], np.r_[0, np.cumsum(sizes[multi])],
-            table[head[multi]], bucket[head[multi]], W, bits, threshold)
-        return pa.table({"vec_id_a": a, "vec_id_b": b, "cosine": cos})
+        ra, rb, cos = _score_blocks(
+            V, codes, row[np.repeat(multi, sizes)],
+            np.r_[0, np.cumsum(sizes[multi])], table[head[multi]], threshold)
+        return pa.table({"vec_id_a": np.minimum(ids[ra], ids[rb]),
+                         "vec_id_b": np.maximum(ids[ra], ids[rb]),
+                         "cosine": cos})
 
     return score_shard
 
@@ -588,7 +575,7 @@ def lsh_cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
     candidate if it collides in ANY of `n_tables` independent SRP tables
     (candidate prob = 1-(1-(1-theta/pi)^bits)^n_tables). All tables come
     from ONE srp_band_blocks pass per side — one corpus scan + one explode
-    (round-2 looped srp_bucket per table: n_tables separate corpus scans
+    (round 2 looped a one-table bucketing per table: n_tables corpus scans
     + unionAll). seed_per_table=True keeps the per-table plane family, so
     candidate sets — and the output rows — are identical to the loop form.
     Candidates are distinct'd, vectors attached once, scored once, window

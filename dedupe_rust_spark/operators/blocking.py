@@ -143,11 +143,11 @@ def title_blocks(reps: DataFrame) -> DataFrame:
     their title, and LSH recall sags near the decision boundary. Analog of
     the reference's secondary exact key (ext within dimension groups,
     main.rs:376). All built-in expressions — stays in codegen. The literal
-    marker keeps title keys out of the band-key hash space."""
-    first = (F.col("first_line") if "first_line" in reps.columns
-             else _first_line(F.col("text")))
+    marker keeps title keys out of the band-key hash space. `reps` carry
+    first_line (exact_representatives)."""
     return reps.select(
-        F.xxhash64(F.lit("title"), F.col("host"), first).alias("block_key"),
+        F.xxhash64(F.lit("title"), F.col("host"), F.col("first_line"))
+        .alias("block_key"),
         "id",
     )
 

@@ -11,7 +11,7 @@ moves 16 bytes of key per row instead of two url strings (~120-160 B).
 urls are joined back once at cluster output.
 
 Scale: the join shuffles on block_key; AQE skew-join splits hot keys.
-An optional SimHash prefilter (hamming <= threshold via xor+bit_count,
+A SimHash prefilter (hamming <= threshold via xor+bit_count,
 all JVM-side) cheaply kills low-similarity pairs before pandas scoring.
 """
 
@@ -142,22 +142,19 @@ def pair_stream_stats(grouped: DataFrame, star_min_block: int | None = None
     }
 
 
-def simhash_prefilter(pairs: DataFrame, sig: DataFrame,
-                      max_hamming: int = SIMHASH_HAMMING_MAX,
-                      short_bypass: int = SHORT_TEXT_BYPASS) -> DataFrame:
-    """Join simhashes onto pairs and keep hamming(sim_a, sim_b) <= max.
-    bit_count(a XOR b) is a codegen'd JVM expression — no Python.
-    Short texts bypass the filter (see SHORT_TEXT_BYPASS)."""
+def simhash_prefilter(pairs: DataFrame, sig: DataFrame) -> DataFrame:
+    """Join simhashes onto pairs and keep hamming(sim_a, sim_b) <=
+    SIMHASH_HAMMING_MAX. bit_count(a XOR b) is a codegen'd JVM expression
+    — no Python. Short texts bypass the filter (see SHORT_TEXT_BYPASS)."""
     sh = sig.select("id", "simhash", "n_chars")
-    out = (
+    return (
         pairs
         .join(sh.withColumnsRenamed(
             {"id": "id_a", "simhash": "_sa", "n_chars": "_na"}), "id_a")
         .join(sh.withColumnsRenamed(
             {"id": "id_b", "simhash": "_sb", "n_chars": "_nb"}), "id_b")
         .withColumn("_ham", F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))))
-        .filter((F.col("_ham") <= max_hamming)
-                | (F.least("_na", "_nb") < short_bypass))
+        .filter((F.col("_ham") <= SIMHASH_HAMMING_MAX)
+                | (F.least("_na", "_nb") < SHORT_TEXT_BYPASS))
         .drop("_sa", "_sb", "_ham", "_na", "_nb")
     )
-    return out

@@ -102,36 +102,36 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
         .filter(F.col("src") != F.col("dst"))
         .localCheckpoint()
     )
-    mappings: list[DataFrame] = []
-    used_driver_finish = False
-    # entry short-circuit, same bound as the mid-loop tail: a graph that
-    # ALREADY fits the driver-finish budget gains nothing from a
-    # distributed level — each level is ~8 driver-synchronized jobs whose
-    # barrier latency dwarfs the work on a sub-100k-edge graph (the
-    # embedding-cluster and small-corpus paths). The count reads the
-    # just-materialized checkpoint (cheap); at pipeline scale the count
-    # exceeds the bound and the loop proceeds unchanged.
+    # the current edge count decides each level: a graph that already
+    # fits the driver-finish budget gains nothing from a distributed
+    # level — each level is ~8 driver-synchronized jobs whose barrier
+    # latency dwarfs the work on a sub-100k-edge graph (the
+    # embedding-cluster and small-corpus paths). Level 0 counts the
+    # just-materialized checkpoint (cheap); later levels read the count
+    # observed on their own materialization. Pure-distributed mode pays
+    # no entry count.
+    n_edges = None
     if driver_finish_edges > 0:
         n_edges = cur.count()
         if stats is not None:
             stats["input_edges"] = n_edges
-        if 0 < n_edges <= driver_finish_edges:
+    mappings: list[DataFrame] = []
+    used_driver_finish = False
+    for level in range(max_iter):
+        if n_edges == 0:
+            break
+        if n_edges is not None and n_edges <= driver_finish_edges:
+            # exact tail: union-find over the (contracted) label graph
             from ..functions.ccore import connected_components as uf_cc
 
             sc.setJobDescription("cc:driver_finish")
             uf = uf_cc([(r["src"], r["dst"]) for r in cur.collect()])
-            fin = edges.sparkSession.createDataFrame(
-                list(uf.items()),
-                schema=cur.select(
+            mappings.append(edges.sparkSession.createDataFrame(
+                list(uf.items()), schema=cur.select(
                     F.col("src").alias("node"),
-                    F.col("dst").alias("label")).schema)
-            sc.setJobDescription(None)
-            if stats is not None:
-                stats["driver_finish"] = True
-                stats["levels"] = 0
-                stats["mappings"] = 1
-            return fin.select("node", F.col("label").alias("cluster_id"))
-    for level in range(max_iter):
+                    F.col("dst").alias("label")).schema))
+            used_driver_finish = True
+            break
         sc.setJobDescription(f"cc:level{level}")
         sym = cur.select(
             F.col("src").alias("node"), F.col("dst").alias("nbr")
@@ -200,23 +200,9 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .localCheckpoint()
         )
         # may over-count under task retries (see `moved` above): a spurious
-        # n_next > driver_finish_edges only keeps this level distributed,
-        # and the contracted edges themselves are exact
-        n_next = int(obs_n.get["n"])
-        if n_next == 0:
-            break
-        if n_next <= driver_finish_edges and driver_finish_edges > 0:
-            # exact tail: union-find over the contracted label graph
-            from ..functions.ccore import connected_components as uf_cc
-
-            sc.setJobDescription("cc:driver_finish")
-            uf = uf_cc([(r["src"], r["dst"]) for r in nxt.collect()])
-            fin = edges.sparkSession.createDataFrame(
-                list(uf.items()), schema=lab.select(
-                    "node", "label").schema)
-            mappings.append(fin.localCheckpoint())
-            used_driver_finish = True
-            break
+        # count > driver_finish_edges only keeps the next level
+        # distributed, and the contracted edges themselves are exact
+        n_edges = int(obs_n.get["n"])
         cur = nxt
     if stats is not None:
         stats["driver_finish"] = used_driver_finish
@@ -227,9 +213,11 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
         stats["mappings"] = len(mappings)
     # compose coarse-to-fine: final(node) = m_k(... m_1(node)). Labels
     # absent from the coarser map (their component already terminal) pass
-    # through via the left join + coalesce.
+    # through via the left join + coalesce. No mapping = no edges: the
+    # (empty) edge list is the (empty) labels frame.
     sc.setJobDescription("cc:compose")
-    final = mappings[-1]
+    final = (mappings[-1] if mappings else cur.select(
+        F.col("src").alias("node"), F.col("dst").alias("label")))
     for lab in reversed(mappings[:-1]):
         coarse = final.select(F.col("node").alias("label"),
                               F.col("label").alias("_l2"))

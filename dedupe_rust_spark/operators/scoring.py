@@ -2,8 +2,8 @@
 
 Reference analog: the deep verification tier (full decode + hash equality,
 /root/reference/src/main.rs:586-648) — generalized to Levenshtein-ratio /
-Jaccard with a match decision (Jaro-Winkler is computed only on request:
-it never participates in the decision, see `compute_jw`).
+MinHash-Jaccard with a match decision. The scores rows carry exactly what
+that decision reads: (id_a, id_b, lev_sim, jaccard, is_match).
 
 Pairs arrive and leave as surrogate LONG ids (id_a, id_b) — the key
 currency of the whole fuzzy path; urls are joined back once at cluster
@@ -109,12 +109,11 @@ def attach_estimates(pairs: DataFrame, sig: DataFrame,
 def score_estimated(est_pairs: DataFrame, sig: DataFrame,
                     lev_match: float = LEV_MATCH,
                     jaccard_match: float = JACCARD_MATCH,
-                    compute_jw: bool = False,
                     prefilter: bool = True) -> DataFrame:
     """Fast/slow split on the estimate:
       * est >= max(refine_hi, jaccard_match): is_match is already
         decided TRUE (jaccard path; lev cannot flip a True) — no text
-        join, no UDF. jw/lev are null on these rows.
+        join, no UDF. lev_sim is null on these rows.
       * below the cut OR est is NULL (a side with no minhash signature):
         texts attached, scorer UDF runs with the estimate's na treated as
         0.0, exact Jaccard refinement inside the decision band. Null
@@ -122,15 +121,11 @@ def score_estimated(est_pairs: DataFrame, sig: DataFrame,
         MUST NOT vanish — the filters are complementary by construction.
     On web corpora most LSH candidates are true near-dups, so the fast
     path removes the text shuffle + Python scoring for the bulk of pairs.
-
-    compute_jw=True additionally emits Jaro-Winkler on slow-path rows
-    (null on fast-path rows); it never affects is_match.
     """
     refine_lo, refine_hi = refine_bounds(jaccard_match)
     fast_cut = max(refine_hi, jaccard_match)
     fast = est_pairs.filter(F.col("jacc_est") >= fast_cut).select(
         "id_a", "id_b",
-        F.lit(None).cast("double").alias("jaro_winkler"),
         F.lit(None).cast("double").alias("lev_sim"),
         F.col("jacc_est").alias("jaccard"),
         F.lit(True).alias("is_match"),
@@ -167,13 +162,12 @@ def score_estimated(est_pairs: DataFrame, sig: DataFrame,
     # parallelism on the most expensive per-row stage.
     par = est_pairs.sparkSession.sparkContext.defaultParallelism
     slow = slow.repartition(2 * par)
-    score_udf = make_score_pairs_udf(refine_lo, refine_hi, compute_jw)
+    score_udf = make_score_pairs_udf(refine_lo, refine_hi)
     scored = slow.withColumn(
         "s", score_udf(F.col("_ta"), F.col("_tb"), F.col("jacc_est"))
     ).select(
         "id_a",
         "id_b",
-        F.col("s.jaro_winkler").alias("jaro_winkler"),
         F.col("s.lev_sim").alias("lev_sim"),
         F.col("s.jaccard").alias("jaccard"),
         (
@@ -187,13 +181,11 @@ def score_estimated(est_pairs: DataFrame, sig: DataFrame,
 def score_candidates(pairs: DataFrame, sig: DataFrame,
                      lev_match: float = LEV_MATCH,
                      jaccard_match: float = JACCARD_MATCH,
-                     compute_jw: bool = False,
                      prefilter: bool = True) -> DataFrame:
     """attach_estimates + score_estimated in one call (the estimate table
     is lazily materialized since both branches of the split consume it)."""
     est = attach_estimates(pairs, sig, prefilter).localCheckpoint(eager=False)
-    return score_estimated(est, sig, lev_match, jaccard_match, compute_jw,
-                           prefilter)
+    return score_estimated(est, sig, lev_match, jaccard_match, prefilter)
 
 
 def match_edges(scores: DataFrame) -> DataFrame:

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -54,32 +54,14 @@ class PipelineConfig:
     # 32x4). The 24x5/16x8 sweep is recorded in BENCH/BASELINE.md; 32x4
     # stays the default for boundary recall (threshold curve at j=0.5).
     lsh_bands: int | None = None
-    simhash_prefilter: bool = True
-    max_hamming: int = cand.SIMHASH_HAMMING_MAX
     use_golden_text: bool = False
     exclude_hosts: list[str] = field(default_factory=list)
-    # jw never participates in is_match (lev OR jaccard); computing it for
-    # every slow-path pair was pure dead CPU in the hottest UDF. Opt in for
-    # analysis runs that want the column populated.
-    compute_jw: bool = False
     # checkpoints=False is the throughput fast path: no per-partition
     # lineage, no cap census and, without an out_dir, scores fuses into
     # the edge list. Same results; fine-grained metrics are OFF — use for
     # benches, not production runs. An out_dir still writes (and resumes)
     # every stage as parquet.
     checkpoints: bool = True
-    # corpus-row threshold for the scoring attach semi pre-filter
-    # (scoring.attach_estimates/score_estimated prefilter flag): below it
-    # the whole minhash/text projection fits the session's 64 MB broadcast
-    # threshold (~400 B per attach row -> ~150k rows), the attach joins
-    # broadcast sig directly, and the pre-filter's distinct +
-    # broadcast-build jobs are pure serial latency; at/above it the
-    # pre-filter is what keeps the attach from shuffling the corpus
-    # (measured at the 3.2M-page rehearsal). Scale-adaptive, not
-    # local-tuned: the decision input is the corpus row count the
-    # signatures stage already measures. Outputs identical either way
-    # (the pre-filter is a pure filter).
-    attach_prefilter_rows: int = 150_000
 
 
 def _audit_ids(sig: DataFrame) -> int:
@@ -113,6 +95,19 @@ def _audit_ids(sig: DataFrame) -> int:
     return n
 
 
+# corpus-row threshold for the scoring attach semi pre-filter
+# (scoring.attach_estimates/score_estimated prefilter flag), read by
+# DedupPipeline._labels: below it the whole minhash/text projection fits
+# the session's 64 MB broadcast threshold (~400 B per attach row -> ~150k
+# rows), the attach joins broadcast sig directly, and the pre-filter's
+# distinct + broadcast-build jobs are pure serial latency; at/above it the
+# pre-filter is what keeps the attach from shuffling the corpus (measured
+# at the 3.2M-page rehearsal). Scale-adaptive, not local-tuned: the
+# decision input is the corpus row count the signatures stage already
+# measures. Outputs identical either way (the pre-filter is a pure filter).
+ATTACH_PREFILTER_ROWS = 150_000
+
+
 class DedupPipeline:
     """`pages` is a pages dir (or parquet file) for `read_pages`, or an
     already-built DataFrame with the pages(url, warc_ts, html, text, lang)
@@ -131,28 +126,20 @@ class DedupPipeline:
     @property
     def cfg_fingerprint(self) -> str:
         """Checkpoint outputs bake in config values (thresholds, caps,
-        prefilter) — a rerun under the same run_id but a different config
+        bands) — a rerun under the same run_id but a different config
         must NOT silently reuse stale stage parquet. The fingerprint keys
-        the checkpoint path on everything that changes stage outputs."""
+        the checkpoint path on every PipelineConfig field except
+        `checkpoints` (which changes how stages materialize, not what
+        they hold), plus ALGO_VERSION; a new field joins the key by
+        default."""
         import hashlib
         import json
 
-        c = self.cfg
-        payload = json.dumps(
-            {
-                "algo": ALGO_VERSION,
-                "lev": c.lev_match, "jacc": c.jaccard_match,
-                "max_block": c.max_block,
-                "hot_bound": c.hot_block_bound,
-                "star_min": c.star_min_block,
-                "lsh_bands": c.lsh_bands,
-                "prefilter": c.simhash_prefilter, "hamming": c.max_hamming,
-                "golden": c.use_golden_text,
-                "exclude": sorted(c.exclude_hosts),
-                "jw": c.compute_jw,
-            },
-            sort_keys=True,
-        )
+        key = asdict(self.cfg)
+        del key["checkpoints"]
+        key["exclude_hosts"] = sorted(key["exclude_hosts"])
+        key["algo"] = ALGO_VERSION
+        payload = json.dumps(key, sort_keys=True)
         return hashlib.blake2b(payload.encode(), digest_size=4).hexdigest()
 
     # ---------------------------------------------------------------- stages
@@ -284,19 +271,18 @@ class DedupPipeline:
 
             pairs = cand.candidate_pairs(pruned, keep_block_key=False,
                                          star_min_block=cfg.star_min_block)
-            if cfg.simhash_prefilter:
-                pairs = cand.simhash_prefilter(pairs, sig, cfg.max_hamming)
+            pairs = cand.simhash_prefilter(pairs, sig)
             # semi pre-filter of the attach joins only when the corpus is
             # big enough that the un-filtered attach would shuffle it (see
-            # PipelineConfig.attach_prefilter_rows)
-            prefilter = n_sig >= cfg.attach_prefilter_rows
+            # ATTACH_PREFILTER_ROWS)
+            prefilter = n_sig >= ATTACH_PREFILTER_ROWS
             # the candidates stage carries the MinHash-Jaccard estimate:
             # one materialization serves both the resume contract and the
             # fast/slow scoring split (both branches read it)
             est, _ = self._stage("candidates", lambda: scoring.attach_estimates(
                 pairs, sig, prefilter))
             scores, _ = self._stage("scores", lambda: scoring.score_estimated(
-                est, sig, cfg.lev_match, cfg.jaccard_match, cfg.compute_jw,
+                est, sig, cfg.lev_match, cfg.jaccard_match,
                 prefilter=prefilter), fuse=True)
 
             # Transitive closure runs over FUZZY edges between exact-group

@@ -72,7 +72,6 @@ SCORES = T.StructType(
     [
         T.StructField("id_a", T.LongType(), False),
         T.StructField("id_b", T.LongType(), False),
-        T.StructField("jaro_winkler", T.DoubleType(), True),
         T.StructField("lev_sim", T.DoubleType(), True),
         T.StructField("jaccard", T.DoubleType(), True),
         T.StructField("is_match", T.BooleanType(), True),
@@ -83,7 +82,6 @@ SCORES = T.StructType(
 # estimate, exactly refined inside the decision band (udfs.JACC_REFINE_*)
 SCORE_UDF_RESULT = T.StructType(
     [
-        T.StructField("jaro_winkler", T.DoubleType(), True),
         T.StructField("lev_sim", T.DoubleType(), True),
         T.StructField("jaccard", T.DoubleType(), True),
     ]

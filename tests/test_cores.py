@@ -109,13 +109,6 @@ class TestSignatures:
 
 # ------------------------------------------------------------------- scoring
 class TestScoring:
-    def test_jaro_winkler_known(self):
-        # classic textbook pair
-        assert scorecore.jaro_winkler("MARTHA", "MARHTA") == pytest.approx(0.9611, abs=1e-3)
-        assert scorecore.jaro_winkler("same", "same") == 1.0
-        assert scorecore.jaro_winkler("", "x") == 0.0
-        assert scorecore.jaro_winkler("DWAYNE", "DUANE") == pytest.approx(0.84, abs=1e-2)
-
     def test_levenshtein_exact(self):
         assert scorecore.levenshtein("kitten", "sitting") == 3
         assert scorecore.levenshtein("", "abc") == 3
@@ -229,11 +222,11 @@ class TestBatchScorers:
         pairs = self._pairs()
         ta = [p[0] for p in pairs]
         tb = [p[1] for p in pairs]
-        bjw, blev = scorecore.score_batch(ta, tb)
+        blev = scorecore.lev_sim_batch(ta, tb)
         bjac = scorecore.jaccard_batch(ta, tb)
         for i, (a, b) in enumerate(pairs):
-            jw, lev, jac = scorecore.score_pair(a, b)
-            assert abs(jw - bjw[i]) < 1e-9, (i, a[:30], b[:30])
+            lev = scorecore.lev_sim(a, b)
+            jac = scorecore.jaccard_shingles(a, b)
             assert abs(lev - blev[i]) < 1e-9, (i, a[:30], b[:30])
             assert abs(jac - bjac[i]) < 1e-9, (i, a[:30], b[:30])
 
@@ -310,17 +303,15 @@ class TestBlockKernel:
         from dedupe_rust_spark.operators import ann
 
         codes = ann._srp_codes(V, W, self.BITS)
-        members, tables, buckets = [], [], []
+        members, tables = [], []
         for t in range(self.TABLES):
             for code in np.unique(codes[:, t]):
                 rows = np.nonzero(codes[:, t] == code)[0]
                 if len(rows) > 1:
                     members.append(rows)
                     tables.append(t)
-                    buckets.append(code)
         offsets = np.concatenate([[0], np.cumsum([len(r) for r in members])])
-        return (np.concatenate(members), offsets, np.array(tables),
-                np.array(buckets), codes)
+        return np.concatenate(members), offsets, np.array(tables), codes
 
     def test_pairs_equal_bruteforce_once_and_tiled(self):
         from dedupe_rust_spark.operators import ann
@@ -329,11 +320,11 @@ class TestBlockKernel:
         V = X.astype(np.float64)
         ids = np.arange(len(V), dtype=np.int64) * 7 + 3
         W = self._planes().T.copy()
-        rows, offsets, tables, buckets, codes = self._blocks(V, W)
+        rows, offsets, tables, codes = self._blocks(V, W)
         stats: dict = {}
-        blk, a, b, cos = ann._score_blocks(ids[rows], V[rows], offsets,
-                                           tables, buckets, W, self.BITS,
-                                           self.THR, stats=stats)
+        ra, rb, cos = ann._score_blocks(V, codes, rows, offsets, tables,
+                                        self.THR, stats=stats)
+        a, b = np.minimum(ids[ra], ids[rb]), np.maximum(ids[ra], ids[rb])
         got = list(zip(a.tolist(), b.tolist()))
         assert len(got) == len(set(got))  # each pair once across tables
 
@@ -370,21 +361,12 @@ class TestBlockKernel:
 
         V = np.zeros((2, self.DIM))
         W = self._planes().T.copy()
-        rows, offsets, tables, buckets, _ = self._blocks(V, W)
-        _, a, b, cos = ann._score_blocks(rows, V[rows], offsets, tables,
-                                         buckets, W, self.BITS, self.THR)
+        rows, offsets, tables, codes = self._blocks(V, W)
+        ra, rb, cos = ann._score_blocks(V, codes, rows, offsets, tables,
+                                        self.THR)
+        a, b = np.minimum(ra, rb), np.maximum(ra, rb)
         assert list(zip(a.tolist(), b.tolist())) == [(0, 1)]
         assert np.isnan(cos[0])
-
-    def test_code_mismatch_fails_loudly(self):
-        from dedupe_rust_spark.operators import ann
-
-        V = self._vectors()[:500].astype(np.float64)
-        W = self._planes().T.copy()
-        rows, offsets, tables, buckets, _ = self._blocks(V, W)
-        with pytest.raises(RuntimeError, match="differ"):
-            ann._score_blocks(rows, V[rows], offsets, tables, buckets + 1,
-                              W, self.BITS, self.THR)
 
     def test_shard_kernel_checks_code_sig(self):
         """The shard kernel recomputes its rows' SRP codes and fails loudly
@@ -411,10 +393,11 @@ class TestBlockKernel:
                 "embedding": pa.array(list(V), pa.list_(pa.float32()))})
 
         out = kernel(shard(sig))
-        rows, offsets, tables, buckets, _ = self._blocks(
-            V.astype(np.float64), W)
-        _, a, b, _ = ann._score_blocks(ids[rows], V[rows], offsets, tables,
-                                       buckets, W, self.BITS, self.THR)
+        V64 = V.astype(np.float64)
+        rows, offsets, tables, codes = self._blocks(V64, W)
+        ra, rb, _ = ann._score_blocks(V64, codes, rows, offsets, tables,
+                                      self.THR)
+        a, b = np.minimum(ids[ra], ids[rb]), np.maximum(ids[ra], ids[rb])
         assert len(a) > 0
         assert sorted(zip(out.column("vec_id_a").to_pylist(),
                           out.column("vec_id_b").to_pylist())) \

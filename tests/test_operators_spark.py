@@ -131,11 +131,6 @@ class TestANN:
             ann.suggest_n_cells(10**9) == 31622
         assert ann.suggest_n_cells(10**12) == 65536  # clamped
 
-    def test_srp_bucket_deterministic(self, spark, emb):
-        b1 = ann.srp_bucket(emb, bits=8).select("vec_id", "bucket").toPandas()
-        b2 = ann.srp_bucket(emb, bits=8).select("vec_id", "bucket").toPandas()
-        assert b1.equals(b2)
-
     def test_lsh_pairs_match_bruteforce(self, spark, emb):
         """The bucketed scale path recovers the EXACT brute-force pair set
         at its amplification settings (the lsh_emb_dups oracle contract)."""

@@ -347,6 +347,16 @@ def test_cc_driver_finish_equals_distributed(spark):
     assert st_d["mappings"] == st_d["levels"] + 1
     assert st_p["mappings"] == st_p["levels"]
 
+    # empty graph: no level of either kind, an empty labels frame
+    st_0 = {}
+    empty = cluster.connected_components(
+        edges.limit(0), stats=st_0, driver_finish_edges=1000).collect()
+    assert empty == []
+    assert st_0 == {"input_edges": 0, "driver_finish": False, "levels": 0,
+                    "mappings": 0}
+    assert cluster.connected_components(
+        edges.limit(0), driver_finish_edges=0).collect() == []
+
     # chain component: one level, no O(diameter) blowup
     path = [(f"p{i:03d}", f"p{i+1:03d}") for i in range(60)]
     st = {}
@@ -496,6 +506,39 @@ def test_resume_invalidated_by_config_change(spark, tiny_pages_dir, tmp_path):
     p2.run()
     assert p1.cfg_fingerprint != p2.cfg_fingerprint
     assert not [m for m in p2.stage_metrics if m.get("resumed")]
+
+
+def test_fingerprint_covers_every_output_field():
+    """Every PipelineConfig field but `checkpoints` (how stages
+    materialize, not what they hold) moves the resume key, so a new
+    output-changing field cannot be left out of it. No Spark job."""
+    import dataclasses
+
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    def fp(**changes):
+        return DedupPipeline(None, "pages",
+                             config=PipelineConfig(**changes)).cfg_fingerprint
+
+    def other(v):
+        if isinstance(v, bool):
+            return not v
+        if isinstance(v, (int, float)):
+            return v + 1
+        if isinstance(v, list):
+            return v + ["other.example"]
+        assert v is None, v
+        return 16
+
+    base = fp()
+    for f in dataclasses.fields(PipelineConfig):
+        v = getattr(PipelineConfig(), f.name)
+        if f.name == "checkpoints":
+            assert fp(checkpoints=not v) == base
+        else:
+            assert fp(**{f.name: other(v)}) != base, f.name
+    assert (fp(exclude_hosts=["a.example", "b.example"])
+            == fp(exclude_hosts=["b.example", "a.example"]))
 
 
 def test_fast_path_equals_checkpointed(spark, tiny_pages_dir):
