@@ -27,8 +27,9 @@ Scale design (100 TB):
     sort at 100 TB. The representative row is recovered by a long-keyed
     hash join on id = root_id; the min-URL output contract survives
     unchanged because cluster ids are rewritten to min(url) exactly once,
-    in cluster.propagate_to_members. Determinism is preserved:
-    id = xxhash64(url) is a fixed function of url.
+    in cluster.propagate_to_members, whose urls ride exact_group_map.
+    Determinism is preserved: id = xxhash64(url) is a fixed function of
+    url.
   * prune_blocks groups each block's member ids into ONE row (collect_list
     after the HAVING>1 filter): block sizes, singleton pruning, AND salting
     of oversized blocks all happen in-row on that grouped form — one
@@ -108,18 +109,19 @@ def exact_representatives(sig: DataFrame,
 
 def exact_group_map(sig: DataFrame,
                     roots: DataFrame | None = None) -> DataFrame:
-    """(id, root_id) where root_id = min(id) of the identical-text group
+    """(url, root_id) where root_id = min(id) of the identical-text group
     (root_id == id for unique texts). The root is also the representative
     that entered fuzzy blocking, so fuzzy cluster labels propagate to all
-    exact copies with ONE join — exact-dup stars never enter the CC loop
-    (a boilerplate page with 10^6 copies would otherwise drag a 10^6-arm
-    star through every iteration)."""
+    exact copies with ONE join, and the url rides the join that finds the
+    root — exact-dup stars never enter the CC loop (a boilerplate page
+    with 10^6 copies would otherwise drag a 10^6-arm star through every
+    iteration)."""
     if roots is None:
         roots = exact_roots(sig)
     return (
-        sig.select("id", "text_sha256")
+        sig.select("url", "text_sha256")
         .join(roots, "text_sha256")
-        .select("id", "root_id")
+        .select("url", "root_id")
     )
 
 

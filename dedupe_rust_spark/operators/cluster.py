@@ -38,8 +38,8 @@ minimum member — cluster_id = min member id, deterministically.
 
 The node type is whatever the edge columns carry — the pipeline feeds
 8-byte surrogate ids (longs), so every CC level shuffles longs; url
-strings are joined back exactly once, after the loop, in
-propagate_to_members.
+strings come back once, after the loop, on the exact group map
+(url, root_id) that propagate_to_members joins the labels onto.
 
 No GraphFrames dependency — plain joins + groupBy;
 `localCheckpoint()` per level truncates lineage (SURVEY.md §4.3.2).
@@ -47,6 +47,7 @@ No GraphFrames dependency — plain joins + groupBy;
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F
 
 
@@ -69,17 +70,14 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     (by the node type's ordering — longs for the pipeline's surrogate ids).
 
     Only nodes that appear in an edge are returned (singletons are added by
-    the caller if desired). Pass `stats` to receive {"levels": k,
-    "mappings": m, "driver_finish": bool} plus — only when
-    driver_finish_edges > 0, whose entry check is the one place the edge
-    count is already paid for — "input_edges" (the key is deliberately
-    absent in pure-distributed mode rather than costing every run an
-    extra count job). `levels` counts DISTRIBUTED
-    contraction levels only (the scale-rehearsal metric: levels grow
-    O(log diameter), so a jump flags a structural change in the match
-    graph, not just more data — comparable between driver_finish on/off
-    runs); `mappings` additionally counts the driver-finish tail mapping
-    when it ran (m == k + driver_finish).
+    the caller if desired). Pass `stats` to receive {"input_edges": n,
+    "levels": k, "mappings": m, "driver_finish": bool}. `levels` counts
+    DISTRIBUTED contraction levels only (the scale-rehearsal metric:
+    levels grow O(log diameter), so a jump flags a structural change in
+    the match graph, not just more data — comparable between
+    driver_finish on/off runs); `mappings` additionally counts the
+    driver-finish tail mapping when it ran (m == k + driver_finish).
+    Job descriptions are `cc:*` inside and the caller's on return.
 
     Tail handling: level 0 collapses near-clique dedup components, so the
     level-1 contracted graph is typically orders of magnitude smaller than
@@ -94,42 +92,42 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     unit-tested against it).
     """
     sc = edges.sparkSession.sparkContext
+    outer_desc = sc.getLocalProperty("spark.job.description")
     # materialize the edge list once: its lineage may carry the whole
-    # scoring UDF chain, and each level consumes it three times
+    # scoring UDF chain, and each level consumes it three times. The
+    # current edge count decides each level (a graph that already fits
+    # the driver-finish budget gains nothing from a distributed level);
+    # like every later level's, it is observed on the materializing job.
     sc.setJobDescription("cc:edges")
+    obs_n = Observation("cc_edges_n")
     cur = (
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
+        .observe(obs_n, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    # the current edge count decides each level: a graph that already
-    # fits the driver-finish budget gains nothing from a distributed
-    # level — each level is ~8 driver-synchronized jobs whose barrier
-    # latency dwarfs the work on a sub-100k-edge graph (the
-    # embedding-cluster and small-corpus paths). Level 0 counts the
-    # just-materialized checkpoint (cheap); later levels read the count
-    # observed on their own materialization. Pure-distributed mode pays
-    # no entry count.
-    n_edges = None
-    if driver_finish_edges > 0:
-        n_edges = cur.count()
-        if stats is not None:
-            stats["input_edges"] = n_edges
+    n_edges = int(obs_n.get["n"])
+    if stats is not None:
+        stats["input_edges"] = n_edges
     mappings: list[DataFrame] = []
     used_driver_finish = False
     for level in range(max_iter):
         if n_edges == 0:
             break
-        if n_edges is not None and n_edges <= driver_finish_edges:
+        if n_edges <= driver_finish_edges:
             # exact tail: union-find over the (contracted) label graph
             from ..functions.ccore import connected_components as uf_cc
 
             sc.setJobDescription("cc:driver_finish")
             uf = uf_cc([(r["src"], r["dst"]) for r in cur.collect()])
+            # built from pandas (Arrow), the mapping is a LocalRelation
+            # whose exact size the planner sees, so a join onto it is a
+            # broadcast from the start rather than a shuffle of it that
+            # adaptive execution may or may not re-plan in time
             mappings.append(edges.sparkSession.createDataFrame(
-                list(uf.items()), schema=cur.select(
-                    F.col("src").alias("node"),
-                    F.col("dst").alias("label")).schema))
+                pd.DataFrame(list(uf.items()), columns=["node", "label"]),
+                schema=cur.select(F.col("src").alias("node"),
+                                  F.col("dst").alias("label")).schema))
             used_driver_finish = True
             break
         sc.setJobDescription(f"cc:level{level}")
@@ -159,9 +157,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             # The moved-row count is OBSERVED during the checkpoint
             # materialization (CollectMetrics rides the job; verified to
             # fire on localCheckpoint), so convergence costs zero extra
-            # driver round-trips — the former filter+isEmpty was a
-            # second job per jump, pure serial latency at every scale
-            # (round 6; guide §1.2 "driver round-trips" / r5 verdict #7).
+            # driver round-trips.
             obs = Observation(f"cc_l{level}_j{_jump}")
             jumped = (
                 lab.join(
@@ -184,9 +180,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             if not moved:
                 break
         mappings.append(lab)
-        # contracted-edge count observed on the same materialization —
-        # the former separate count() was one more driver-synchronized
-        # job per level
+        # contracted-edge count observed on the same materialization
         obs_n = Observation(f"cc_l{level}_n")
         nxt = (
             cur.join(lab.withColumnsRenamed(
@@ -226,48 +220,39 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .select("node", F.coalesce("_l2", "label").alias("label"))
             .localCheckpoint()
         )
-    sc.setJobDescription(None)
+    sc.setJobDescription(outer_desc)
     return final.select("node", F.col("label").alias("cluster_id"))
 
 
-def propagate_to_members(rep_labels: DataFrame, ex_map: DataFrame,
-                         id_urls: DataFrame) -> DataFrame:
-    """Combine fuzzy CC labels over representatives with exact groups and
-    join urls back — the ONE place the fuzzy path touches url strings.
+def propagate_to_members(rep_labels: DataFrame, ex_map: DataFrame
+                         ) -> DataFrame:
+    """Combine fuzzy CC labels over representatives with exact groups —
+    the ONE place the fuzzy path touches url strings.
 
     rep_labels: (node=id, cluster_id=id-label) from connected_components
     over representative ids.
-    ex_map: (id, root_id) from blocking.exact_group_map — root_id is the
+    ex_map: (url, root_id) from blocking.exact_group_map — root_id is the
     exact-group min-id member AND the representative that entered fuzzy
     blocking (min(id) keeps the roots agg a true HashAggregate; the
     min-URL output contract is applied below, not at root selection).
-    id_urls: (id, url) projection of the signatures table.
 
     Label id per url = CC label of its root if the root was fuzzy-matched,
-    else the root itself; the label is then REWRITTEN to min(url) of the
-    cluster (hash agg + join — no window sort) so the output contract
-    (cluster_id = lexicographic min member url, reference main.rs:310-315)
-    is independent of how ids order. Urls whose final cluster has a single
-    member are dropped (duplicate groups have >= 2, main.rs:418-421).
+    else the root itself (one left join); the label is then REWRITTEN to
+    min(url) of the cluster (hash agg + join — no window sort) so the
+    output contract (cluster_id = lexicographic min member url, reference
+    main.rs:310-315) is independent of how ids order. Urls whose final
+    cluster has a single member are dropped (duplicate groups have >= 2,
+    main.rs:418-421).
 
-    Shuffle shape (round 6): the two corpus-sized intermediates each have
-    TWO consumers — ex_map feeds the root set AND the member labeling;
-    labeled feeds the min-url aggregation AND the final label join — so
-    each is materialized once via lazy localCheckpoint. Without it the
-    planner re-plans (and re-shuffles) the whole subtree per consumer:
-    measured at the 3.2M-page constant-family rehearsal, the clusters
-    stage carried 964 MB of shuffle across 10 Exchanges, ~2x the
-    single-planning cost (OPTIMIZATION_r06.md).
+    The labeled rows feed both the min-url aggregation and the final label
+    join, so they are materialized once via lazy localCheckpoint; without
+    it the planner re-plans (and re-shuffles) the whole subtree per
+    consumer (OPTIMIZATION_r06.md).
     """
-    ex_map = ex_map.localCheckpoint(eager=False)
-    root_label = ex_map.select(F.col("root_id").alias("node")).distinct().join(
-        rep_labels.withColumnsRenamed({"cluster_id": "_cc"}), "node", "left"
-    ).select(F.col("node").alias("root_id"),
-             F.coalesce("_cc", "node").alias("label_id"))
     labeled = (
-        ex_map.join(root_label, "root_id")
-        .join(id_urls, "id")
-        .select("url", "label_id")
+        ex_map.join(rep_labels.withColumnsRenamed(
+            {"node": "root_id", "cluster_id": "_cc"}), "root_id", "left")
+        .select("url", F.coalesce("_cc", "root_id").alias("label_id"))
         .localCheckpoint(eager=False)
     )
     # one aggregation computes the min-url label AND the >=2-member filter

@@ -6,8 +6,8 @@ MinHash-Jaccard with a match decision. The scores rows carry exactly what
 that decision reads: (id_a, id_b, lev_sim, jaccard, is_match).
 
 Pairs arrive and leave as surrogate LONG ids (id_a, id_b) — the key
-currency of the whole fuzzy path; urls are joined back once at cluster
-output (cluster.propagate_to_members).
+currency of the whole fuzzy path; urls come back once, at cluster output,
+on the exact group map (cluster.propagate_to_members).
 
 Jaccard is the MINHASH ESTIMATE (fraction of agreeing signature rows,
 k=128), computed as a codegen'd zip_with equality over the signature

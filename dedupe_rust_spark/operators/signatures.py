@@ -43,8 +43,9 @@ def signatures(extracted: DataFrame, lsh_bands: int | None = None
     `id = xxhash64(url)` is the surrogate join/shuffle key for the whole
     fuzzy path (blocking -> candidates -> scoring -> CC): an 8-byte long
     instead of a 60-80 B url string on every band row, pair row, and CC
-    round — 4-8x fewer shuffled key bytes at scale. urls are joined back
-    exactly once, at cluster output (cluster.propagate_to_members).
+    round — 4-8x fewer shuffled key bytes at scale. urls come back once,
+    at cluster output: the exact group map (url, root_id) carries each url
+    to its root's label (cluster.propagate_to_members).
     Collision math: 64-bit birthday bound ~n^2/2^65 — negligible at sandbox
     scales, ~3e4 expected colliding url pairs at 10^12 docs; the pipeline
     AUDITS every run (per id, min != max of a second, independent url

@@ -157,8 +157,10 @@ class DedupPipeline:
         signatures stage never plans the extract and a resumed clusters
         stage runs nothing downstream of signatures. wall_ms times the
         materialization only, not `build` (which may run stages of its
-        own). A `fuse` stage on the fast path is returned lazy, with
-        rows_out -1.
+        own). Jobs of the build and the materialization run under the job
+        description `stage:<name>`, and the caller's description is
+        restored after. A `fuse` stage on the fast path is returned lazy,
+        with rows_out -1.
 
         localCheckpoint rows are counted by an Observation that rides the
         materializing job (no second count() job); like cluster.py's, it
@@ -169,20 +171,24 @@ class DedupPipeline:
         if path is None and fuse and not self.cfg.checkpoints:
             return build(), -1
         resumed = bool(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
-        df = None if resumed else build()
-        # after build(): a build may run stages of its own
-        self.spark.sparkContext.setJobDescription(f"stage:{name}")
-        t0 = time.monotonic()
-        if path is None:
-            obs = Observation(f"rows_{name}")
-            out = (df.observe(obs, F.count(F.lit(1)).alias("n"))
-                   .localCheckpoint())
-            n = int(obs.get["n"])
-        else:
-            if not resumed:
-                df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-            n = out.count()
+        sc = self.spark.sparkContext
+        outer_desc = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"stage:{name}")
+        try:
+            df = None if resumed else build()
+            t0 = time.monotonic()
+            if path is None:
+                obs = Observation(f"rows_{name}")
+                out = (df.observe(obs, F.count(F.lit(1)).alias("n"))
+                       .localCheckpoint())
+                n = int(obs.get["n"])
+            else:
+                if not resumed:
+                    df.write.mode("overwrite").parquet(path)
+                out = self.spark.read.parquet(path)
+                n = out.count()
+        finally:
+            sc.setJobDescription(outer_desc)
         self.stage_metrics.append(
             {"stage": name, "rows_out": n,
              "wall_ms": int((time.monotonic() - t0) * 1000),
@@ -286,16 +292,15 @@ class DedupPipeline:
                 prefilter=prefilter), fuse=True)
 
             # Transitive closure runs over FUZZY edges between exact-group
-            # representatives only; exact copies then inherit their root's
-            # label via one join (blocking.exact_group_map). The exact tier
-            # can never be lost (F1 floor, SURVEY.md §7e): a group's members
-            # always share their root's final label.
+            # representatives only; every page then takes its root's label
+            # via one join onto the (url, root_id) exact group map. The
+            # exact tier can never be lost (F1 floor, SURVEY.md §7e): a
+            # group's members always share their root's final label.
             t0 = time.monotonic()
             cc_stats: dict = {}
             rep_labels = cluster.connected_components(
                 scoring.match_edges(scores), stats=cc_stats)
-            labels = cluster.propagate_to_members(rep_labels, ex_map,
-                                                  sig.select("id", "url"))
+            labels = cluster.propagate_to_members(rep_labels, ex_map)
             self.stage_metrics.append(
                 {"stage": "cc_loop", "rows_out": cc_stats.get("levels", -1),
                  "run_id": self.run_id,

@@ -1,5 +1,9 @@
 """Declared StructTypes for every stage table (SURVEY.md §1.2).
 
+SIGNATURES, CANDIDATES, SCORES, CLUSTERS and METRICS are the column names
+and types of the parquet tables a `DedupPipeline` run with an out_dir
+writes (tested against the written files).
+
 Fixed, explicit schemas — no inference — because byte-identical parity
 and cross-engine (DuckDB oracle) comparison demand exact types.
 """
@@ -26,6 +30,7 @@ SIGNATURES = T.StructType(
         T.StructField("url", T.StringType(), False),
         T.StructField("host", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
+        T.StructField("text", T.StringType(), True),
         T.StructField("text_sha256", T.StringType(), True),
         T.StructField("prefix_hash", T.LongType(), True),
         T.StructField("simhash", T.LongType(), True),
@@ -51,20 +56,12 @@ SIG_UDF_RESULT = T.StructType(
     ]
 )
 
-# block_key = xxhash64(band_id, band_hash) — blocks, like documents,
-# are keyed by 8-byte longs so the band stream shuffles no strings
-BLOCKS = T.StructType(
-    [
-        T.StructField("block_key", T.LongType(), False),
-        T.StructField("id", T.LongType(), False),
-    ]
-)
-
+# jacc_est = the JVM-side MinHash Jaccard estimate (scoring.attach_estimates)
 CANDIDATES = T.StructType(
     [
         T.StructField("id_a", T.LongType(), False),
         T.StructField("id_b", T.LongType(), False),
-        T.StructField("block_key", T.LongType(), False),
+        T.StructField("jacc_est", T.DoubleType(), True),
     ]
 )
 
@@ -108,9 +105,7 @@ METRICS = T.StructType(
         T.StructField("run_id", T.StringType(), False),
         T.StructField("stage", T.StringType(), False),
         T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("rows_in", T.LongType(), True),
         T.StructField("rows_out", T.LongType(), True),
-        T.StructField("dropped", T.LongType(), True),
         T.StructField("wall_ms", T.LongType(), True),
         T.StructField("ts", T.TimestampType(), True),
     ]

@@ -54,15 +54,13 @@ def test_extraction_parity_python_vs_spark(spark, tiny_pages_dir):
 
 def _exact_url_edges(sig):
     """The production exact tier (blocking.exact_group_map) as url star
-    edges root -> member: the rows with id != root_id, urls from sig."""
-    urls = sig.select("id", "url")
+    edges root -> member: the rows whose url is not the root's."""
+    roots = sig.select(F.col("id").alias("root_id"), F.col("url").alias("src"))
     return (
         blocking.exact_group_map(sig)
-        .filter(F.col("id") != F.col("root_id"))
-        .join(urls.withColumnsRenamed({"id": "root_id", "url": "src"}),
-              "root_id")
-        .join(urls.withColumnRenamed("url", "dst"), "id")
-        .select("src", "dst")
+        .join(roots, "root_id")
+        .filter(F.col("url") != F.col("src"))
+        .select("src", F.col("url").alias("dst"))
     )
 
 
@@ -339,6 +337,7 @@ def test_cc_driver_finish_equals_distributed(spark):
     assert st_e["input_edges"] == len(edges_list)
     assert st_d["driver_finish"] is True and st_d["levels"] >= 1
     assert st_p["driver_finish"] is False
+    assert st_p["input_edges"] == len(edges_list)
     # the driver finish must have cut levels vs the pure loop
     assert st_d["levels"] <= st_p["levels"]
     # levels counts DISTRIBUTED contraction levels only; the driver-finish
@@ -347,15 +346,15 @@ def test_cc_driver_finish_equals_distributed(spark):
     assert st_d["mappings"] == st_d["levels"] + 1
     assert st_p["mappings"] == st_p["levels"]
 
-    # empty graph: no level of either kind, an empty labels frame
-    st_0 = {}
-    empty = cluster.connected_components(
-        edges.limit(0), stats=st_0, driver_finish_edges=1000).collect()
-    assert empty == []
-    assert st_0 == {"input_edges": 0, "driver_finish": False, "levels": 0,
-                    "mappings": 0}
+    # empty graph: no level of either kind, an empty labels frame, the
+    # same stats in both modes
+    st_0, st_0p = {}, {}
     assert cluster.connected_components(
-        edges.limit(0), driver_finish_edges=0).collect() == []
+        edges.limit(0), stats=st_0, driver_finish_edges=1000).collect() == []
+    assert cluster.connected_components(
+        edges.limit(0), stats=st_0p, driver_finish_edges=0).collect() == []
+    assert st_0 == st_0p == {"input_edges": 0, "driver_finish": False,
+                             "levels": 0, "mappings": 0}
 
     # chain component: one level, no O(diameter) blowup
     path = [(f"p{i:03d}", f"p{i+1:03d}") for i in range(60)]
@@ -365,6 +364,43 @@ def test_cc_driver_finish_equals_distributed(spark):
         stats=st, driver_finish_edges=0).collect()}
     assert got == uf_cc(path)
     assert st["levels"] == 1
+
+
+def test_propagate_to_members_matches_reference(spark):
+    """Exact groups take their root's CC label (or the root itself when
+    the root was not fuzzy-matched), the label becomes the min member url,
+    and single-member clusters are dropped — checked against a pure-Python
+    reference on a hand-built exact map."""
+    ex_map = [
+        # root 10 has no fuzzy label: its two exact copies still cluster
+        ("http://m.example/x", 10), ("http://b.example/x", 10),
+        # roots 20 and 30 are merged by one fuzzy label; the min url sits
+        # in the group whose root is NOT the label
+        ("http://z.example/1", 20), ("http://c.example/1", 20),
+        ("http://a.example/1", 30),
+        # a unique page with no fuzzy label: a singleton, dropped
+        ("http://s.example/1", 40),
+    ]
+    rep_labels = [(20, 20), (30, 20)]
+
+    def reference():
+        label = dict(rep_labels)
+        members: dict[int, list[str]] = {}
+        for url, root in ex_map:
+            members.setdefault(label.get(root, root), []).append(url)
+        return {u: min(us) for us in members.values() if len(us) > 1
+                for u in us}
+
+    got = {r.url: r.cluster_id for r in cluster.propagate_to_members(
+        spark.createDataFrame(rep_labels, "node long, cluster_id long"),
+        spark.createDataFrame(ex_map, "url string, root_id long"),
+    ).collect()}
+    assert got == reference()
+    assert got == {"http://m.example/x": "http://b.example/x",
+                   "http://b.example/x": "http://b.example/x",
+                   "http://z.example/1": "http://a.example/1",
+                   "http://c.example/1": "http://a.example/1",
+                   "http://a.example/1": "http://a.example/1"}
 
 
 def test_candidate_pairs_hybrid_star(spark):
@@ -586,6 +622,60 @@ def test_stage_rows_out_equal_counts(spark, tiny_pages_dir, tmp_path):
         got = {m["stage"]: m["rows_out"] for m in pipe.stage_metrics
                if m["stage"] in expect}
         assert got == expect, checkpoints
+
+
+def test_written_tables_match_declared_schemas(spark, tiny_pages_dir,
+                                               tmp_path):
+    """The parquet tables of an out_dir run carry exactly the column names
+    and types declared in schemas.py (parquet reads back every column
+    nullable, so nullability is not compared)."""
+    from dedupe_rust_spark import schemas
+
+    pipe = DedupPipeline(spark, tiny_pages_dir, out_dir=str(tmp_path),
+                         run_id="SCH")
+    pipe.run()
+    declared = {"signatures": schemas.SIGNATURES,
+                "candidates": schemas.CANDIDATES,
+                "scores": schemas.SCORES,
+                "clusters": schemas.CLUSTERS}
+    paths = {t: pipe._ckpt_path(t) for t in declared}
+    declared["metrics"] = schemas.METRICS
+    paths["metrics"] = os.path.join(str(tmp_path), "metrics", "run_id=SCH")
+    for table, schema in declared.items():
+        got = spark.read.parquet(paths[table]).schema
+        assert ([(f.name, f.dataType) for f in got]
+                == [(f.name, f.dataType) for f in schema]), table
+
+
+def test_fast_path_jobs_carry_stage_descriptions(spark, tiny_pages_dir):
+    """Every driver job of one fast-path run carries the description of
+    the work it does (`stage:<name>` or `cc:*`), read from the status
+    store, which works with the UI off; the caller's description is
+    restored afterwards."""
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    sc = spark.sparkContext
+    group = "test_job_descriptions"
+    sc.setJobGroup(group, None)
+    try:
+        DedupPipeline(spark, tiny_pages_dir,
+                      config=PipelineConfig(checkpoints=False)).run()
+        assert sc.getLocalProperty("spark.job.description") is None
+        sc.setJobDescription("outer")
+        cluster.connected_components(spark.createDataFrame(
+            [(1, 2)], "src long, dst long"))
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    store = sc._jsc.sc().statusStore()
+    descs = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        d = store.job(job_id).description()
+        descs.append(d.get() if d.isDefined() else None)
+    assert "stage:clusters" in descs
+    assert all(d is not None and d.startswith(("stage:", "cc:"))
+               for d in descs), descs
 
 
 def test_write_report_golden_shape(spark, tiny_pages_dir, tmp_path):

@@ -27,7 +27,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from dedupe_rust_spark.datagen import pages_dir_for
-    from dedupe_rust_spark.operators import ann, blocking, candidates as cand, scoring
+    from dedupe_rust_spark.operators import (ann, blocking, candidates as cand,
+                                             cluster, scoring)
     from dedupe_rust_spark.operators.signatures import extract, signatures
     from dedupe_rust_spark.plans.queries import q_d2_exact_clusters
     from dedupe_rust_spark.session import get_spark
@@ -72,11 +73,11 @@ def main() -> None:
         "ALL THREE plans (roots, representatives, group map) must show "
         "HashAggregate and contain NO Sort / SortAggregate node: the "
         "min(id) buffer is an 8-byte long, which HashAggregateExec holds "
-        "(round-3's min_by(..., url) silently fell back to SortAggregate "
-        "+ a per-partition corpus sort). Representatives are recovered by "
-        "a hash join on id = root_id; min-url labels are applied once at "
-        "cluster output (propagate_to_members), where the single "
-        "SortAggregate over CLUSTERED rows only is contract-required.",
+        "(min_by(..., url) falls back to SortAggregate + a per-partition "
+        "corpus sort). Representatives are recovered by a hash join on "
+        "id = root_id. The group map projects (url, root_id): the url "
+        "rides the join that finds the root, so cluster output needs no "
+        "second pass over the signatures table.",
         "\n".join(["-- exact_roots --", fmt(roots_df),
                    "-- exact_representatives --", fmt(reps_df),
                    "-- exact_group_map --", fmt(gm_df)]),
@@ -111,6 +112,23 @@ def main() -> None:
         fmt(scoring.score_candidates(pairs, sig)),
     ))
 
+    # 4b. cluster output: CC labels onto the exact group map, min-url label
+    labels = cluster.propagate_to_members(
+        cluster.connected_components(
+            scoring.match_edges(scoring.score_candidates(pairs, sig))),
+        gm_df)
+    sections.append((
+        "Cluster output: CC labels onto the exact group map, min-url label",
+        "Both Scan ExistingRDD nodes read the SAME lazy checkpoint of the "
+        "labeled (url, label_id) rows: the group map above plus ONE left "
+        "join of the CC labels on root_id (label = coalesce(cc label, "
+        "root_id)) — no join on id and no distinct. One reader is the "
+        "min(url)/count aggregation, the other the final label join. The "
+        "SortAggregate (min over a url string) is contract-required and "
+        "runs over labeled rows only.",
+        fmt(labels),
+    ))
+
     # 5. ANN brute force
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     sections.append((
@@ -120,7 +138,7 @@ def main() -> None:
         fmt(ann.cosine_topk(emb, emb.filter(F.col("vec_id") < 3), k=5)),
     ))
 
-    # 6. SRP-banded ANN top-k (round 5: long band keys + hoisted norms)
+    # 6. SRP-banded ANN top-k (long band keys + hoisted norms)
     sections.append((
         "SRP-banded ANN top-k (long band keys, per-vector norm hoist)",
         "The banded join key `block_key` is LongType — xxhash64(table, "
