@@ -23,5 +23,6 @@ __version__ = "0.1.0"
 # Version tag baked into signatures/extraction so checkpoints are
 # content-addressed by code version (SURVEY.md §4.3.3).
 ALGO_VERSION = "3"  # r3: surrogate-long fuzzy path (id=xxhash64(url)),
-# band-decorrelated salting, config-derived refine band, jw opt-in,
-# md5-min fingerprint family
+# band-decorrelated salting, md5-min fingerprint family. The decision
+# constants (thresholds, refine band, block caps, band count) are keyed
+# next to it (plans/pipeline.py decision_constants).

@@ -4,9 +4,10 @@ Reference analog: the deep verification tier (`hash_image` equality,
 /root/reference/src/main.rs:593-624) — the reference only ever tests
 *equality*; these scorers are the fuzzy generalization required by the
 north rule. They are exactly what the match decision reads
-(is_match := lev_sim >= 0.85 OR jaccard >= 0.50, operators/scoring.py):
-the scorer UDF runs lev_sim_batch on every slow-path pair and
-jaccard_batch only to refine a MinHash estimate near the threshold.
+(is_match := lev_sim >= LEV_MATCH OR jaccard >= JACCARD_MATCH, below;
+applied in operators/scoring.py): the scorer UDF runs lev_sim_batch on
+every slow-path pair and jaccard_batch only to refine a MinHash estimate
+inside the refine band.
 numpy-vectorized inner loops (no per-char Python in the DP), batched over
 candidate pairs from an Arrow pandas UDF.
 """
@@ -16,6 +17,21 @@ from __future__ import annotations
 import numpy as np
 
 from .sigcore import shingle_set
+
+# The match decision, fitted once to F1 >= 0.99 on datagen labeled pairs
+# (test_f1_on_labeled_pairs) and the same at every scale. These are the
+# only copy: scoring.py decides with them, the scorer UDF refines with
+# them, and the pipeline's checkpoint fingerprint folds them in.
+LEV_MATCH = 0.85
+JACCARD_MATCH = 0.50
+# MinHash-estimate refine band around JACCARD_MATCH (k=128 => sigma ~0.044
+# at j=0.5; +-0.20 is ~4.5 sigma): estimates inside it are replaced by the
+# exact shingle Jaccard; outside it the estimate cannot flip the decision,
+# so the re-shingling is skipped — the reference's cheap->expensive cascade
+# applied to the scorer itself. An estimate at or above JACC_REFINE_HI is a
+# decided match without any text (scoring.score_estimated's fast path).
+JACC_REFINE_LO = 0.30
+JACC_REFINE_HI = 0.70
 
 # Texts longer than this score Levenshtein at token level (words) instead of
 # char level: the DP is O(len_a) numpy row-ops, so cap the row count.

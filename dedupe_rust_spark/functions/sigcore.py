@@ -23,7 +23,9 @@ SIG_VERSION = "2"  # v2: band keys are a vectorized splitmix-style fold of
 SHINGLE_N = 3          # word 3-grams, SURVEY.md §2 H1 mapping
 MINHASH_K = 128        # signature length
 LSH_BANDS = 32         # 32 bands x 4 rows: catches jaccard >= ~0.7 w.h.p.
-                       # (empirical under the mixing family — see minhash())
+                       # (empirical under the mixing family — see minhash());
+                       # 24x5 / 16x8 were swept and lost boundary recall
+                       # (BENCH/BASELINE.md "Band-scheme sweep")
 LSH_ROWS = MINHASH_K // LSH_BANDS
 
 _MERSENNE = (1 << 61) - 1
@@ -105,35 +107,31 @@ def _avalanche(h: np.ndarray) -> np.ndarray:
     return h
 
 
-def band_keys_batch(sigs: np.ndarray, bands: int = LSH_BANDS) -> np.ndarray:
-    """LSH band bucket keys for a BATCH of signatures: (n, k) uint64 ->
-    (n, bands) uint64, one stable 64-bit key per band.
+def band_keys_batch(sigs: np.ndarray) -> np.ndarray:
+    """LSH band bucket keys for a BATCH of signatures: (n, MINHASH_K)
+    uint64 -> (n, LSH_BANDS) uint64, one stable 64-bit key per band.
 
     Two docs share a band key iff their signatures agree on all rows of
     that band -> candidate pair (SURVEY.md §2 B1 generalization). The key
     is a splitmix-style multiply-xor fold of the band's rows salted by the
     band index (so different bands never collide) — pure vectorized uint64
     arithmetic across the whole batch, no per-doc hashing calls."""
-    n, k = sigs.shape
-    rows = k // bands
-    # schemes that don't divide k evenly (e.g. 24 bands over k=128 -> 5
-    # rows) use the first bands*rows signature rows; the remainder is
-    # simply unused by banding (MinHash estimates still use all k)
-    chunks = sigs[:, : bands * rows].reshape(n, bands, rows)
+    n = len(sigs)
+    chunks = sigs.reshape(n, LSH_BANDS, LSH_ROWS)
     band_salt = _avalanche(
-        np.arange(bands, dtype=np.uint64) * _MIX_C1 + np.uint64(1)
-    )  # (bands,)
-    h = np.broadcast_to(band_salt, (n, bands)).copy()
-    for r in range(rows):
+        np.arange(LSH_BANDS, dtype=np.uint64) * _MIX_C1 + np.uint64(1)
+    )  # (LSH_BANDS,)
+    h = np.broadcast_to(band_salt, (n, LSH_BANDS)).copy()
+    for r in range(LSH_ROWS):
         h ^= chunks[:, :, r]
         h *= _MIX_C2
         h ^= h >> np.uint64(32)
     return _avalanche(h)
 
 
-def band_keys(sig: np.ndarray, bands: int = LSH_BANDS) -> list[int]:
+def band_keys(sig: np.ndarray) -> list[int]:
     """Single-signature convenience wrapper over band_keys_batch."""
-    return [int(v) for v in band_keys_batch(sig[None, :], bands)[0]]
+    return [int(v) for v in band_keys_batch(sig[None, :])[0]]
 
 
 # ---------------------------------------------------------------------------
@@ -151,12 +149,11 @@ def band_keys(sig: np.ndarray, bands: int = LSH_BANDS) -> list[int]:
 _CHUNK_SHINGLES = 1 << 10
 
 
-def signatures_batch(texts: list[str | None], k: int = MINHASH_K,
-                     bands: int = LSH_BANDS
+def signatures_batch(texts: list[str | None]
                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """-> (valid mask (n,), simhash (n,) uint64, minhash (n,k) uint64,
-    band_keys (n,bands) uint64); rows where mask is False carry
-    simhash 0 / sentinel minhash and should be emitted as null."""
+    """-> (valid mask (n,), simhash (n,) uint64, minhash (n, MINHASH_K)
+    uint64, band_keys (n, LSH_BANDS) uint64); rows where mask is False
+    carry simhash 0 / sentinel minhash and should be emitted as null."""
     n = len(texts)
     mask = np.zeros(n, dtype=bool)
     per_doc: list[np.ndarray | None] = [None] * n
@@ -167,7 +164,7 @@ def signatures_batch(texts: list[str | None], k: int = MINHASH_K,
     lens = np.array([0 if h is None else len(h) for h in per_doc],
                     dtype=np.int64)
 
-    minh = np.full((n, k), _EMPTY_SENTINEL, dtype=np.uint64)
+    minh = np.full((n, MINHASH_K), _EMPTY_SENTINEL, dtype=np.uint64)
     simh = np.zeros(n, dtype=np.uint64)
     nonempty = np.where(lens > 0)[0]
     # chunk docs so the permutation matrix stays within the memory budget
@@ -185,7 +182,7 @@ def signatures_batch(texts: list[str | None], k: int = MINHASH_K,
         seg = np.zeros(len(idx), dtype=np.int64)
         np.cumsum(lens[idx][:-1], out=seg[1:])
         # MinHash: (k, total) permuted matrix, segment-min per doc
-        perm = (_PERM_A[:k, None] * H[None, :] + _PERM_B[:k, None]) % _MERSENNE
+        perm = (_PERM_A[:, None] * H[None, :] + _PERM_B[:, None]) % _MERSENNE
         minh[idx] = np.minimum.reduceat(perm, seg, axis=1).T
         # SimHash: per-bit votes, segment-sum per doc
         bits = np.unpackbits(
@@ -198,7 +195,7 @@ def signatures_batch(texts: list[str | None], k: int = MINHASH_K,
         ).view(np.uint64)[:, 0]
         start = end
 
-    bkeys = band_keys_batch(minh, bands)
+    bkeys = band_keys_batch(minh)
     return mask, simh, minh, bkeys
 
 

@@ -12,14 +12,15 @@ on the exact group map (cluster.propagate_to_members).
 Jaccard is the MINHASH ESTIMATE (fraction of agreeing signature rows,
 k=128), computed as a codegen'd zip_with equality over the signature
 arrays already joined onto the pair, then EXACTLY REFINED inside the
-score UDF only for pairs whose estimate lands in the decision band around
-the configured jaccard threshold (udfs.refine_bounds). Round-1 re-shingled
-both texts per pair in Python for EVERY pair (the dominant scoring cost: a
-text in k candidate pairs re-shingled k times); now only the narrow
-boundary band pays that, and the F1-vs-scale table is unchanged.
+score UDF only for pairs whose estimate lands in the refine band around
+the jaccard threshold (scorecore.JACC_REFINE_LO..JACC_REFINE_HI). Round-1
+re-shingled both texts per pair in Python for EVERY pair (the dominant
+scoring cost: a text in k candidate pairs re-shingled k times); now only
+the narrow boundary band pays that, and the F1-vs-scale table is
+unchanged.
 
-Match decision (tuned on labeled_pairs, tests/test_f1.py):
-  is_match := lev_sim >= 0.85  OR  jaccard_est >= 0.50
+Match decision (scorecore's constants, tuned on labeled_pairs):
+  is_match := lev_sim >= LEV_MATCH (0.85)  OR  jaccard >= JACCARD_MATCH (0.50)
 near_mid pairs (>= 0.85 word-edit similarity) land above both; near_low
 (0.70-0.85) and adversarial pairs land below. Exact dups never reach here
 (collapsed pre-blocking) but would score 1.0 anyway.
@@ -37,11 +38,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.scorecore import JACC_REFINE_HI, JACCARD_MATCH, LEV_MATCH
 from ..functions.sigcore import MINHASH_K
-from ..functions.udfs import make_score_pairs_udf, refine_bounds
-
-LEV_MATCH = 0.85
-JACCARD_MATCH = 0.50
+from ..functions.udfs import score_pairs_udf
 
 
 def minhash_jaccard_expr(mh_a, mh_b):
@@ -107,11 +106,9 @@ def attach_estimates(pairs: DataFrame, sig: DataFrame,
 
 
 def score_estimated(est_pairs: DataFrame, sig: DataFrame,
-                    lev_match: float = LEV_MATCH,
-                    jaccard_match: float = JACCARD_MATCH,
                     prefilter: bool = True) -> DataFrame:
     """Fast/slow split on the estimate:
-      * est >= max(refine_hi, jaccard_match): is_match is already
+      * est >= JACC_REFINE_HI (above JACCARD_MATCH): is_match is already
         decided TRUE (jaccard path; lev cannot flip a True) — no text
         join, no UDF. lev_sim is null on these rows.
       * below the cut OR est is NULL (a side with no minhash signature):
@@ -122,15 +119,13 @@ def score_estimated(est_pairs: DataFrame, sig: DataFrame,
     On web corpora most LSH candidates are true near-dups, so the fast
     path removes the text shuffle + Python scoring for the bulk of pairs.
     """
-    refine_lo, refine_hi = refine_bounds(jaccard_match)
-    fast_cut = max(refine_hi, jaccard_match)
-    fast = est_pairs.filter(F.col("jacc_est") >= fast_cut).select(
+    fast = est_pairs.filter(F.col("jacc_est") >= JACC_REFINE_HI).select(
         "id_a", "id_b",
         F.lit(None).cast("double").alias("lev_sim"),
         F.col("jacc_est").alias("jaccard"),
         F.lit(True).alias("is_match"),
     )
-    slow_pairs = est_pairs.filter((F.col("jacc_est") < fast_cut)
+    slow_pairs = est_pairs.filter((F.col("jacc_est") < JACC_REFINE_HI)
                                   | F.col("jacc_est").isNull())
     # Restrict the text attach to ids that actually appear in a slow-path
     # pair BEFORE any join (guide §3.2 semi-join pre-filter): without
@@ -162,30 +157,27 @@ def score_estimated(est_pairs: DataFrame, sig: DataFrame,
     # parallelism on the most expensive per-row stage.
     par = est_pairs.sparkSession.sparkContext.defaultParallelism
     slow = slow.repartition(2 * par)
-    score_udf = make_score_pairs_udf(refine_lo, refine_hi)
     scored = slow.withColumn(
-        "s", score_udf(F.col("_ta"), F.col("_tb"), F.col("jacc_est"))
+        "s", score_pairs_udf(F.col("_ta"), F.col("_tb"), F.col("jacc_est"))
     ).select(
         "id_a",
         "id_b",
         F.col("s.lev_sim").alias("lev_sim"),
         F.col("s.jaccard").alias("jaccard"),
         (
-            (F.col("s.lev_sim") >= lev_match)
-            | (F.col("s.jaccard") >= jaccard_match)
+            (F.col("s.lev_sim") >= LEV_MATCH)
+            | (F.col("s.jaccard") >= JACCARD_MATCH)
         ).alias("is_match"),
     )
     return fast.unionByName(scored)
 
 
 def score_candidates(pairs: DataFrame, sig: DataFrame,
-                     lev_match: float = LEV_MATCH,
-                     jaccard_match: float = JACCARD_MATCH,
                      prefilter: bool = True) -> DataFrame:
     """attach_estimates + score_estimated in one call (the estimate table
     is lazily materialized since both branches of the split consume it)."""
     est = attach_estimates(pairs, sig, prefilter).localCheckpoint(eager=False)
-    return score_estimated(est, sig, lev_match, jaccard_match, prefilter)
+    return score_estimated(est, sig, prefilter)
 
 
 def match_edges(scores: DataFrame) -> DataFrame:

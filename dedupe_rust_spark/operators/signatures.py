@@ -15,9 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.udfs import (
-    extract_text_udf, make_signatures_udf, signatures_udf,
-)
+from ..functions.udfs import extract_text_udf, signatures_udf
 
 PREFIX_BYTES = 3000  # reference reads the first 3,000 raw bytes (main.rs:525-534)
 
@@ -34,8 +32,7 @@ def extract(pages: DataFrame, use_golden_text: bool = False) -> DataFrame:
     return pages.withColumn("text", extract_text_udf(F.col("html")))
 
 
-def signatures(extracted: DataFrame, lsh_bands: int | None = None
-               ) -> DataFrame:
+def signatures(extracted: DataFrame) -> DataFrame:
     """Attach all signature columns; drops rows with no extractable text
     (the reference silently drops undecodable files, main.rs:381-391 —
     we filter explicitly and the pipeline counts drops into metrics).
@@ -60,8 +57,7 @@ def signatures(extracted: DataFrame, lsh_bands: int | None = None
                     F.xxhash64(F.expr(f"substring(html, 1, {PREFIX_BYTES})")))
         .withColumn("text_sha256", F.sha2(F.col("text").cast("binary"), 256))
         .withColumn("n_chars", F.length("text").cast("int"))
-        .withColumn("sig", (signatures_udf if lsh_bands is None
-                            else make_signatures_udf(lsh_bands))(F.col("text")))
+        .withColumn("sig", signatures_udf(F.col("text")))
         .select(
             "id", "url", "host", "lang", "text",
             "text_sha256", "prefix_hash",

@@ -33,27 +33,20 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .. import ALGO_VERSION
+from ..functions import scorecore, sigcore
 from ..operators import blocking, candidates as cand, cluster, scoring, signatures as sigs
 from ..sources.pages import clean_pages, read_pages, spread
 
 
 @dataclass
 class PipelineConfig:
-    lev_match: float = scoring.LEV_MATCH
-    jaccard_match: float = scoring.JACCARD_MATCH
-    max_block: int = blocking.DEFAULT_MAX_BLOCK
-    # row-level pre-salt guard for pathological hot band keys (bounds the
-    # largest grouping-aggregation row; see blocking._presalt_hot_keys).
-    # None disables detection (and its extra sampled scan of the stream).
-    hot_block_bound: int | None = blocking.DEFAULT_HOT_BOUND
+    """What a caller may vary. The match thresholds, refine band, block
+    caps and band scheme are module constants (scorecore, blocking,
+    sigcore), folded into the checkpoint key by `decision_constants`."""
     # hybrid candidate generation: blocks > this size emit hub stars
     # instead of full cliques (meta-blocking comparison pruning — see
     # candidates.candidate_pairs). None = exhaustive cliques everywhere.
     star_min_block: int | None = cand.DEFAULT_STAR_MIN_BLOCK
-    # LSH band count over the fixed k=128 MinHash (None = sigcore default
-    # 32x4). The 24x5/16x8 sweep is recorded in BENCH/BASELINE.md; 32x4
-    # stays the default for boundary recall (threshold curve at j=0.5).
-    lsh_bands: int | None = None
     use_golden_text: bool = False
     exclude_hosts: list[str] = field(default_factory=list)
     # checkpoints=False is the throughput fast path: no per-partition
@@ -62,6 +55,19 @@ class PipelineConfig:
     # benches, not production runs. An out_dir still writes (and resumes)
     # every stage as parquet.
     checkpoints: bool = True
+
+
+def decision_constants() -> dict:
+    """The module constants that decide what the stages hold, read at
+    call time: the match thresholds and refine band, the block size cap
+    and hot-key pre-salt bound, and the LSH band count."""
+    return {"LEV_MATCH": scorecore.LEV_MATCH,
+            "JACCARD_MATCH": scorecore.JACCARD_MATCH,
+            "JACC_REFINE_LO": scorecore.JACC_REFINE_LO,
+            "JACC_REFINE_HI": scorecore.JACC_REFINE_HI,
+            "DEFAULT_MAX_BLOCK": blocking.DEFAULT_MAX_BLOCK,
+            "DEFAULT_HOT_BOUND": blocking.DEFAULT_HOT_BOUND,
+            "LSH_BANDS": sigcore.LSH_BANDS}
 
 
 def _audit_ids(sig: DataFrame) -> int:
@@ -125,13 +131,13 @@ class DedupPipeline:
 
     @property
     def cfg_fingerprint(self) -> str:
-        """Checkpoint outputs bake in config values (thresholds, caps,
-        bands) — a rerun under the same run_id but a different config
-        must NOT silently reuse stale stage parquet. The fingerprint keys
-        the checkpoint path on every PipelineConfig field except
-        `checkpoints` (which changes how stages materialize, not what
-        they hold), plus ALGO_VERSION; a new field joins the key by
-        default."""
+        """Checkpoint outputs bake in config and decision values
+        (thresholds, caps, bands) — a rerun under the same run_id but a
+        different config or edited constants must NOT silently reuse
+        stale stage parquet. The fingerprint keys the checkpoint path on
+        every PipelineConfig field except `checkpoints` (which changes how
+        stages materialize, not what they hold), plus ALGO_VERSION and
+        `decision_constants()`; a new field joins the key by default."""
         import hashlib
         import json
 
@@ -139,6 +145,7 @@ class DedupPipeline:
         del key["checkpoints"]
         key["exclude_hosts"] = sorted(key["exclude_hosts"])
         key["algo"] = ALGO_VERSION
+        key["decisions"] = decision_constants()
         payload = json.dumps(key, sort_keys=True)
         return hashlib.blake2b(payload.encode(), digest_size=4).hexdigest()
 
@@ -201,8 +208,7 @@ class DedupPipeline:
         if not isinstance(pages, DataFrame):
             pages = read_pages(self.spark, pages)
         pages = spread(clean_pages(pages, self.cfg.exclude_hosts))
-        return sigs.signatures(sigs.extract(pages, self.cfg.use_golden_text),
-                               self.cfg.lsh_bands)
+        return sigs.signatures(sigs.extract(pages, self.cfg.use_golden_text))
 
     def run(self) -> DataFrame:
         """Full pipeline; returns clusters(url, cluster_id), clustered rows only."""
@@ -259,14 +265,14 @@ class DedupPipeline:
             # feeds both the group map and the representatives
             roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
             ex_map = blocking.exact_group_map(sig, roots)
-            reps = blocking.exact_representatives(sig, roots)
-            if cfg.hot_block_bound is not None:
-                # hot-key detection scans the band stream twice (sample +
-                # group): materialize the reps join once so the second
-                # pass is explode-only
-                reps = reps.localCheckpoint(eager=False)
+            # hot-key detection scans the band stream twice (sample +
+            # group): materialize the reps join once so the second pass is
+            # explode-only
+            reps = blocking.exact_representatives(sig, roots).localCheckpoint(
+                eager=False)
             pruned, cap_metrics = blocking.prune_blocks(
-                blocking.all_blocks(reps), cfg.max_block, cfg.hot_block_bound)
+                blocking.all_blocks(reps), blocking.DEFAULT_MAX_BLOCK,
+                blocking.DEFAULT_HOT_BOUND)
             if cfg.checkpoints:
                 t0 = time.monotonic()
                 n_salted = cap_metrics.count()
@@ -288,8 +294,7 @@ class DedupPipeline:
             est, _ = self._stage("candidates", lambda: scoring.attach_estimates(
                 pairs, sig, prefilter))
             scores, _ = self._stage("scores", lambda: scoring.score_estimated(
-                est, sig, cfg.lev_match, cfg.jaccard_match,
-                prefilter=prefilter), fuse=True)
+                est, sig, prefilter=prefilter), fuse=True)
 
             # Transitive closure runs over FUZZY edges between exact-group
             # representatives only; every page then takes its root's label

@@ -223,8 +223,8 @@ def _band_sig_index(sig: DataFrame) -> DataFrame:
             .withColumn("bk_mod", F.pmod("block_key", F.lit(BAND_INDEX_PARTS))))
 
 
-def _fuzzy_matches(sig: DataFrame, prev: DataFrame, idx: DataFrame,
-                   lev_match: float, jaccard_match: float) -> DataFrame:
+def _fuzzy_matches(sig: DataFrame, prev: DataFrame, idx: DataFrame
+                   ) -> DataFrame:
     """Near-dup matches of the batch against pre-batch state:
     (url, matched_url, score) — the best-scoring state match per new url,
     deterministic (ties break to the lexicographically smallest url).
@@ -266,7 +266,7 @@ def _fuzzy_matches(sig: DataFrame, prev: DataFrame, idx: DataFrame,
         .unionByName(prev.select(F.concat(F.lit("o:"), "url").alias("id"),
                                  "minhash", "text"))
     )
-    scores = scoring.score_candidates(cand, sig_u, lev_match, jaccard_match)
+    scores = scoring.score_candidates(cand, sig_u)
     matched = scores.filter(F.col("is_match")).select(
         F.expr("substring(id_a, 3)").alias("url"),
         F.expr("substring(id_b, 3)").alias("matched_url"),
@@ -291,9 +291,7 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
                             checkpoint_dir: str, available_now: bool = True,
                             compact_every: int = DEFAULT_COMPACT_EVERY,
                             lister=posix_lister, remover=posix_remover,
-                            fuzzy: bool = False,
-                            lev_match: float | None = None,
-                            jaccard_match: float | None = None):
+                            fuzzy: bool = False):
     """Start the stream; returns the StreamingQuery (caller awaits it).
 
     fuzzy=False (default): exact-dup matching only; matches rows are
@@ -302,19 +300,14 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
     belongs to one mode) and matches rows are (url, matched_url, kind,
     score) with kind in {'exact', 'fuzzy'} — exact matches keep their
     sha-join semantics (score 1.0) and near-dups are scored with the
-    batch pipeline's thresholds (overridable via lev_match /
-    jaccard_match)."""
+    batch pipeline's thresholds (scorecore.LEV_MATCH / JACCARD_MATCH)."""
     stream = (
         spark.readStream.schema(PAGES)
         .option("maxFilesPerTrigger", 16)
         .parquet(input_dir)
     )
 
-    from ..operators.scoring import JACCARD_MATCH, LEV_MATCH
-
     state_cols = FUZZY_STATE_COLS if fuzzy else SIG_STATE_COLS
-    lev = LEV_MATCH if lev_match is None else lev_match
-    jacc = JACCARD_MATCH if jaccard_match is None else jaccard_match
     match_schema = ("url string, matched_url string, kind string, "
                     "score double" if fuzzy else
                     "url string, first_url string, text_sha256 string")
@@ -361,7 +354,7 @@ def start_incremental_dedup(spark: SparkSession, input_dir: str,
             idx = _read_layer(spark, state_dir, BAND_LAYER, BAND_COLS,
                               batch_id, lister, parts=mods)
             if idx is not None:
-                fz = _fuzzy_matches(fresh, prev, idx, lev, jacc)
+                fz = _fuzzy_matches(fresh, prev, idx)
                 matches = matches.unionByName(fz.select(
                     "url", "matched_url", F.lit("fuzzy").alias("kind"),
                     F.col("score").cast("double")))

@@ -3,7 +3,7 @@
 
   spark-submit --py-files dist/dedupe_rust_spark.zip jobs/run_pipeline.py \
       --pages /data/pages_parquet_dir --output /data/out --run-id R42 \
-      [--lev-match 0.85] [--jaccard-match 0.5] [--max-block 512]
+      [--exclude-host mirror.example.org ...] [--use-golden-text]
 
 On a multi-executor cluster pass the usual --master/--num-executors confs;
 the pipeline code is identical (partitioning scales with
@@ -29,18 +29,6 @@ def main() -> int:
                     help="dir containing pages.parquet (or the file itself)")
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--lev-match", type=float, default=None)
-    ap.add_argument("--jaccard-match", type=float, default=None)
-    ap.add_argument("--max-block", type=int, default=None)
-    ap.add_argument("--star-min-block", type=int, default=None,
-                    help="blocks larger than this emit dual-hub stars "
-                         "instead of cliques; 0 = exhaustive cliques")
-    ap.add_argument("--lsh-bands", type=int, default=None,
-                    help="LSH band count over the k=128 MinHash "
-                         "(default 32x4)")
-    ap.add_argument("--hot-block-bound", type=int, default=None,
-                    help="pre-salt band keys above this member estimate; "
-                         "0 disables detection")
     ap.add_argument("--exclude-host", action="append", default=[])
     ap.add_argument("--use-golden-text", action="store_true")
     args = ap.parse_args()
@@ -52,19 +40,6 @@ def main() -> int:
     spark = SparkSession.builder.appName("dedupe_pipeline").getOrCreate()
     cfg = PipelineConfig(exclude_hosts=args.exclude_host,
                          use_golden_text=args.use_golden_text)
-    if args.lev_match is not None:
-        cfg.lev_match = args.lev_match
-    if args.jaccard_match is not None:
-        cfg.jaccard_match = args.jaccard_match
-    if args.max_block is not None:
-        cfg.max_block = args.max_block
-    if args.star_min_block is not None:
-        cfg.star_min_block = args.star_min_block or None
-    if args.lsh_bands is not None:
-        cfg.lsh_bands = args.lsh_bands
-    if args.hot_block_bound is not None:
-        cfg.hot_block_bound = args.hot_block_bound or None
-
     pipe = DedupPipeline(spark, args.pages, out_dir=args.output,
                          run_id=args.run_id, config=cfg)
     clusters = pipe.run()

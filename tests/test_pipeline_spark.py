@@ -150,21 +150,18 @@ def test_adversarial_same_title_not_clustered(spark, tiny_pages_dir, clusters):
     assert joined.count() <= max(1, int(0.01 * adv.count()))
 
 
-def test_score_split_nondefault_threshold_refines_at_boundary(spark):
-    """The refine band derives from the configured jaccard threshold: with
-    jaccard_match=0.25, an estimate just above 0.25 must be EXACTLY
-    refined (estimate can't decide a match at the threshold). Pair: two
-    texts with exact 3-shingle Jaccard well below 0.25 but enough MinHash
-    row agreement that a noisy estimate could sit near it — we assert the
-    emitted jaccard equals the exact shingle value whenever the estimate
-    fell inside the derived band, and that the decision matches the
-    ground-truth rule."""
+def test_score_split_refines_inside_band(spark):
+    """An estimate inside the refine band (scorecore.JACC_REFINE_LO..HI)
+    is replaced by the exact shingle Jaccard before the decision. Pair:
+    28 of 40 words shared — MinHash estimate ~0.47 (below JACCARD_MATCH),
+    exact Jaccard 0.52 (above it), lev_sim ~0.78 (below LEV_MATCH), so
+    only the refinement makes it a match."""
     from dedupe_rust_spark.functions import scorecore
-    from dedupe_rust_spark.functions.udfs import refine_bounds
     from dedupe_rust_spark.operators.signatures import signatures as sig_stage
 
-    ta = "alpha beta gamma delta epsilon zeta eta theta " * 4
-    tb = "alpha beta gamma delta nine ten eleven twelve " * 4
+    words = [f"w{i}" for i in range(200)]
+    ta = " ".join(words[:40])
+    tb = " ".join(words[:28] + words[100:112])
     rows = [("https://x/a", None, ta.encode(), ta, "en"),
             ("https://x/b", None, tb.encode(), tb, "en")]
     pages = spark.createDataFrame(
@@ -175,21 +172,15 @@ def test_score_split_nondefault_threshold_refines_at_boundary(spark):
     ids = {r.url: r.id for r in s.select("url", "id").collect()}
     pairs = spark.createDataFrame(
         [(min(ids.values()), max(ids.values()))], "id_a long, id_b long")
-    jm = 0.25
-    got = scoring.score_candidates(pairs, s, jaccard_match=jm).collect()[0]
-    lo, hi = refine_bounds(jm)
+    est = scoring.attach_estimates(pairs, s).first().jacc_est
     exact = scorecore.jaccard_shingles(ta, tb)
-    if got.is_match and got.lev_sim is None:
-        # fast path fired: the estimate must have been >= the fast cut
-        assert got.jaccard >= max(hi, jm)
-    else:
-        # slow path: inside the band the estimate must have been replaced
-        # by the exact value
-        if lo <= got.jaccard <= hi:
-            assert abs(got.jaccard - exact) < 1e-9
-        expect = (scorecore.lev_sim(ta, tb) >= scoring.LEV_MATCH
-                  or got.jaccard >= jm)
-        assert bool(got.is_match) == expect
+    assert scorecore.JACC_REFINE_LO <= est < scorecore.JACCARD_MATCH <= exact
+    got = scoring.score_candidates(pairs, s).collect()
+    assert len(got) == 1
+    assert got[0].lev_sim is not None  # slow path: the scorer UDF ran
+    assert got[0].lev_sim < scorecore.LEV_MATCH
+    assert abs(got[0].jaccard - exact) < 1e-9
+    assert got[0].is_match
 
 
 def test_score_null_estimate_pairs_not_dropped(spark):
@@ -504,6 +495,24 @@ def test_blocks_salted_not_silent(spark, sig):
     assert kept.agg(F.max(F.size("ids"))).first()[0] <= 4 * 2
 
 
+def test_pipeline_reads_block_cap_at_call_time(spark, tiny_pages_dir,
+                                              monkeypatch):
+    """The block cap is a module constant the pipeline reads when it runs:
+    lowering blocking.DEFAULT_MAX_BLOCK salts blocks the default leaves
+    whole, and the salted-block census reports them."""
+    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+
+    def n_salted():
+        pipe = DedupPipeline(spark, tiny_pages_dir, config=PipelineConfig())
+        pipe.run()
+        return next(m["rows_out"] for m in pipe.stage_metrics
+                    if m["stage"] == "blocks_salted")
+
+    assert n_salted() == 0
+    monkeypatch.setattr(blocking, "DEFAULT_MAX_BLOCK", 2)
+    assert n_salted() > 0
+
+
 # ------------------------------------------------------------------ resume
 def test_resume_skips_completed_stages(spark, tiny_pages_dir, tmp_path):
     out = str(tmp_path / "out")
@@ -530,27 +539,33 @@ def test_resume_skips_completed_stages(spark, tiny_pages_dir, tmp_path):
 
 
 def test_resume_invalidated_by_config_change(spark, tiny_pages_dir, tmp_path):
-    """Same run_id + different thresholds must NOT reuse stale checkpoints
-    (scores bake in is_match): the config fingerprint keys the path."""
+    """Same run_id + a different config must NOT reuse stale checkpoints
+    (candidates bake in the pair-generation mode): the config fingerprint
+    keys the path."""
     from dedupe_rust_spark.plans.pipeline import PipelineConfig
 
     out = str(tmp_path / "out")
     p1 = DedupPipeline(spark, tiny_pages_dir, out_dir=out, run_id="RC")
     p1.run()
     p2 = DedupPipeline(spark, tiny_pages_dir, out_dir=out, run_id="RC",
-                       config=PipelineConfig(lev_match=0.5))
+                       config=PipelineConfig(star_min_block=None))
     p2.run()
     assert p1.cfg_fingerprint != p2.cfg_fingerprint
     assert not [m for m in p2.stage_metrics if m.get("resumed")]
 
 
-def test_fingerprint_covers_every_output_field():
+def test_fingerprint_covers_every_output_field(monkeypatch):
     """Every PipelineConfig field but `checkpoints` (how stages
     materialize, not what they hold) moves the resume key, so a new
-    output-changing field cannot be left out of it. No Spark job."""
+    output-changing field cannot be left out of it; so does every
+    decision constant (thresholds, refine band, block caps, band count),
+    read when the key is computed. No Spark job."""
     import dataclasses
 
-    from dedupe_rust_spark.plans.pipeline import PipelineConfig
+    from dedupe_rust_spark.functions import scorecore, sigcore
+    from dedupe_rust_spark.plans.pipeline import (
+        PipelineConfig, decision_constants,
+    )
 
     def fp(**changes):
         return DedupPipeline(None, "pages",
@@ -575,6 +590,39 @@ def test_fingerprint_covers_every_output_field():
             assert fp(**{f.name: other(v)}) != base, f.name
     assert (fp(exclude_hosts=["a.example", "b.example"])
             == fp(exclude_hosts=["b.example", "a.example"]))
+
+    constants = [(scorecore, "LEV_MATCH"), (scorecore, "JACCARD_MATCH"),
+                 (scorecore, "JACC_REFINE_LO"), (scorecore, "JACC_REFINE_HI"),
+                 (blocking, "DEFAULT_MAX_BLOCK"),
+                 (blocking, "DEFAULT_HOT_BOUND"), (sigcore, "LSH_BANDS")]
+    assert sorted(decision_constants()) == sorted(n for _, n in constants)
+    for mod, name in constants:
+        with monkeypatch.context() as m:
+            m.setattr(mod, name, getattr(mod, name) + 1)
+            assert fp() != base, name
+    assert fp() == base
+
+
+def test_cli_flags():
+    """The CLI takes exactly the five kept flags; a removed tuning flag
+    is an argparse error (exit 2). Argparse runs before Spark starts."""
+    import re
+    import subprocess
+    import sys
+
+    script = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs", "run_pipeline.py")
+    out = subprocess.run([sys.executable, script, "--help"],
+                         capture_output=True, text=True, timeout=60)
+    assert out.returncode == 0, out.stderr
+    assert set(re.findall(r"--[a-z][a-z-]*", out.stdout)) == {
+        "--help", "--pages", "--output", "--run-id", "--exclude-host",
+        "--use-golden-text"}
+    bad = subprocess.run([sys.executable, script, "--pages", "p",
+                          "--output", "o", "--lev-match", "0.5"],
+                         capture_output=True, text=True, timeout=60)
+    assert bad.returncode == 2
+    assert "unrecognized arguments: --lev-match" in bad.stderr
 
 
 def test_fast_path_equals_checkpointed(spark, tiny_pages_dir):

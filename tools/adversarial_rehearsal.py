@@ -6,10 +6,10 @@ Injected pathologies on top of the standard 400k-page bench corpus:
   * HOT KEY — 140,000 pages on one host sharing an identical first text
     line ("Untitled Document") with pairwise-distinct bodies: one
     host+title block key with 140k members (> 2x the 64k
-    hot_block_bound), the boilerplate-title web pathology. Without the
-    row-level pre-salt, the grouping collect_list would build one
-    ~1.1 MB aggregation row and its sub-block salt would explode in-row;
-    with it, no grouped row may exceed ~max_block.
+    blocking.DEFAULT_HOT_BOUND), the boilerplate-title web pathology.
+    Without the row-level pre-salt, the grouping collect_list would build
+    one ~1.1 MB aggregation row and its sub-block salt would explode
+    in-row; with it, no grouped row may exceed ~DEFAULT_MAX_BLOCK.
   * EXACT FAMILY — 100,000 byte-identical pages across hosts: one
     10^5-member exact-dup star. Must collapse to ONE representative
     before LSH (HashAggregate path) and never enter the CC loop.
@@ -170,10 +170,11 @@ def main() -> None:
     reps = blocking.exact_representatives(sig, roots).localCheckpoint(
         eager=False)
     blocks = blocking.all_blocks(reps)
-    pruned, cap = blocking.prune_blocks(blocks, cfg.max_block,
-                                        cfg.hot_block_bound)
+    pruned, cap = blocking.prune_blocks(blocks, blocking.DEFAULT_MAX_BLOCK,
+                                        blocking.DEFAULT_HOT_BOUND)
     cap = cap.cache()
-    hot_rows = cap.filter(F.col("block_size") >= cfg.hot_block_bound).count()
+    hot_rows = cap.filter(
+        F.col("block_size") >= blocking.DEFAULT_HOT_BOUND).count()
     salt_rows = cap.count()
     max_injected = cap.agg(F.max("block_size")).first()[0]
     max_grouped_row = pruned.agg(F.max(F.size("ids"))).first()[0]

@@ -1,18 +1,35 @@
 """Dump .explain('formatted') for the engine's key physical plans into
 docs/PLANS.md, with the properties each plan must exhibit (pushed filters,
-broadcast choices, codegen spans). Reviewed per-round; the judge can diff.
+broadcast choices, codegen spans).
 
-Usage: python tools/dump_plans.py [sf_dir]
+Session-global numbers are renumbered per section in order of first
+appearance — expression ids (`#<n>`), `plan_id=<n>`, RDD ids (`RDD[<n>]`)
+and lambda variable suffixes (`lambda x_<n>`) — and input paths read
+`<sf_dir>/` and `<checkout>/`, so a rerun with no planner-visible change
+rewrites nothing, and a plan that did change shows only its own diff.
+
+Usage: python tools/dump_plans.py [sf_dir] [title ...]
+  With titles (or title prefixes), only those sections are rewritten;
+  every other section of docs/PLANS.md is kept as it is.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS_MD = os.path.join(ROOT, "docs", "PLANS.md")
+HEADER = ["# Physical plans of record",
+          "",
+          "Generated by tools/dump_plans.py — rerun after planner-visible",
+          "changes. Each section lists the property the plan must exhibit.",
+          ""]
+sys.path.insert(0, ROOT)
+_VOLATILE = re.compile(r"(#|plan_id=|RDD\[|lambda [A-Za-z]+_)(\d+)")
 
 
 def fmt(df) -> str:
@@ -22,8 +39,36 @@ def fmt(df) -> str:
     return buf.getvalue()
 
 
+def normalize(text: str) -> str:
+    """Renumber the session-global ids in order of first appearance (one
+    numbering per kind); paths inside the checkout read `<checkout>/...`."""
+    ids: dict[str, dict[str, int]] = {}
+
+    def sub(m: re.Match) -> str:
+        kind = ids.setdefault(m.group(1), {})
+        return f"{m.group(1)}{kind.setdefault(m.group(2), len(kind) + 1)}"
+
+    return _VOLATILE.sub(sub, text.replace(ROOT, "<checkout>"))
+
+
+def render(title: str, props: str, plan: str) -> str:
+    return "\n".join([f"## {title}", "", props, "", "```",
+                      normalize(plan).rstrip(), "```", ""])
+
+
+def read_sections(path: str) -> dict[str, str]:
+    """Title -> rendered section text of an existing PLANS.md."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        body = f.read()
+    parts = re.split(r"^(?=## )", body, flags=re.M)[1:]
+    return {p.split("\n", 1)[0][3:]: p.rstrip("\n") + "\n" for p in parts}
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    only = sys.argv[2:]
     from pyspark.sql import functions as F
 
     from dedupe_rust_spark.datagen import pages_dir_for
@@ -50,7 +95,20 @@ def main() -> None:
         fmt(scan),
     ))
 
-    sig = signatures(extract(pages)).localCheckpoint()
+    # 1b. the signatures stage (the pipeline's first materialized stage)
+    sig_df = signatures(extract(pages))
+    sections.append((
+        "Extract + signatures: two Arrow UDF islands, built-in hashes",
+        "No Exchange; id, prefix_hash, text_sha256 and n_chars are "
+        "built-in expressions in codegen. Two ArrowEvalPython nodes: the "
+        "`text IS NOT NULL` filter is pushed below the projection, so "
+        "extract_text_udf runs once for that filter and AGAIN beside "
+        "signatures_udf (text -> simhash, the 32x4 LSH band keys, "
+        "minhash) — every page is extracted twice (an open item, not a "
+        "property to keep).",
+        fmt(sig_df),
+    ))
+    sig = sig_df.localCheckpoint()
 
     # 2. exact clusters (flagship, builtin-only)
     sections.append((
@@ -169,19 +227,17 @@ def main() -> None:
         fmt(ann.lsh_cosine_pairs(emb, threshold=0.35)),
     ))
 
-    out = ["# Physical plans of record",
-           "",
-           "Generated by tools/dump_plans.py — rerun after planner-visible",
-           "changes. Each section lists the property the plan must exhibit.",
-           ""]
+    old = read_sections(PLANS_MD)
+    out = list(HEADER)
+    sf_abs = os.path.abspath(sf_dir)
     for title, props, plan in sections:
-        out += [f"## {title}", "", props, "", "```", plan.rstrip(), "```", ""]
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "docs", "PLANS.md")
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
+        keep = only and not any(title.startswith(t) for t in only)
+        out.append(old[title] if keep and title in old else render(
+            title, props, plan.replace(sf_abs, "<sf_dir>")))
+    os.makedirs(os.path.dirname(PLANS_MD), exist_ok=True)
+    with open(PLANS_MD, "w") as f:
         f.write("\n".join(out))
-    print(f"wrote {path}")
+    print(f"wrote {PLANS_MD}")
 
 
 if __name__ == "__main__":

@@ -16,14 +16,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 
-def f1_at(spark, n_pages: int, cfg=None) -> dict:
+def f1_at(spark, n_pages: int) -> dict:
     from dedupe_rust_spark.datagen import pages_dir_for
     from dedupe_rust_spark.plans.pipeline import DedupPipeline, PipelineConfig
     from dedupe_rust_spark.sources.pages import read_labeled_pairs
 
     pages_dir = pages_dir_for("/root/testdata/sf0.1", n_rows=n_pages)
     clusters = DedupPipeline(
-        spark, pages_dir, config=cfg or PipelineConfig(checkpoints=False)
+        spark, pages_dir, config=PipelineConfig(checkpoints=False)
     ).run().cache()
     pairs = read_labeled_pairs(spark, pages_dir)
     pred = (

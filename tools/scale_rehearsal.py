@@ -60,7 +60,8 @@ def main() -> None:
     reps = blocking.exact_representatives(sig, roots).localCheckpoint(
         eager=False)
     pruned, cap = blocking.prune_blocks(blocking.all_blocks(reps),
-                                        cfg.max_block, cfg.hot_block_bound)
+                                        blocking.DEFAULT_MAX_BLOCK,
+                                        blocking.DEFAULT_HOT_BOUND)
     stats = pair_stream_stats(pruned, DEFAULT_STAR_MIN_BLOCK)
 
     print(json.dumps({
