@@ -24,5 +24,5 @@ __version__ = "0.1.0"
 # content-addressed by code version (SURVEY.md §4.3.3).
 ALGO_VERSION = "3"  # r3: surrogate-long fuzzy path (id=xxhash64(url)),
 # band-decorrelated salting, md5-min fingerprint family. The decision
-# constants (thresholds, refine band, block caps, band count) are keyed
-# next to it (plans/pipeline.py decision_constants).
+# constants (thresholds, refine band, signature sizes, candidate and block
+# bounds) are keyed next to it (plans/pipeline.py decision_constants).

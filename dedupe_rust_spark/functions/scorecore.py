@@ -29,9 +29,11 @@ JACCARD_MATCH = 0.50
 # exact shingle Jaccard; outside it the estimate cannot flip the decision,
 # so the re-shingling is skipped — the reference's cheap->expensive cascade
 # applied to the scorer itself. An estimate at or above JACC_REFINE_HI is a
-# decided match without any text (scoring.score_estimated's fast path).
-JACC_REFINE_LO = 0.30
-JACC_REFINE_HI = 0.70
+# decided match without any text (scoring.score_estimated's fast path), so
+# the band is derived from the threshold: it always straddles it.
+JACC_REFINE_BAND = 0.20
+JACC_REFINE_LO = JACCARD_MATCH - JACC_REFINE_BAND
+JACC_REFINE_HI = JACCARD_MATCH + JACC_REFINE_BAND
 
 # Texts longer than this score Levenshtein at token level (words) instead of
 # char level: the DP is O(len_a) numpy row-ops, so cap the row count.

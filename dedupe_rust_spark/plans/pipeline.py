@@ -58,16 +58,27 @@ class PipelineConfig:
 
 
 def decision_constants() -> dict:
-    """The module constants that decide what the stages hold, read at
-    call time: the match thresholds and refine band, the block size cap
-    and hot-key pre-salt bound, and the LSH band count."""
+    """The numeric module constants that change what a stage holds, read
+    at call time: the match thresholds, refine band width and Levenshtein
+    char cap (scorecore), shingle size, MinHash length and band count
+    (sigcore), the SimHash prefilter bound and short-text bypass
+    (candidates), and the block size cap, hot-key pre-salt bound and its
+    sample rate (blocking). Values derived from these at import
+    (JACC_REFINE_LO/HI, LSH_ROWS) are not listed; the default star size
+    is keyed through its PipelineConfig field. Edits that no number here
+    shows (a hash seed, a new code path) need an ALGO_VERSION bump."""
     return {"LEV_MATCH": scorecore.LEV_MATCH,
             "JACCARD_MATCH": scorecore.JACCARD_MATCH,
-            "JACC_REFINE_LO": scorecore.JACC_REFINE_LO,
-            "JACC_REFINE_HI": scorecore.JACC_REFINE_HI,
+            "JACC_REFINE_BAND": scorecore.JACC_REFINE_BAND,
+            "LEV_CHAR_CAP": scorecore.LEV_CHAR_CAP,
+            "SHINGLE_N": sigcore.SHINGLE_N,
+            "MINHASH_K": sigcore.MINHASH_K,
+            "LSH_BANDS": sigcore.LSH_BANDS,
+            "SIMHASH_HAMMING_MAX": cand.SIMHASH_HAMMING_MAX,
+            "SHORT_TEXT_BYPASS": cand.SHORT_TEXT_BYPASS,
             "DEFAULT_MAX_BLOCK": blocking.DEFAULT_MAX_BLOCK,
             "DEFAULT_HOT_BOUND": blocking.DEFAULT_HOT_BOUND,
-            "LSH_BANDS": sigcore.LSH_BANDS}
+            "HOT_SAMPLE_MOD": blocking.HOT_SAMPLE_MOD}
 
 
 def _audit_ids(sig: DataFrame) -> int:
@@ -133,11 +144,12 @@ class DedupPipeline:
     def cfg_fingerprint(self) -> str:
         """Checkpoint outputs bake in config and decision values
         (thresholds, caps, bands) — a rerun under the same run_id but a
-        different config or edited constants must NOT silently reuse
-        stale stage parquet. The fingerprint keys the checkpoint path on
-        every PipelineConfig field except `checkpoints` (which changes how
-        stages materialize, not what they hold), plus ALGO_VERSION and
-        `decision_constants()`; a new field joins the key by default."""
+        different config or an edited decision constant must NOT silently
+        reuse stale stage parquet. The fingerprint keys the checkpoint
+        path on every PipelineConfig field except `checkpoints` (which
+        changes how stages materialize, not what they hold), plus
+        ALGO_VERSION and `decision_constants()`; a new field joins the
+        key by default, a new constant joins it by being listed there."""
         import hashlib
         import json
 

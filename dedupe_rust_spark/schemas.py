@@ -76,7 +76,8 @@ SCORES = T.StructType(
 )
 
 # jaccard in = the JVM-side MinHash estimate (scoring.py); jaccard out = the
-# estimate, exactly refined inside the decision band (udfs.JACC_REFINE_*)
+# estimate, exactly refined inside the decision band
+# (scorecore.JACC_REFINE_LO..JACC_REFINE_HI)
 SCORE_UDF_RESULT = T.StructType(
     [
         T.StructField("lev_sim", T.DoubleType(), True),

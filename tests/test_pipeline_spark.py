@@ -558,11 +558,12 @@ def test_fingerprint_covers_every_output_field(monkeypatch):
     """Every PipelineConfig field but `checkpoints` (how stages
     materialize, not what they hold) moves the resume key, so a new
     output-changing field cannot be left out of it; so does every
-    decision constant (thresholds, refine band, block caps, band count),
-    read when the key is computed. No Spark job."""
+    numeric constant of the deciding modules, read when the key is
+    computed, unless it is derived from keyed values. No Spark job."""
     import dataclasses
 
     from dedupe_rust_spark.functions import scorecore, sigcore
+    from dedupe_rust_spark.operators import candidates
     from dedupe_rust_spark.plans.pipeline import (
         PipelineConfig, decision_constants,
     )
@@ -591,16 +592,23 @@ def test_fingerprint_covers_every_output_field(monkeypatch):
     assert (fp(exclude_hosts=["a.example", "b.example"])
             == fp(exclude_hosts=["b.example", "a.example"]))
 
-    constants = [(scorecore, "LEV_MATCH"), (scorecore, "JACCARD_MATCH"),
-                 (scorecore, "JACC_REFINE_LO"), (scorecore, "JACC_REFINE_HI"),
-                 (blocking, "DEFAULT_MAX_BLOCK"),
-                 (blocking, "DEFAULT_HOT_BOUND"), (sigcore, "LSH_BANDS")]
-    assert sorted(decision_constants()) == sorted(n for _, n in constants)
-    for mod, name in constants:
+    # derived at import from keyed constants, or keyed as a config field
+    not_keyed = {"JACC_REFINE_LO", "JACC_REFINE_HI", "LSH_ROWS",
+                 "DEFAULT_STAR_MIN_BLOCK"}
+    owner = {name: mod
+             for mod in (scorecore, sigcore, candidates, blocking)
+             for name, v in vars(mod).items()
+             if name.isupper() and not name.startswith("_")
+             and isinstance(v, (int, float)) and not isinstance(v, bool)}
+    assert set(decision_constants()) == set(owner) - not_keyed
+    for name in decision_constants():
+        mod = owner[name]
         with monkeypatch.context() as m:
             m.setattr(mod, name, getattr(mod, name) + 1)
             assert fp() != base, name
     assert fp() == base
+    assert (scorecore.JACC_REFINE_LO < scorecore.JACCARD_MATCH
+            < scorecore.JACC_REFINE_HI)
 
 
 def test_cli_flags():

@@ -8,9 +8,7 @@ and lambda variable suffixes (`lambda x_<n>`) — and input paths read
 `<sf_dir>/` and `<checkout>/`, so a rerun with no planner-visible change
 rewrites nothing, and a plan that did change shows only its own diff.
 
-Usage: python tools/dump_plans.py [sf_dir] [title ...]
-  With titles (or title prefixes), only those sections are rewritten;
-  every other section of docs/PLANS.md is kept as it is.
+Usage: python tools/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -23,11 +21,6 @@ from contextlib import redirect_stdout
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PLANS_MD = os.path.join(ROOT, "docs", "PLANS.md")
-HEADER = ["# Physical plans of record",
-          "",
-          "Generated by tools/dump_plans.py — rerun after planner-visible",
-          "changes. Each section lists the property the plan must exhibit.",
-          ""]
 sys.path.insert(0, ROOT)
 _VOLATILE = re.compile(r"(#|plan_id=|RDD\[|lambda [A-Za-z]+_)(\d+)")
 
@@ -51,24 +44,8 @@ def normalize(text: str) -> str:
     return _VOLATILE.sub(sub, text.replace(ROOT, "<checkout>"))
 
 
-def render(title: str, props: str, plan: str) -> str:
-    return "\n".join([f"## {title}", "", props, "", "```",
-                      normalize(plan).rstrip(), "```", ""])
-
-
-def read_sections(path: str) -> dict[str, str]:
-    """Title -> rendered section text of an existing PLANS.md."""
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        body = f.read()
-    parts = re.split(r"^(?=## )", body, flags=re.M)[1:]
-    return {p.split("\n", 1)[0][3:]: p.rstrip("\n") + "\n" for p in parts}
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2:]
     from pyspark.sql import functions as F
 
     from dedupe_rust_spark.datagen import pages_dir_for
@@ -227,13 +204,15 @@ def main() -> None:
         fmt(ann.lsh_cosine_pairs(emb, threshold=0.35)),
     ))
 
-    old = read_sections(PLANS_MD)
-    out = list(HEADER)
+    out = ["# Physical plans of record",
+           "",
+           "Generated by tools/dump_plans.py — rerun after planner-visible",
+           "changes. Each section lists the property the plan must exhibit.",
+           ""]
     sf_abs = os.path.abspath(sf_dir)
     for title, props, plan in sections:
-        keep = only and not any(title.startswith(t) for t in only)
-        out.append(old[title] if keep and title in old else render(
-            title, props, plan.replace(sf_abs, "<sf_dir>")))
+        plan = normalize(plan.replace(sf_abs, "<sf_dir>"))
+        out += [f"## {title}", "", props, "", "```", plan.rstrip(), "```", ""]
     os.makedirs(os.path.dirname(PLANS_MD), exist_ok=True)
     with open(PLANS_MD, "w") as f:
         f.write("\n".join(out))
