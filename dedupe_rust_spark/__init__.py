@@ -20,8 +20,9 @@ Everything is DataFrame + Arrow pandas UDFs; no per-row Python, no RDDs.
 
 __version__ = "0.1.0"
 
-# Version tag baked into signatures/extraction so checkpoints are
-# content-addressed by code version (SURVEY.md §4.3.3).
+# The one code-version tag, keyed into every checkpoint's resume key
+# (SURVEY.md §4.3.3): bump it on any change to what extraction (textcore)
+# or the signatures (sigcore) compute.
 ALGO_VERSION = "3"  # r3: surrogate-long fuzzy path (id=xxhash64(url)),
 # band-decorrelated salting, md5-min fingerprint family. The decision
 # constants (thresholds, refine band, signature sizes, candidate and block

@@ -16,10 +16,6 @@ import re
 
 import numpy as np
 
-SIG_VERSION = "2"  # v2: band keys are a vectorized splitmix-style fold of
-                   # the band's 4 MinHash rows (v1 used blake2b per band);
-                   # minhash/simhash VALUES are unchanged from v1
-
 SHINGLE_N = 3          # word 3-grams, SURVEY.md §2 H1 mapping
 MINHASH_K = 128        # signature length
 LSH_BANDS = 32         # 32 bands x 4 rows: catches jaccard >= ~0.7 w.h.p.
@@ -208,7 +204,3 @@ def minhash_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
     if len(sig_a) == 0 or len(sig_a) != len(sig_b):
         return 0.0
     return float(np.mean(sig_a == sig_b))
-
-
-def sha256_hex(text: str) -> str:
-    return hashlib.sha256(text.encode("utf-8")).hexdigest()

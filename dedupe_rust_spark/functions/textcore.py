@@ -8,7 +8,8 @@ chain (HEIC interleaved-RGB -> YCbCr -> gray, src/main.rs:735-789); here the
 fallback chain is encoding-based (utf-8 -> cp1252 -> latin-1) and the
 "decode" is tag-stripping HTML extraction.
 
-Rules (EXTRACT_VERSION pins them; bump on any behavior change):
+Rules (bump ALGO_VERSION, the resume key's code version, on any behavior
+change):
   1. None / empty bytes             -> None
   2. decode utf-8, else cp1252, else latin-1 (latin-1 never fails)
   3. no "<html" marker (case-insens) -> None   (garbage bytes)
@@ -24,8 +25,6 @@ from __future__ import annotations
 
 import html as _html
 import re
-
-EXTRACT_VERSION = "1"
 
 _SCRIPT_RE = re.compile(rb"<script\b.*?</script\s*>", re.IGNORECASE | re.DOTALL)
 _STYLE_RE = re.compile(rb"<style\b.*?</style\s*>", re.IGNORECASE | re.DOTALL)

@@ -22,9 +22,17 @@ from pyspark.sql import types as T
 from . import scorecore, sigcore, textcore
 from ..schemas import SCORE_UDF_RESULT, SIG_UDF_RESULT
 
+# Marked nondeterministic (the extraction itself is deterministic) so the
+# optimizer keeps the projection that computes `text`: a deterministic one
+# lets filters on `text` push below it and chained UDFs inline it, which
+# ran the extraction once for signatures()' `text IS NOT NULL` filter and
+# again beside signatures_udf — two to three Python passes per page.
 @pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda b: textcore.extract_text(None if b is None else bytes(b)))
+
+
+extract_text_udf = extract_text_udf.asNondeterministic()
 
 
 @pandas_udf(SIG_UDF_RESULT)

@@ -14,6 +14,11 @@ Tiers (training-data-pipeline ops, beyond the reference's surface):
                        touches, not one per (table, bucket) entry.
   * lsh_cosine_topk / ivf_cosine_topk — bucketed / k-means-cell top-k.
 
+Every operator reads a (vec_id long, embedding array<float>) table. The
+SRP hyperplanes come from one seed (SRP_SEED) and the IVF codebook from
+IVF_ITERS driver-side Lloyd iterations over a fixed 1/IVF_SAMPLE_MOD id
+sample; none of these is a parameter.
+
 The Python surface reads embeddings by one flatten + reshape: Arrow UDFs
 doing one numpy pass per batch for SRP bucketing, score-shard banding and
 IVF cell assignment (dense matmuls against a constant matrix, whose
@@ -27,6 +32,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa  # noqa: F401 — resolves the Arrow UDF type hints
 from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+SRP_SEED = 42        # the SRP hyperplane family (np.random.RandomState)
+IVF_SAMPLE_MOD = 4   # ivf_train's sample: pmod(xxhash64(vec_id), M) == 0
+IVF_ITERS = 3        # ivf_train's Lloyd iterations
 
 
 def _dot(a, b):
@@ -44,6 +53,21 @@ def _norm(a):
     )
 
 
+def _vectors(df: DataFrame, id_as: str, side: str, *extra) -> DataFrame:
+    """(vec_id, embedding) -> (id_as, <side>v, <side>n, *extra): each
+    vector's O(dim) norm folds once here, before any pair join, so a
+    vector in many pairs does not fold it per pair."""
+    return df.select(F.col("vec_id").alias(id_as),
+                     F.col("embedding").alias(f"{side}v"),
+                     _norm(F.col("embedding")).alias(f"{side}n"), *extra)
+
+
+def _cosine6():
+    """Probe-neighbor cosine from the hoisted norms, rounded to 6 places."""
+    return F.round(_dot(F.col("pv"), F.col("cv"))
+                   / (F.col("pn") * F.col("cn")), 6)
+
+
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
     """The k best neighbors per probe by cosine, ties to the smaller id."""
     w = Window.partitionBy("probe_id").orderBy(
@@ -55,41 +79,32 @@ def _top_k(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10
+                ) -> DataFrame:
     """Exact top-k cosine neighbors per probe (excluding self).
 
     Broadcast the probe side — the corpus never shuffles; each corpus
     partition streams past the in-memory probe table.
     """
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv"),
-        _norm(F.col(vec_col)).alias("pn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
+    p = _vectors(probes, "probe_id", "p")
+    c = _vectors(corpus, "neighbor_id", "c")
     scored = (
         c.join(F.broadcast(p), F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("pv"), F.col("cv"))
-                    / (F.col("pn") * F.col("cn")), 6),
-        )
+        .withColumn("cosine", _cosine6())
     )
     return _top_k(scored, k)
 
 
-def _srp_planes(bits: int, n_tables: int, dim: int, seed: int,
+def _srp_planes(bits: int, n_tables: int, dim: int,
                 seed_per_table: bool = False) -> np.ndarray:
     """(n_tables*bits, dim) seeded hyperplanes; see srp_band_blocks."""
     if seed_per_table:
         return np.concatenate([
-            np.random.RandomState(seed + t).standard_normal((bits, dim))
+            np.random.RandomState(SRP_SEED + t).standard_normal((bits, dim))
             for t in range(n_tables)
         ])
-    return np.random.RandomState(seed).standard_normal((n_tables * bits, dim))
+    return np.random.RandomState(SRP_SEED).standard_normal(
+        (n_tables * bits, dim))
 
 
 def _srp_codes(M: np.ndarray, W: np.ndarray, bits: int) -> np.ndarray:
@@ -144,30 +159,29 @@ def _srp_buckets_udf(planes, bits: int):
                        T.LongType())
 
 
-def srp_band_blocks(df: DataFrame, id_col: str = "vec_id",
-                    vec_col: str = "embedding", bits: int = 4,
-                    n_tables: int = 8, dim: int = 64, seed: int = 42,
-                    seed_per_table: bool = False) -> DataFrame:
-    """All SRP tables in ONE pass: -> (block_key, id, table, bucket) rows
+def srp_band_blocks(df: DataFrame, bits: int = 4, n_tables: int = 8,
+                    dim: int = 64, seed_per_table: bool = False) -> DataFrame:
+    """All SRP tables in ONE pass: -> (block_key, vec_id, table, bucket) rows
     via a single posexplode, the same banding shape as MinHash-LSH
     (blocking.lsh_blocks). One scan, one explode, no per-table union — at
     10^9 rows this is one key stream instead of n_tables separate plans.
 
-    seed_per_table=True draws table t's hyperplanes from RandomState(seed+t)
-    (first `bits` rows) — the exact plane family of a one-table-per-seed
-    loop, so callers migrating from per-table plans keep identical bucket
-    assignments. Default False is the one-stream family lsh_cosine_pairs
-    bands with (its equality oracle pins it)."""
+    seed_per_table=True draws table t's hyperplanes from
+    RandomState(SRP_SEED + t) (first `bits` rows) — the exact plane family
+    of a one-table-per-seed loop, so callers migrating from per-table plans
+    keep identical bucket assignments. Default False is the one-stream
+    family lsh_cosine_pairs bands with (its equality oracle pins it)."""
     udf = _srp_buckets_udf(
-        _srp_planes(bits, n_tables, dim, seed, seed_per_table), bits)
+        _srp_planes(bits, n_tables, dim, seed_per_table), bits)
     # block_key is an 8-byte long (xxhash64 of table+bucket), matching the
     # text path's band keys (blocking.lsh_blocks): cheaper to shuffle and
     # compare than a varchar "t:b" key at 10^9+ vectors x 64 tables.
     return df.select(
-        F.col(id_col), F.posexplode(udf(F.col(vec_col))).alias("table", "bucket")
+        F.col("vec_id"),
+        F.posexplode(udf(F.col("embedding"))).alias("table", "bucket"),
     ).select(
         F.xxhash64(F.col("table"), F.col("bucket")).alias("block_key"),
-        id_col, "table", "bucket",
+        "vec_id", "table", "bucket",
     )
 
 
@@ -297,8 +311,7 @@ def _shard_band_udf(planes, bits: int, shards: int):
     return band
 
 
-def _shard_kernel(planes, bits: int, shards: int, threshold: float,
-                  id_col: str, vec_col: str):
+def _shard_kernel(planes, bits: int, shards: int, threshold: float):
     """applyInArrow function: one score shard's (shard, id, code_sig,
     embedding) rows -> the shard's pairs (vec_id_a, vec_id_b, unrounded
     cosine). The rows are every vector with a block in this shard, so the
@@ -309,8 +322,8 @@ def _shard_kernel(planes, bits: int, shards: int, threshold: float,
     W = planes.T.copy()
 
     def score_shard(shard: pa.Table) -> pa.Table:
-        ids = shard.column(id_col).combine_chunks().to_numpy()
-        V = _dense_rows(shard.column(vec_col).combine_chunks(),
+        ids = shard.column("vec_id").combine_chunks().to_numpy()
+        V = _dense_rows(shard.column("embedding").combine_chunks(),
                         W.shape[0])[1].astype(np.float64)
         codes = _srp_codes(V, W, bits)
         sig = shard.column("code_sig").combine_chunks().to_numpy()
@@ -336,10 +349,8 @@ def _shard_kernel(planes, bits: int, shards: int, threshold: float,
     return score_shard
 
 
-def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     bits: int = 4, n_tables: int = 64, dim: int = 64,
-                     seed: int = 42) -> DataFrame:
+def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35, bits: int = 4,
+                     n_tables: int = 64, dim: int = 64) -> DataFrame:
     """Embedding near-dup pairs via bucketed LSH: only same-bucket pairs are
     scored — the 100TB-shaped twin of the brute-force theta join
     (plans/queries.q_emb_cosine_dups). Strong OR-amplification (default 64
@@ -385,21 +396,22 @@ def lsh_cosine_pairs(df: DataFrame, threshold: float = 0.35,
     splits = df.rdd.getNumPartitions()
     small_corpus = splits < par
     shards = 2 * par if small_corpus else splits
-    planes = _srp_planes(bits, n_tables, dim, seed)
-    band = _shard_band_udf(planes, bits, shards)(F.col(vec_col))
-    vec = [] if small_corpus else [vec_col]   # else attached by broadcast
+    planes = _srp_planes(bits, n_tables, dim)
+    band = _shard_band_udf(planes, bits, shards)(F.col("embedding"))
+    vec = [] if small_corpus else ["embedding"]   # else attached by broadcast
     # an explicit count: scoring is quadratic per block while a banded row
     # is a few bytes, so AQE's byte-based coalescing would pack all shards
     # into 1-2 tasks
     rows = (
-        df.select(id_col, *vec, band.alias("band"))
-        .select(F.explode("band.shards").alias("shard"), id_col,
+        df.select("vec_id", *vec, band.alias("band"))
+        .select(F.explode("band.shards").alias("shard"), "vec_id",
                 F.col("band.sig").alias("code_sig"), *vec)
         .repartition(shards, "shard")
     )
     if small_corpus:
-        rows = rows.join(F.broadcast(df.select(id_col, vec_col)), id_col)
-    score = _shard_kernel(planes, bits, shards, threshold, id_col, vec_col)
+        rows = rows.join(F.broadcast(df.select("vec_id", "embedding")),
+                         "vec_id")
+    score = _shard_kernel(planes, bits, shards, threshold)
     return (
         rows.groupBy("shard")
         .applyInArrow(score, "vec_id_a long, vec_id_b long, cosine double")
@@ -416,99 +428,46 @@ def suggest_n_cells(corpus_rows: int) -> int:
     return max(1, min(65536, int(round(corpus_rows ** 0.5))))
 
 
-def ivf_train(corpus: DataFrame, n_cells: int = 16, iters: int = 3,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              dim: int = 64,
-              train_sample_mod: int | None = None) -> list[list[float]]:
-    """Deterministic k-means coarse quantizer (Lloyd iterations, all
-    DataFrame ops): init = the vectors of the n_cells smallest ids
-    (data-dependent, seedless, reproducible); each iteration assigns rows
-    to their nearest centroid via the batched codebook-matmul UDF
-    (_ivf_cells_udf) and recomputes per-dimension means with one
-    groupBy. Centroids are k x dim floats — driver-resident by design
+def ivf_train(corpus: DataFrame, n_cells: int = 16) -> list[list[float]]:
+    """Deterministic k-means coarse quantizer, trained on the driver: the
+    1/IVF_SAMPLE_MOD subset pmod(xxhash64(vec_id), IVF_SAMPLE_MOD) == 0 is
+    collected once (a fixed function of ids), init = the vectors of its
+    n_cells smallest ids (seedless), then IVF_ITERS Lloyd iterations in
+    numpy. Assignment follows _ivf_cells_udf (squared L2 as
+    |c|^2 - 2 v.C, first-minimum tie-break); an empty cell keeps its
+    centroid. Centroids are k x dim floats — driver-resident by design
     (the coarse codebook of an IVF index is broadcast state, like a
     dimension table).
 
-    train_sample_mod=M trains on the deterministic 1/M subset
-    pmod(xxhash64(id), M) == 0 — at 10^9+ rows Lloyd does not need the
-    full corpus to place ~sqrt(n) centroids, and the sample cuts every
-    training scan by M while the one full-corpus ASSIGNMENT pass
-    (ivf_assign) is unchanged. Deterministic: the subset is a fixed
-    function of ids. If the sample holds fewer than n_cells rows the
-    sample is ignored (full-corpus training) so tiny corpora never train
-    a degenerate codebook. None = train on everything.
-
-    Round 6: the SAMPLED path collects the sample once and runs Lloyd in
-    driver-side numpy (same init: the n_cells smallest-id sample vectors;
-    same assignment rule as _ivf_cells_udf: squared-L2 via
-    |c|^2 - 2 v.C with first-minimum tie-break; empty cells keep their
-    centroid). The distributed loop ran iters+1 driver-synchronized jobs,
-    each planning + codegening a fresh 64-column aggregation — measured
-    ~1.5-2 s of serial driver latency per codebook at catalog scale for
-    ~1 ms of arithmetic. The sample is bounded driver state by
-    construction (1/M of the corpus; choose M so n/M stays collectable —
-    the codebook itself is already driver-resident broadcast state).
-    Codebook floats may differ from the distributed reduction in final
-    ulps (summation order); every consumer is tie-robust (IVF recall is
-    partition-complete for any codebook — inv_ivf_recall).
-    train_sample_mod=None keeps the distributed loop unchanged.
-
-    Scale shape: training is one sampled scan + driver k-means; the
-    full-corpus path stays one scan + one n_cells-group aggregation per
-    iteration.
-    """
-    full = corpus.select(id_col, vec_col)
-    if train_sample_mod is not None and train_sample_mod > 1:
-        rows = (
-            full.filter(F.pmod(F.xxhash64(F.col(id_col)),
-                               F.lit(train_sample_mod)) == 0)
-            .collect()
-        )
-        if len(rows) >= n_cells:
-            ids = np.array([r[id_col] for r in rows])
-            M = np.array([r[vec_col] for r in rows], dtype=np.float64)
-            C = M[np.argsort(ids, kind="stable")[:n_cells]].copy()
-            for _ in range(iters):
-                d = (C * C).sum(axis=1)[None, :] - 2.0 * (M @ C.T)
-                assign = np.argmin(d, axis=1)  # first-min tie-break,
-                # matching _ivf_cells_udf's stable argsort
-                for c in range(n_cells):
-                    members = M[assign == c]
-                    if len(members):
-                        C[c] = members.mean(axis=0)
-            return [[float(x) for x in row] for row in C]
-        # sample too small for the codebook — deterministic full-corpus
-        # fallback (the distributed loop below)
-
-    # every Lloyd iteration (and the seed collect) scans the corpus: cache
-    # the lean (id, vec) projection for the duration of training instead
-    # of re-reading the source per iteration (at scale: iters+1 scans ->
-    # one scan + cached reads)
-    lean = full.cache()
-    try:
-        seeds = lean.orderBy(id_col).limit(n_cells).collect()
-        centroids = [list(map(float, r[vec_col])) for r in seeds]
-        for _ in range(iters):
-            cell_udf = _ivf_cells_udf(centroids, n_nearest=1)
-            assigned = lean.select(
-                vec_col, cell_udf(F.col(vec_col))[0].alias("cell"))
-            sums = assigned.groupBy("cell").agg(
-                F.count("*").alias("n"),
-                *[F.sum(F.col(vec_col)[i].cast("double")).alias(f"s{i}")
-                  for i in range(dim)],
-            ).collect()
-            new = list(centroids)
-            for r in sums:
-                if r["n"] > 0:
-                    new[int(r["cell"])] = [r[f"s{i}"] / r["n"]
-                                           for i in range(dim)]
-            centroids = new
-    finally:
-        lean.unpersist()
-    return centroids
+    At 10^9+ rows Lloyd does not need the full corpus to place ~sqrt(n)
+    centroids: the sample is bounded driver state (IVF_SAMPLE_MOD is chosen
+    so n / IVF_SAMPLE_MOD stays collectable), and only the one full-corpus
+    assignment pass (ivf_cosine_topk) scales with n. A sample with fewer
+    than n_cells rows (a corpus under IVF_SAMPLE_MOD x n_cells rows, itself
+    small enough to collect) is replaced by the whole corpus, so a tiny
+    corpus never trains a degenerate codebook. Every consumer is
+    tie-robust: IVF recall is partition-complete for any codebook
+    (inv_ivf_recall)."""
+    vecs = corpus.select("vec_id", "embedding")
+    rows = vecs.filter(F.pmod(F.xxhash64(F.col("vec_id")),
+                              F.lit(IVF_SAMPLE_MOD)) == 0).collect()
+    if len(rows) < n_cells:
+        rows = vecs.collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    M = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    C = M[np.argsort(ids, kind="stable")[:n_cells]].copy()
+    for _ in range(IVF_ITERS):
+        d = (C * C).sum(axis=1)[None, :] - 2.0 * (M @ C.T)
+        assign = np.argmin(d, axis=1)  # first-min tie-break, matching
+        # _ivf_cells_udf's stable argsort
+        for c in range(n_cells):
+            members = M[assign == c]
+            if len(members):
+                C[c] = members.mean(axis=0)
+    return [[float(x) for x in row] for row in C]
 
 
-def _ivf_cells_udf(centroids: list[list[float]], n_nearest: int = 1):
+def _ivf_cells_udf(centroids: list[list[float]], n_nearest: int):
     """Arrow UDF: embedding -> the n_nearest cell ids by squared L2
     distance to the (constant, driver-resident) codebook — one numpy
     distance matrix per batch, ||v-c||^2 = |v|^2 - 2 v.C + |c|^2, stable
@@ -524,51 +483,33 @@ def _ivf_cells_udf(centroids: list[list[float]], n_nearest: int = 1):
         .astype(np.int32), C.shape[1], T.IntegerType())
 
 
-def ivf_assign(df: DataFrame, centroids: list[list[float]],
-               vec_col: str = "embedding") -> DataFrame:
-    """Attach the nearest-centroid cell id (0-based) — the IVF inverted
-    list key (batched matmul UDF against the broadcast codebook)."""
-    udf = _ivf_cells_udf(centroids, n_nearest=1)
-    return df.withColumn("cell", udf(F.col(vec_col))[0])
-
-
 def ivf_cosine_topk(corpus: DataFrame, probes: DataFrame,
                     centroids: list[list[float]], k: int = 10,
-                    n_probe: int = 4, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
+                    n_probe: int = 4) -> DataFrame:
     """IVF search: each probe scans only its n_probe nearest cells —
     the equi-join on cell replaces the cross join, so work scales with
     the probed fraction of the corpus (n_probe / n_cells), the classic
     IVF recall/cost dial. n_probe = n_cells degenerates to exact brute
     force (partition-completeness — the basis of the inv_ivf_recall
-    oracle). Top-k per probe via window with deterministic tie-break.
+    oracle). Each corpus vector's nearest cell id (0-based) is its
+    inverted-list key. Top-k per probe via window with deterministic
+    tie-break.
     """
-    n_cells = len(centroids)
     probe_cells_udf = _ivf_cells_udf(centroids,
-                                     n_nearest=min(n_probe, n_cells))
-    pc = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("pv"),
-        _norm(F.col(vec_col)).alias("pn"),
-        F.explode(probe_cells_udf(F.col(vec_col))).alias("cell"),
-    )
-    cc = ivf_assign(
-        corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("cv"),
-                      _norm(F.col(vec_col)).alias("cn")), centroids, "cv")
+                                     min(n_probe, len(centroids)))
+    pc = _vectors(probes, "probe_id", "p",
+                  F.explode(probe_cells_udf(F.col("embedding"))).alias("cell"))
+    cc = _vectors(corpus, "neighbor_id", "c").withColumn(
+        "cell", _ivf_cells_udf(centroids, 1)(F.col("cv"))[0])
     scored = (
         cc.join(F.broadcast(pc), "cell")
         .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("pv"), F.col("cv"))
-                    / (F.col("pn") * F.col("cn")), 6),
-        )
+        .withColumn("cosine", _cosine6())
     )
     return _top_k(scored, k)
 
 
 def lsh_cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     bits: int = 4, n_tables: int = 8, dim: int = 64
                     ) -> DataFrame:
     """Bucketed ANN with multi-table OR-amplification: a pair is a
@@ -585,36 +526,21 @@ def lsh_cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 10,
     more tables -> higher recall (linear cost in banding columns, not in
     corpus scans).
     """
-    cb = srp_band_blocks(corpus, id_col, vec_col, bits, n_tables, dim,
-                         seed=42, seed_per_table=True).withColumnRenamed(
-        id_col, "neighbor_id")
-    pb = srp_band_blocks(probes, id_col, vec_col, bits, n_tables, dim,
-                         seed=42, seed_per_table=True).withColumnRenamed(
-        id_col, "probe_id")
+    cb = srp_band_blocks(corpus, bits, n_tables, dim,
+                         seed_per_table=True).withColumnRenamed(
+        "vec_id", "neighbor_id")
+    pb = srp_band_blocks(probes, bits, n_tables, dim,
+                         seed_per_table=True).withColumnRenamed(
+        "vec_id", "probe_id")
     pairs = (
         cb.join(F.broadcast(pb), "block_key")
         .select("probe_id", "neighbor_id")
         .filter(F.col("probe_id") != F.col("neighbor_id"))
         .distinct()
     )
-
-    # norms are per-VECTOR quantities: hoist the O(dim) norm fold to the
-    # per-vector projections (same as cosine_topk / lsh_cosine_pairs /
-    # ivf_cosine_topk) so a neighbor colliding with many probes folds its
-    # norm once, not once per candidate-pair row; only the dot is per-pair
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("cv"),
-                       _norm(F.col(vec_col)).alias("cn"))
-    pv = probes.select(F.col(id_col).alias("probe_id"),
-                       F.col(vec_col).alias("pv"),
-                       _norm(F.col(vec_col)).alias("pn"))
     scored = (
-        pairs.join(cv, "neighbor_id")
-        .join(F.broadcast(pv), "probe_id")
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("pv"), F.col("cv"))
-                    / (F.col("pn") * F.col("cn")), 6),
-        )
+        pairs.join(_vectors(corpus, "neighbor_id", "c"), "neighbor_id")
+        .join(F.broadcast(_vectors(probes, "probe_id", "p")), "probe_id")
+        .withColumn("cosine", _cosine6())
     )
     return _top_k(scored, k)

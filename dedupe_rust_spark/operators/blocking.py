@@ -52,12 +52,6 @@ from pyspark.sql import DataFrame, functions as F
 
 DEFAULT_MAX_BLOCK = 512
 
-# columns a representative carries into blocking — everything else
-# (text, minhash, simhash ...) is re-attached from the signatures table
-# by id where needed, so the exact-collapse agg shuffles ~70 B/row
-# instead of the full ~1 KB signature row
-REP_COLS = ("id", "url", "host", "first_line", "bands")
-
 
 def _first_line(text_col):
     return F.substring_index(text_col, "\n", 1)
@@ -164,6 +158,16 @@ DEFAULT_HOT_BOUND = 1 << 16  # pre-salt keys above ~64k members (≈512 KB/row)
 HOT_SAMPLE_MOD = 128         # deterministic 1/128 member sample for detection
 
 
+def hot_key_census(blocks: DataFrame, hot_bound: int) -> DataFrame:
+    """(block_key, count) of the keys whose 1/HOT_SAMPLE_MOD member sample
+    puts them above ~hot_bound/2 members: what _presalt_hot_keys collects."""
+    return (
+        blocks.filter(F.pmod(F.xxhash64("id"), F.lit(HOT_SAMPLE_MOD)) == 0)
+        .groupBy("block_key").count()
+        .filter(F.col("count") * HOT_SAMPLE_MOD >= hot_bound / 2)
+    )
+
+
 def _presalt_hot_keys(blocks: DataFrame, max_block: int, hot_bound: int
                       ) -> tuple[DataFrame, DataFrame | None]:
     """Guard the grouping aggregation against pathological hot keys: the
@@ -189,12 +193,7 @@ def _presalt_hot_keys(blocks: DataFrame, max_block: int, hot_bound: int
     Hot keys are collected to the driver: each is ≥ hot_bound members, so
     at most |stream|/hot_bound keys exist (~thousands at 100 TB) — bounded
     driver state, like an AQE skew-join's per-partition stats."""
-    sampled = (
-        blocks.filter(F.pmod(F.xxhash64("id"), F.lit(HOT_SAMPLE_MOD)) == 0)
-        .groupBy("block_key").count()
-        .filter(F.col("count") * HOT_SAMPLE_MOD >= hot_bound / 2)
-        .collect()
-    )
+    sampled = hot_key_census(blocks, hot_bound).collect()
     if not sampled:
         return blocks, None
     spark = blocks.sparkSession

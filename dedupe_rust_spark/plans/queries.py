@@ -19,7 +19,18 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.pages import spread
+from ..datagen import pages_dir_for
+from ..functions.textstats import _LANG_MARKERS
+from ..functions.udfs import signatures_udf
+from ..operators import ann, blocking
+from ..operators.candidates import candidate_pairs
+from ..operators.cluster import connected_components
+from ..operators.multimodal import image_features
+from ..operators.signatures import signatures as sig_stage
+from ..operators.textops import (fingerprints, language_id, quality_columns,
+                                 token_counts)
+from ..sources.pages import clean_pages, spread
+from .pipeline import DedupPipeline, PipelineConfig
 
 # ---------------------------------------------------------------------------
 # dup-injected pages: Spark + SQL twins
@@ -41,12 +52,21 @@ _DPAGES_SQL = """
 """
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _table(spark, sf_dir, "embeddings")
+
+
+def _probes(emb: DataFrame) -> DataFrame:
+    """The catalog's 10 ANN probe vectors."""
+    return emb.filter(F.col("vec_id") < 10)
 
 
 def dpages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = _table(spark, sf_dir, "documents")
     base = d.select(
         F.concat(
             F.lit("https://host"), (F.col("doc_id") % 50).cast("string"),
@@ -68,10 +88,15 @@ def dpages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionAll(mirror).unionAll(archive)
 
 
+def _text_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dpages rows that have a text."""
+    return dpages(spark, sf_dir).filter(F.col("text").isNotNull())
+
+
 def _hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dpages + md5 text hash (md5 = engine-portable; Spark's xxhash64 has
     no DuckDB twin). Production signatures use sha256 (operators/signatures)."""
-    return dpages(spark, sf_dir).filter(F.col("text").isNotNull()).withColumn(
+    return _text_pages(spark, sf_dir).withColumn(
         "th", F.md5(F.col("text").cast("binary"))
     )
 
@@ -81,6 +106,67 @@ _HASHED_SQL = f"""
     SELECT url, text, lang, doc_id, md5(text) AS th
     FROM dpages WHERE text IS NOT NULL
 """
+
+
+# ---------------------------------------------------------------------------
+# compositions shared by several queries
+# ---------------------------------------------------------------------------
+
+def _words(pages: DataFrame) -> DataFrame:
+    """(url, w): each page's whitespace-split words, pages of >= 3 only."""
+    return (pages.select("url", F.split(F.trim(F.col("text")), r"\s+")
+                         .alias("w"))
+            .filter(F.size("w") >= 3))
+
+
+def _trigrams(pages: DataFrame) -> DataFrame:
+    """(url, shingle): every word 3-gram of every page, repeats kept."""
+    return _words(pages).select(
+        "url",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("w") - 3),
+                lambda i: F.concat_ws(" ", F.col("w")[i], F.col("w")[i + 1],
+                                      F.col("w")[i + 2]),
+            )
+        ).alias("shingle"),
+    )
+
+
+def _exact_pairs(df: DataFrame, key: str, *extra) -> DataFrame:
+    """(url_a, url_b, *extra): every url pair of `df` that shares `key`,
+    url_a < url_b."""
+    s = df.select("url", key)
+    a, b = s.alias("a"), s.alias("b")
+    return (
+        a.join(b, key)
+        .filter(F.col("a.url") < F.col("b.url"))
+        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"),
+                *extra)
+    )
+
+
+def _url_pairs(pairs: DataFrame, urls: DataFrame, *extra) -> DataFrame:
+    """(id_a, id_b) pairs -> (url_a, url_b, *extra), urls joined back from
+    the (id, url) map and put in canonical least/greatest order."""
+    return (
+        pairs
+        .join(urls.withColumnsRenamed({"id": "id_a", "url": "_ua"}), "id_a")
+        .join(urls.withColumnsRenamed({"id": "id_b", "url": "_ub"}), "id_b")
+        .select(F.least("_ua", "_ub").alias("url_a"),
+                F.greatest("_ua", "_ub").alias("url_b"), *extra)
+    )
+
+
+def _exact_group_census(d: DataFrame, col: str) -> DataFrame:
+    """(th, n_pages, n_clusters): per exact-duplicate group (a th shared by
+    more than one page), the count of distinct `col` values."""
+    return (
+        d.groupBy("th")
+        .agg(F.count("*").alias("n_pages"),
+             F.count_distinct(col).alias("n_clusters"))
+        .filter(F.col("n_pages") > 1)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -114,8 +200,6 @@ def q_s3_exclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3: exclusion filter (IN-list on host) through the real source path
     (sources.clean_pages, the reference's excluded-folder predicate,
     main.rs:144-152) — host census after dropping two excluded hosts."""
-    from ..sources.pages import clean_pages
-
     pages = dpages(spark, sf_dir).select(
         "url", F.lit(None).cast("timestamp").alias("warc_ts"),
         F.lit(None).cast("binary").alias("html"), "text", "lang")
@@ -165,8 +249,7 @@ def q_h1_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H1/B1: cheap prefix-hash signature -> group sizes >= 2 (the
     reference's 3,000-byte quick_scan tier, main.rs:452-498)."""
     return (
-        dpages(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
+        _text_pages(spark, sf_dir)
         .withColumn("prefix_hash",
                     F.md5(F.substring(F.col("text"), 1, 100).cast("binary")))
         .groupBy("prefix_hash")
@@ -208,14 +291,8 @@ SQL_D2 = f"""
 
 def q_b1_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B1: equi self-join on block key, url_a < url_b canonical order."""
-    h = _hashed(spark, sf_dir).select("url", "th")
-    a, b = h.alias("a"), h.alias("b")
-    return (
-        a.join(b, "th")
-        .filter(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"),
-                F.col("th").alias("block_key"))
-    )
+    return _exact_pairs(_hashed(spark, sf_dir), "th",
+                        F.col("th").alias("block_key"))
 
 
 SQL_B1 = f"""
@@ -251,21 +328,7 @@ SQL_O3 = f"""
 def q_ngram_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingling as a set-cardinality query: distinct word-3-gram count per
     page band — exercises split/explode/windowless agg, SQL-portable."""
-    toks = (
-        spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
-        .select("url", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-    )
-    tri = toks.select(
-        "url",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - 3),
-                lambda i: F.concat_ws(" ", F.col("w")[i], F.col("w")[i + 1],
-                                      F.col("w")[i + 2]),
-            )
-        ).alias("shingle"),
-    )
+    tri = _trigrams(spread(_text_pages(spark, sf_dir)))
     return tri.groupBy("url").agg(
         F.count_distinct("shingle").alias("n_shingles")
     )
@@ -323,23 +386,7 @@ def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus containing \\x0B whitespace would shingle differently in the
     two engines; the oracle corpus never does (gate green), and aligning
     the patterns would require editing the frozen oracle SQL text."""
-    tri0 = (
-        spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
-        .select("url", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-        .select(
-            "url",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("w") - 3),
-                    lambda i: F.concat_ws(" ", F.col("w")[i],
-                                          F.col("w")[i + 1],
-                                          F.col("w")[i + 2]),
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+    tri0 = _trigrams(spread(_text_pages(spark, sf_dir))).distinct()
     # surrogate longs: id = xxhash64(url), sh = xxhash64(shingle) — every
     # downstream exchange moves 16 B keys, not ~90-130 B string pairs
     tri = tri0.select(F.xxhash64("url").alias("id"),
@@ -347,12 +394,8 @@ def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # id -> url map straight from the (url-unique) source projection — NOT
     # from tri0, whose explode+distinct subtree would otherwise be planned
     # a second time just to recover the url column
-    urls = (
-        dpages(spark, sf_dir).filter(F.col("text").isNotNull())
-        .select("url", F.split(F.trim(F.col("text")), r"\s+").alias("w"))
-        .filter(F.size("w") >= 3)
-        .select(F.xxhash64("url").alias("id"), "url")
-    )
+    urls = _words(_text_pages(spark, sf_dir)).select(
+        F.xxhash64("url").alias("id"), "url")
     # global shingle frequency via a count window over the SAME key the
     # aggregation would shuffle on (guide §2.4: window keyed like the
     # preceding aggregation shares its exchange): one scan + one exchange
@@ -410,13 +453,7 @@ def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("na") + F.col("nb") - F.col("inter")).cast("double"), 4))
         .select("id_a", "id_b", "jacc")
     )
-    return (
-        verified
-        .join(urls.withColumnsRenamed({"id": "id_a", "url": "_ua"}), "id_a")
-        .join(urls.withColumnsRenamed({"id": "id_b", "url": "_ub"}), "id_b")
-        .select(F.least("_ua", "_ub").alias("url_a"),
-                F.greatest("_ua", "_ub").alias("url_b"), "jacc")
-    )
+    return _url_pairs(verified, urls, "jacc")
 
 
 SQL_NGRAM_JACC = f"""
@@ -453,8 +490,7 @@ def q_tokens_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-analysis ops: whitespace token count + length-based quality
     band per page (built-in expressions only)."""
     return (
-        dpages(spark, sf_dir)
-        .filter(F.col("text").isNotNull())
+        _text_pages(spark, sf_dir)
         .select(
             "url",
             F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long")
@@ -478,14 +514,9 @@ SQL_TOKENS = f"""
 def q_emb_label_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding table census with rounded L2 norm stats (vector column
     handling via higher-order functions, JVM-side)."""
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    norm = F.sqrt(F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    ))
     return (
-        emb.select("label", norm.alias("nrm"))
+        _emb(spark, sf_dir)
+        .select("label", ann._norm(F.col("embedding")).alias("nrm"))
         .groupBy("label")
         .agg(F.count("*").alias("n"),
              F.round(F.avg("nrm"), 4).alias("avg_norm"))
@@ -502,21 +533,15 @@ SQL_EMB_CENSUS = """
 
 def q_emb_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (brute force; the LSH-bucketed
-    scale path is operators/ann.lsh_cosine_topk). Rounded to 4 decimals so
-    the float comparison is engine-portable."""
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    dot = F.aggregate(
-        F.zip_with(F.col("a.embedding"), F.col("b.embedding"),
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-    norm = lambda side: F.sqrt(F.aggregate(  # noqa: E731
-        F.col(f"{side}.embedding"), F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double")))
+    scale path is operators/ann.lsh_cosine_pairs, q_lsh_emb_dups). Rounded
+    to 4 decimals so the float comparison is engine-portable."""
+    emb = _emb(spark, sf_dir)
+    va, vb = F.col("a.embedding"), F.col("b.embedding")
     a, b = emb.alias("a"), emb.alias("b")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("cosine", F.round(dot / (norm("a") * norm("b")), 4))
+        .withColumn("cosine", F.round(ann._dot(va, vb)
+                                      / (ann._norm(va) * ann._norm(vb)), 4))
         .filter(F.col("cosine") >= 0.35)
         .select(F.col("a.vec_id").alias("vec_id_a"),
                 F.col("b.vec_id").alias("vec_id_b"), "cosine")
@@ -544,9 +569,7 @@ SQL_EMB_DUPS = """
 
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4/Gopher-style quality gate, builtin expressions only."""
-    from ..operators.textops import quality_columns
-
-    d = dpages(spark, sf_dir).filter(F.col("text").isNotNull())
+    d = _text_pages(spark, sf_dir)
     return quality_columns(d).select(
         "url", "n_chars", "n_words", "alpha_ratio", "quality_keep"
     )
@@ -580,9 +603,7 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted-language tie-break — DuckDB recomputes it from first principles
     (regexp_extract_all + list_intersect), so detector ACCURACY (the full
     lang x lang_detected census), not just determinism, is value-checked."""
-    from ..operators.textops import language_id
-
-    d = dpages(spark, sf_dir).filter(F.col("text").isNotNull())
+    d = _text_pages(spark, sf_dir)
     return (
         language_id(d)
         .groupBy("lang", "lang_detected")
@@ -591,8 +612,6 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _markers_sql(lang: str) -> str:
-    from ..functions.textstats import _LANG_MARKERS
-
     return "[" + ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang]) + "]"
 
 
@@ -630,9 +649,7 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style rolling-hash fingerprints. HARD ORACLE since round 3:
     the operator is all-builtin (min md5 over 64-char blocks at step 32,
     operators/textops.fingerprints), which DuckDB evaluates identically."""
-    from ..operators.textops import fingerprints
-
-    d = dpages(spark, sf_dir).filter(F.col("text").isNotNull())
+    d = _text_pages(spark, sf_dir)
     return fingerprints(d).select("url", "fingerprint")
 
 
@@ -677,8 +694,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle can recompute it arithmetically; the fake decode feature vector
     is pytest-verified instead (arrays break the driver's canonicalizer).
     """
-    from ..operators.multimodal import image_features
-
     w = (F.col("doc_id") % 97 + 1).cast("long")
     h = (F.col("doc_id") % 53 + 1).cast("long")
     png = F.concat(
@@ -696,7 +711,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("doc_id") % 3 == 1, gif)
         .otherwise(webp)
     )
-    d = dpages(spark, sf_dir).filter(F.col("text").isNotNull()).select(
+    d = _text_pages(spark, sf_dir).select(
         "url",
         F.concat(hdr, F.encode(F.col("text"), "utf-8")).alias("content"),
     )
@@ -722,9 +737,7 @@ SQL_MULTIMODAL = f"""
 def q_w1_topk_per_host(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window function: top-3 longest pages per host (candidate-explosion
     capping pattern, SURVEY.md §2.1 windows)."""
-    from pyspark.sql import Window
-
-    d = dpages(spark, sf_dir).filter(F.col("text").isNotNull()).withColumn(
+    d = _text_pages(spark, sf_dir).withColumn(
         "host", F.regexp_extract(F.col("url"), r"https://([^/]+)/", 1)
     )
     w = Window.partitionBy("host").orderBy(
@@ -778,7 +791,7 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation over the events stream table (batch
     form of the streaming rollup; string-formatted bucket for engine-
     portable comparison)."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = _table(spark, sf_dir, "events")
     bucket = F.date_format(F.date_trunc("hour", F.col("ts")),
                            "yyyy-MM-dd HH:mm:ss")
     return (
@@ -797,9 +810,7 @@ SQL_EVENTS_HOURLY = """
 
 def q_events_user_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag() window over event time per user: mean inter-event gap."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = _table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts")
     # ts is TIMESTAMP_NTZ; session tz is UTC so the cast chain yields the
     # same wall-clock seconds DuckDB's epoch(ts) produces
@@ -828,7 +839,7 @@ SQL_EVENTS_GAPS = """
 
 def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction from the props column (semi-structured scalar fn)."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = _table(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return (
         ev.select("event_type", k.alias("k"))
@@ -849,7 +860,7 @@ SQL_EVENTS_JSON = """
 
 def q_lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped agg: partial+final hash aggregation over lineitem."""
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = _table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -875,8 +886,8 @@ SQL_LINEITEM = """
 
 def q_order_customer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast equi-join: orders x customer, revenue per market segment."""
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    c = spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+    o = _table(spark, sf_dir, "orders")
+    c = _table(spark, sf_dir, "customer")
     return (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .groupBy("c_mktsegment")
@@ -911,38 +922,25 @@ def _dpages_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("host", F.parse_url("url", F.lit("HOST")))
 
 
-def _dedup_labels(spark: SparkSession, pages: DataFrame, **cfg) -> DataFrame:
-    """The full pipeline's (url, cluster_id) labels on golden-text pages,
-    fast path (no out_dir, no checkpoints)."""
-    from .pipeline import DedupPipeline, PipelineConfig
-
-    return DedupPipeline(spark, pages, config=PipelineConfig(
-        use_golden_text=True, checkpoints=False, **cfg)).run()
+def _dedup_labels(spark: SparkSession, sf_dir: str, **cfg) -> DataFrame:
+    """The full pipeline's (url, cluster_id) labels on the golden-text
+    dpages, fast path (no out_dir, no checkpoints)."""
+    config = PipelineConfig(use_golden_text=True, checkpoints=False, **cfg)
+    return DedupPipeline(spark, _dpages_as_pages(spark, sf_dir),
+                         config=config).run()
 
 
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH banded candidate pairs over dpages (fuzzy blocking).
     The fuzzy path runs on surrogate long ids; urls are joined back here at
     output, canonicalized url_a < url_b."""
-    from ..operators import blocking
-    from ..operators.candidates import candidate_pairs
-    from ..operators.signatures import signatures as sig_stage
-
     sig = sig_stage(spread(_dpages_as_pages(spark, sf_dir))
                     ).localCheckpoint(eager=False)
     reps = blocking.exact_representatives(sig)
     blocks = blocking.lsh_blocks(reps)
     pruned, _ = blocking.prune_blocks(blocks)
-    cands = candidate_pairs(pruned)
-    urls = sig.select("id", "url")
-    return (
-        cands
-        .join(urls.withColumnsRenamed({"id": "id_a", "url": "_ua"}), "id_a")
-        .join(urls.withColumnsRenamed({"id": "id_b", "url": "_ub"}), "id_b")
-        .select(F.least("_ua", "_ub").alias("url_a"),
-                F.greatest("_ua", "_ub").alias("url_b"),
-                F.col("block_key").cast("string").alias("block_key"))
-    )
+    return _url_pairs(candidate_pairs(pruned), sig.select("id", "url"),
+                      F.col("block_key").cast("string").alias("block_key"))
 
 
 def q_inv_exact_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -953,7 +951,7 @@ def q_inv_exact_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids) must equal (group size, 1) — which is exactly what the DuckDB twin
     computes from first principles. The reference's semantics anchor:
     equality groups ARE clusters (main.rs:616-624)."""
-    out = _dedup_labels(spark, _dpages_as_pages(spark, sf_dir))
+    out = _dedup_labels(spark, sf_dir)
     h = _hashed(spark, sf_dir).select("url", "th")
     groups = (h.groupBy("th").agg(F.count("*").alias("_n"))
               .filter(F.col("_n") > 1).select("th"))
@@ -983,7 +981,7 @@ def q_inv_exact_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB asserts both booleans true for every group from first
     principles; a labeling bug (wrong min, propagate join dropping the
     relabel, off-by-one cluster sizing) flips a row."""
-    out = _dedup_labels(spark, _dpages_as_pages(spark, sf_dir))
+    out = _dedup_labels(spark, sf_dir)
     h = _hashed(spark, sf_dir).select("url", "th")
     groups = (h.groupBy("th")
               .agg(F.count("*").alias("_gn"), F.min("url").alias("_gmin"))
@@ -1020,28 +1018,11 @@ def q_inv_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair — the shipped configuration's end-to-end labels are oracled
     by inv_star_clusters (star mode ≡ clique mode clusters on this
     corpus)."""
-    from ..operators import blocking
-    from ..operators.candidates import candidate_pairs
-    from ..operators.signatures import signatures as sig_stage
-
     sig = sig_stage(spread(_dpages_as_pages(spark, sf_dir))).localCheckpoint()
     pruned, _ = blocking.prune_blocks(blocking.lsh_blocks(sig))
-    urls = sig.select("id", "url")
-    cands = (
-        candidate_pairs(pruned, keep_block_key=False)
-        .join(urls.withColumnsRenamed({"id": "id_a", "url": "_ua"}), "id_a")
-        .join(urls.withColumnsRenamed({"id": "id_b", "url": "_ub"}), "id_b")
-        .select(F.least("_ua", "_ub").alias("url_a"),
-                F.greatest("_ua", "_ub").alias("url_b"))
-    )
-    s = sig.select("url", "text_sha256")
-    a, b = s.alias("a"), s.alias("b")
-    exact_pairs = (
-        a.join(b, "text_sha256")
-        .filter(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-    )
-    return exact_pairs.join(cands, ["url_a", "url_b"])
+    cands = _url_pairs(candidate_pairs(pruned, keep_block_key=False),
+                       sig.select("id", "url"))
+    return _exact_pairs(sig, "text_sha256").join(cands, ["url_a", "url_b"])
 
 
 SQL_INV_LSH = f"""
@@ -1062,12 +1043,11 @@ def q_inv_star_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every page from first principles; any label that star pruning
     changes (a lost boundary pair that transitivity does not recover)
     flips its row."""
-    pages = _dpages_as_pages(spark, sf_dir)
-    star = _dedup_labels(spark, pages).withColumnsRenamed(
+    star = _dedup_labels(spark, sf_dir).withColumnsRenamed(
         {"cluster_id": "_star"})
-    clique = _dedup_labels(spark, pages, star_min_block=None
+    clique = _dedup_labels(spark, sf_dir, star_min_block=None
                            ).withColumnsRenamed({"cluster_id": "_clique"})
-    urls = dpages(spark, sf_dir).filter(F.col("text").isNotNull()).select("url")
+    urls = _text_pages(spark, sf_dir).select("url")
     return (
         urls.join(star, "url", "left").join(clique, "url", "left")
         .select("url", F.col("_star").eqNullSafe(F.col("_clique"))
@@ -1085,31 +1065,16 @@ def q_inv_simhash_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HARD ORACLE for the SimHash UDF (H1-fuzzy determinism): identical
     texts must get identical simhashes — per exact group, distinct simhash
     count is 1."""
-    from ..functions.udfs import signatures_udf
-
     d = spread(_hashed(spark, sf_dir)).withColumn(
         "simhash", signatures_udf(F.col("text")).getField("simhash"))
-    return (
-        d.groupBy("th")
-        .agg(F.count("*").alias("n_pages"),
-             F.count_distinct("simhash").alias("n_sims"))
-        .filter(F.col("n_pages") > 1)
-        .select("th", "n_pages", F.col("n_sims").alias("n_clusters"))
-    )
+    return _exact_group_census(d, "simhash")
 
 
 def q_inv_fingerprint_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HARD ORACLE for the winnowing fingerprint UDF: identical texts ->
     identical fingerprints (distinct count 1 per exact group)."""
-    from ..operators.textops import fingerprints
-
-    d = fingerprints(_hashed(spark, sf_dir))
-    return (
-        d.groupBy("th")
-        .agg(F.count("*").alias("n_pages"),
-             F.count_distinct("fingerprint").alias("n_clusters"))
-        .filter(F.col("n_pages") > 1)
-    )
+    return _exact_group_census(fingerprints(_hashed(spark, sf_dir)),
+                               "fingerprint")
 
 
 def q_inv_langid_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1118,15 +1083,8 @@ def q_inv_langid_consistent(spark: SparkSession, sf_dir: str) -> DataFrame:
     The detector's accuracy vs the stored lang column stays a rows-only
     census (q_langid) — the n-gram profile matcher itself is not
     SQL-expressible."""
-    from ..operators.textops import language_id
-
-    d = language_id(_hashed(spark, sf_dir))
-    return (
-        d.groupBy("th")
-        .agg(F.count("*").alias("n_pages"),
-             F.count_distinct("lang_detected").alias("n_clusters"))
-        .filter(F.col("n_pages") > 1)
-    )
+    return _exact_group_census(language_id(_hashed(spark, sf_dir)),
+                               "lang_detected")
 
 
 def q_lsh_emb_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1134,10 +1092,7 @@ def q_lsh_emb_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale twin of q_emb_cosine_dups (same output, same DuckDB oracle): only
     same-bucket pairs are scored; 64 tables x 4 bits drive recall at
     cosine>=0.35 to 1 on this corpus, so brute force is an equality oracle."""
-    from ..operators.ann import lsh_cosine_pairs
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    return lsh_cosine_pairs(emb, threshold=0.35)
+    return ann.lsh_cosine_pairs(_emb(spark, sf_dir), threshold=0.35)
 
 
 def q_emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1151,11 +1106,7 @@ def q_emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine twin the text pipeline's CC can't have (its edges come
     from non-SQL scoring); the edge set HERE is SQL-derivable, so the
     iterative operator gets a direct value check."""
-    from ..operators.ann import lsh_cosine_pairs
-    from ..operators.cluster import connected_components
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    pairs = lsh_cosine_pairs(emb, threshold=0.35)
+    pairs = q_lsh_emb_dups(spark, sf_dir)
     edges = pairs.select(F.col("vec_id_a").alias("src"),
                          F.col("vec_id_b").alias("dst"))
     labels = connected_components(edges)
@@ -1189,11 +1140,8 @@ def q_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the scale path of q_ann_cosine_topk (rows-only: ranking ties under
     float summation differ across engines; recall vs brute force is
     pytest-asserted in tests/test_operators_spark.py)."""
-    from ..operators.ann import lsh_cosine_topk
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    probes = emb.filter(F.col("vec_id") < 10)
-    return lsh_cosine_topk(emb, probes, k=5, bits=4, n_tables=8)
+    emb = _emb(spark, sf_dir)
+    return ann.lsh_cosine_topk(emb, _probes(emb), k=5, bits=4, n_tables=8)
 
 
 def _kth_recall(emb: DataFrame, probes: DataFrame, picks: DataFrame,
@@ -1202,17 +1150,13 @@ def _kth_recall(emb: DataFrame, probes: DataFrame, picks: DataFrame,
     k-th cosine over `emb` and how many of its top-k `picks`
     (probe_id, neighbor_id) reach it — the tie-proof recall check shared
     by inv_ann_recall and inv_ivf_recall."""
-    from pyspark.sql import Window
-
-    from ..operators.ann import _dot, _norm
-
     # cosine at round-4 (engine-portable float contract, like emb_cosine_dups)
     pv = probes.select(F.col("vec_id").alias("probe_id"),
                        F.col("embedding").alias("pv"))
     cv = emb.select(F.col("vec_id").alias("neighbor_id"),
                     F.col("embedding").alias("cv"))
-    cos4 = F.round(_dot(F.col("pv"), F.col("cv"))
-                   / (_norm(F.col("pv")) * _norm(F.col("cv"))), 4)
+    cos4 = F.round(ann._dot(F.col("pv"), F.col("cv"))
+                   / (ann._norm(F.col("pv")) * ann._norm(F.col("cv"))), 4)
 
     # brute-force k-th cosine per probe
     scored = (cv.join(F.broadcast(pv), F.col("probe_id") != F.col("neighbor_id"))
@@ -1244,17 +1188,15 @@ def q_inv_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both the threshold value AND the count (= k iff LSH top-k is
     rank-equivalent to brute force) are checked. Covers the two rows-only
     top-k entries (ann_cosine_topk / lsh_cosine_topk)."""
-    from ..operators.ann import lsh_cosine_topk
-
     k = 5
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    probes = emb.filter(F.col("vec_id") < 10)
+    emb = _emb(spark, sf_dir)
+    probes = _probes(emb)
     # amplification sized for top-k recall 1: the k-th neighbor sits at
     # cosine ~0.26-0.35 here, where a 4-bit table collides w.p. ~0.12 —
     # 64 tables drive the per-neighbor miss rate to ~3e-4 (same table
     # count the oracled lsh_emb_dups pairs path uses). The 8-table catalog
     # entry (lsh_cosine_topk) stays as the cheap operating point.
-    picks = lsh_cosine_topk(emb, probes, k=k, bits=4, n_tables=64).select(
+    picks = ann.lsh_cosine_topk(emb, probes, k=k, bits=4, n_tables=64).select(
         "probe_id", "neighbor_id")
 
     return _kth_recall(emb, probes, picks, k)
@@ -1290,9 +1232,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting through the real operator (textops.token_counts):
     whitespace tokens (builtin) + BPE-ish pre-tokenizer count (Arrow UDF
     over the public GPT-2-style regex) — both DuckDB-recomputable."""
-    from ..operators.textops import token_counts
-
-    d = dpages(spark, sf_dir).filter(F.col("text").isNotNull())
+    d = _text_pages(spark, sf_dir)
     return token_counts(d).select("url", "n_tokens_ws", "n_tokens_bpe")
 
 
@@ -1314,21 +1254,17 @@ _IVF_CODEBOOKS: dict[str, list[list[float]]] = {}
 
 
 def _ivf_centroids(spark: SparkSession, sf_dir: str):
-    from ..operators.ann import ivf_train, suggest_n_cells
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = _emb(spark, sf_dir)
     key = os.path.normpath(sf_dir)
     if key not in _IVF_CODEBOOKS:
         spark.sparkContext.setJobDescription(f"ivf_train:{key}")
-        # codebook sized from the corpus (~sqrt(n): the r5 verdict's ask —
-        # a fixed 16 is wrong at every other scale); parquet row count
-        # comes from footer metadata, cheap. Sampled training (1/4 here;
-        # 1-10% at 10^9 rows): Lloyd places centroids from a deterministic
-        # id-hash subset collected to the driver (operators/ann.ivf_train)
-        # — the assignment pass stays full-corpus.
-        n_cells = suggest_n_cells(emb.count())
-        _IVF_CODEBOOKS[key] = ivf_train(emb, n_cells=n_cells, iters=3,
-                                        train_sample_mod=4)
+        # codebook sized from the corpus (~sqrt(n); a fixed 16 is wrong at
+        # every other scale); parquet row count comes from footer
+        # metadata, cheap. Lloyd places centroids from a deterministic
+        # 1/ann.IVF_SAMPLE_MOD id-hash subset collected to the driver
+        # (ann.ivf_train) — the assignment pass stays full-corpus.
+        _IVF_CODEBOOKS[key] = ann.ivf_train(
+            emb, n_cells=ann.suggest_n_cells(emb.count()))
         spark.sparkContext.setJobDescription(None)
     return emb, _IVF_CODEBOOKS[key]
 
@@ -1338,11 +1274,8 @@ def q_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd iterations, deterministic init), probes scan their 4 nearest
     cells only (rows-only: float-tie ranking; recall pytest-asserted and
     the exhaustive-probe twin inv_ivf_recall is value-oracled)."""
-    from ..operators.ann import ivf_cosine_topk
-
     emb, cents = _ivf_centroids(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < 10)
-    return ivf_cosine_topk(emb, probes, cents, k=5, n_probe=4)
+    return ann.ivf_cosine_topk(emb, _probes(emb), cents, k=5, n_probe=4)
 
 
 def q_inv_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1353,13 +1286,11 @@ def q_inv_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the k-th cosine from first principles). A bug anywhere in
     cell assignment / probe-cell ranking / the cell join (a dropped or
     double-counted cell) breaks the equality."""
-    from ..operators.ann import ivf_cosine_topk
-
     k = 5
     emb, cents = _ivf_centroids(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < 10)
-    picks = ivf_cosine_topk(emb, probes, cents, k=k,
-                            n_probe=len(cents)).select(
+    probes = _probes(emb)
+    picks = ann.ivf_cosine_topk(emb, probes, cents, k=k,
+                                n_probe=len(cents)).select(
         "probe_id", "neighbor_id")
 
     return _kth_recall(emb, probes, picks, k)
@@ -1367,9 +1298,7 @@ def q_inv_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash-64 per distinct text (rows-only; pinned by unit vectors)."""
-    from ..functions.udfs import signatures_udf
-
-    d = spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
+    d = spread(_text_pages(spark, sf_dir))
     return d.withColumn("sig", signatures_udf(F.col("text"))).select(
         "url", F.col("sig.simhash").alias("simhash")
     )
@@ -1465,15 +1394,10 @@ def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets), so production would widen chunks (6x21-bit for hamming<=5
     over 128-bit hashes) or pre-collapse exact dups like the pipeline
     does — noted, not needed at catalog scale."""
-    from ..functions.udfs import signatures_udf
-
-    # no checkpoint: _simhash_band_pairs consumes sig exactly once (the
-    # groupBy); persisting the UDF output here bought nothing and cost the
-    # block-manager write (inv_simhash_recall, with TWO consumers, keeps it)
-    sig = (spread(dpages(spark, sf_dir).filter(F.col("text").isNotNull()))
-           .withColumn("sig", signatures_udf(F.col("text")))
-           .select("url", F.col("sig.simhash").alias("simhash")))
-    return _simhash_band_pairs(sig, SIMHASH_DUP_HAMMING)
+    # no checkpoint: _simhash_band_pairs consumes the signatures exactly
+    # once (the groupBy); inv_simhash_recall, with TWO consumers, keeps one
+    return _simhash_band_pairs(q_simhash_signatures(spark, sf_dir),
+                               SIMHASH_DUP_HAMMING)
 
 
 def q_inv_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1482,31 +1406,19 @@ def q_inv_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     so EVERY exact-duplicate pair must appear in q_simhash_dups'
     candidates. Returns exact pairs found by the simhash path; oracle =
     all exact pairs; equality <=> recall 1 on the exact tier."""
-    from ..functions.udfs import signatures_udf
-
     h = spread(_hashed(spark, sf_dir))
     sig = (h.withColumn("sig", signatures_udf(F.col("text")))
            .select("url", "th", F.col("sig.simhash").alias("simhash"))
            .localCheckpoint(eager=False))
     cands = _simhash_band_pairs(sig.select("url", "simhash"),
                                 SIMHASH_DUP_HAMMING)
-    s = sig.select("url", "th")
-    a, b = s.alias("a"), s.alias("b")
-    exact_pairs = (
-        a.join(b, "th")
-        .filter(F.col("a.url") < F.col("b.url"))
-        .select(F.col("a.url").alias("url_a"), F.col("b.url").alias("url_b"))
-    )
-    return exact_pairs.join(cands.select("url_a", "url_b"),
-                            ["url_a", "url_b"])
+    return _exact_pairs(sig, "th").join(cands.select("url_a", "url_b"),
+                                        ["url_a", "url_b"])
 
 
 def q_full_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the complete blocking->scoring->CC pipeline on the
     synthetic labeled pages table for this sf_dir."""
-    from ..datagen import pages_dir_for
-    from .pipeline import DedupPipeline
-
     pd_dir = pages_dir_for(sf_dir)
     return DedupPipeline(spark, pd_dir).run()
 
@@ -1514,11 +1426,8 @@ def q_full_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k neighbors for 10 probe vectors (rows-only:
     float summation order differs across engines)."""
-    from ..operators.ann import cosine_topk
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    probes = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk(emb, probes, k=5)
+    emb = _emb(spark, sf_dir)
+    return ann.cosine_topk(emb, _probes(emb), k=5)
 
 
 # ---------------------------------------------------------------------------

@@ -100,7 +100,7 @@ class TestSignatures:
                 sigcore.minhash(t)), (i, t[:30])
 
     def test_stable_vectors(self):
-        # pinned to SIG_VERSION=1; if these change, bump the version
+        # if these change, bump ALGO_VERSION (the resume key)
         assert sigcore.hash64("abc") == sigcore.hash64("abc")
         sig = sigcore.minhash("one two three four five six")
         assert sig.dtype == np.uint64 and len(sig) == 128
@@ -383,8 +383,7 @@ class TestBlockKernel:
         ids = np.arange(len(V), dtype=np.int64) * 7 + 3
         sig = ann._code_sig(ann._srp_codes(V.astype(np.float64), W,
                                            self.BITS))
-        kernel = ann._shard_kernel(planes, self.BITS, 1, self.THR,
-                                   "vec_id", "embedding")
+        kernel = ann._shard_kernel(planes, self.BITS, 1, self.THR)
 
         def shard(code_sig):
             return pa.table({

@@ -75,7 +75,7 @@ class TestANN:
     def test_ivf_exhaustive_probe_equals_bruteforce(self, spark, emb):
         """n_probe = n_cells scans every inverted list — IVF must return
         the exact brute-force top-k (partition completeness)."""
-        cents = ann.ivf_train(emb, n_cells=8, iters=2)
+        cents = ann.ivf_train(emb, n_cells=8)
         probes = emb.filter(F.col("vec_id") < 5)
         exact = ann.cosine_topk(emb, probes, k=5)
         full = ann.ivf_cosine_topk(emb, probes, cents, k=5, n_probe=8)
@@ -89,7 +89,7 @@ class TestANN:
         """The 4-of-16-cells operating point keeps useful recall: probed
         cells are the probe's own neighborhoods under the k-means
         quantizer (deterministic corpus + deterministic init => pinned)."""
-        cents = ann.ivf_train(emb, n_cells=16, iters=3)
+        cents = ann.ivf_train(emb, n_cells=16)
         probes = emb.filter(F.col("vec_id") < 10)
         exact = ann.cosine_topk(emb, probes, k=5)
         approx = ann.ivf_cosine_topk(emb, probes, cents, k=5, n_probe=4)
@@ -98,14 +98,16 @@ class TestANN:
         recall = len(e & a) / len(e)
         assert recall >= 0.5, recall
 
-    def test_ivf_sampled_training_exhaustive_equals_bruteforce(self, spark,
-                                                               emb):
-        """Sampled Lloyd training (train_sample_mod): partition
+    def test_ivf_sampled_training_exhaustive_equals_bruteforce(
+            self, spark, emb, monkeypatch):
+        """Sampled Lloyd training (IVF_SAMPLE_MOD = 4): partition
         completeness is codebook-independent, so exhaustive probing must
         still return the exact brute-force top-k — and the sampled
-        codebook differs from the full one (the sample actually took)."""
-        cents_s = ann.ivf_train(emb, n_cells=8, iters=2, train_sample_mod=4)
-        cents_f = ann.ivf_train(emb, n_cells=8, iters=2)
+        codebook differs from the whole-corpus one (the sample took)."""
+        assert ann.IVF_SAMPLE_MOD == 4
+        cents_s = ann.ivf_train(emb, n_cells=8)
+        monkeypatch.setattr(ann, "IVF_SAMPLE_MOD", 1)
+        cents_f = ann.ivf_train(emb, n_cells=8)
         assert cents_s != cents_f  # the 1/4 sample really changed training
         probes = emb.filter(F.col("vec_id") < 5)
         exact = ann.cosine_topk(emb, probes, k=5)
@@ -116,13 +118,16 @@ class TestANN:
              for r in full.orderBy("probe_id", "rank").collect()]
         assert e == f
 
-    def test_ivf_sampled_training_tiny_sample_falls_back(self, spark, emb):
-        """A sample smaller than n_cells must fall back to full-corpus
-        training (identical codebook) instead of a degenerate one."""
-        cents_tiny = ann.ivf_train(emb, n_cells=8, iters=2,
-                                   train_sample_mod=1_000_000)
-        cents_full = ann.ivf_train(emb, n_cells=8, iters=2)
-        assert cents_tiny == cents_full
+    def test_ivf_sampled_training_tiny_sample_falls_back(self, spark, emb,
+                                                         monkeypatch):
+        """A sample smaller than n_cells must fall back to whole-corpus
+        training (the IVF_SAMPLE_MOD = 1 codebook) instead of a
+        degenerate one."""
+        monkeypatch.setattr(ann, "IVF_SAMPLE_MOD", 1_000_000)
+        cents_tiny = ann.ivf_train(emb, n_cells=8)
+        monkeypatch.setattr(ann, "IVF_SAMPLE_MOD", 1)
+        cents_full = ann.ivf_train(emb, n_cells=8)
+        assert len(cents_full) == 8 and cents_tiny == cents_full
 
     def test_suggest_n_cells_sqrt_sizing(self):
         assert ann.suggest_n_cells(0) == 1
@@ -213,7 +218,7 @@ class TestANN:
         df = spark.read.parquet(str(tmp_path / "vecs.parquet"))
 
         M = V.astype(np.float64)
-        codes = ann._srp_codes(M, ann._srp_planes(1, 2, dim, 42).T, 1)
+        codes = ann._srp_codes(M, ann._srp_planes(1, 2, dim).T, 1)
         assert np.bincount(codes[:, 0]).min() > 2000
         norms = np.linalg.norm(M, axis=1)
         cos = (M @ M.T) / np.outer(norms, norms)
@@ -259,7 +264,7 @@ class TestANN:
         for r in blocks.itertuples():
             assert codes[row[r.vec_id], r.table] == r.bucket
 
-        cents = ann.ivf_train(emb, n_cells=8, iters=2)
+        cents = ann.ivf_train(emb, n_cells=8)
         C = np.asarray(cents)
         d = (C * C).sum(axis=1)[None, :] - 2.0 * (mat @ C.T)
         nearest = np.argsort(d, axis=1, kind="stable")[:, :3]

@@ -43,6 +43,17 @@ def test_extraction_parity_byte_identical(spark, tiny_pages_dir):
     assert diff.count() == 0
 
 
+def test_signatures_extract_each_page_once(spark, tiny_pages_dir):
+    """The pipeline's signatures(extract(pages)) plan runs the extraction
+    UDF in one place: the `text IS NOT NULL` filter and signatures_udf
+    both read its output instead of re-running it."""
+    sig_df = signatures(extract(clean_pages(read_pages(spark,
+                                                       tiny_pages_dir))))
+    plan = sig_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("extract_text_udf(") == 1, plan
+    assert "signatures_udf(text" in plan, plan
+
+
 def test_extraction_parity_python_vs_spark(spark, tiny_pages_dir):
     """Driver-side pure-Python extraction agrees with the Spark UDF."""
     pages = read_pages(spark, tiny_pages_dir).limit(200).toPandas()

@@ -1,13 +1,15 @@
 """Local replica of the driver's correctness gate: run each queries() entry
 in Spark and its oracle_sql() twin in DuckDB at a given sf, compare
-row-count + column names + order-insensitive values.
+row-count + column names + order-insensitive values. Each OK and
+rows-only line ends with `sha=<12 hex>`, a digest of the canonicalized
+Spark result, so two trees' outputs compare by diffing two runs.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import math
+import hashlib
 import os
 import sys
 
@@ -43,6 +45,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def digest(df: pd.DataFrame) -> str:
+    """Short sha256 of a canonicalized frame's CSV form."""
+    return hashlib.sha256(df.to_csv(index=False).encode()).hexdigest()[:12]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -63,7 +70,8 @@ def main() -> int:
             failures += 1
             continue
         if name not in os_:
-            print(f"rows-only {name}: {len(sdf)} rows, cols={sorted(sdf.columns)}")
+            print(f"rows-only {name}: {len(sdf)} rows, "
+                  f"cols={sorted(sdf.columns)} sha={digest(canon(sdf))}")
             continue
         try:
             ddf = con.execute(os_[name]).df()
@@ -83,7 +91,7 @@ def main() -> int:
         try:
             pd.testing.assert_frame_equal(a, b, check_dtype=False,
                                           check_exact=False, atol=1e-6)
-            print(f"OK   {name}: {len(a)} rows")
+            print(f"OK   {name}: {len(a)} rows sha={digest(a)}")
         except AssertionError as e:
             print(f"FAIL {name}: value mismatch\n{str(e)[:400]}")
             failures += 1

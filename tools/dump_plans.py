@@ -77,12 +77,12 @@ def main() -> None:
     sections.append((
         "Extract + signatures: two Arrow UDF islands, built-in hashes",
         "No Exchange; id, prefix_hash, text_sha256 and n_chars are "
-        "built-in expressions in codegen. Two ArrowEvalPython nodes: the "
-        "`text IS NOT NULL` filter is pushed below the projection, so "
-        "extract_text_udf runs once for that filter and AGAIN beside "
-        "signatures_udf (text -> simhash, the 32x4 LSH band keys, "
-        "minhash) — every page is extracted twice (an open item, not a "
-        "property to keep).",
+        "built-in expressions in codegen. Two ArrowEvalPython nodes, and "
+        "extract_text_udf appears in ONE of them: it extracts each page "
+        "once, the `text IS NOT NULL` filter reads its output, and the "
+        "second node runs signatures_udf on the `text` attribute (text -> "
+        "simhash, the 32x4 LSH band keys, minhash) over the surviving "
+        "rows only.",
         fmt(sig_df),
     ))
     sig = sig_df.localCheckpoint()
@@ -118,9 +118,14 @@ def main() -> None:
                    "-- exact_group_map --", fmt(gm_df)]),
     ))
 
-    # 3. candidate generation as the pipeline runs it (hybrid star)
-    reps = blocking.exact_representatives(sig)
-    pruned, _ = blocking.prune_blocks(blocking.all_blocks(reps))
+    # 3. candidate generation as the pipeline runs it (DedupPipeline._labels:
+    # checkpointed roots and reps, hot-key bound, hybrid star)
+    roots = blocking.exact_roots(sig).localCheckpoint(eager=False)
+    reps = blocking.exact_representatives(sig, roots).localCheckpoint(
+        eager=False)
+    band_stream = blocking.all_blocks(reps)
+    pruned, _ = blocking.prune_blocks(band_stream, blocking.DEFAULT_MAX_BLOCK,
+                                      blocking.DEFAULT_HOT_BOUND)
     pairs = cand.simhash_prefilter(
         cand.candidate_pairs(pruned, keep_block_key=False,
                              star_min_block=cand.DEFAULT_STAR_MIN_BLOCK),
@@ -128,15 +133,24 @@ def main() -> None:
     sections.append((
         "Grouped LSH blocking -> hybrid star/clique pairs + SimHash prefilter",
         "ONE hash-agg exchange for the band stream (collect_list per "
-        "block key, map-side combinable); singleton prune and oversized-"
-        "block salting are in-row expressions (no Window, no join-back); "
-        "pairs come from Generate (explode) nodes — small blocks via the "
-        "nested clique explode, large blocks via the two dual-hub star "
-        "explodes, unioned — no self-join; the only pair-sized exchange "
-        "is the dropDuplicates dedup. Every pair/key column is a LONG "
-        "(surrogate ids — no url or block-key strings in any shuffle); "
-        "bit_count(xor) prefilter is a codegen'd expression.",
-        fmt(pairs),
+        "block key, map-side combinable, behind the grouped blocks' "
+        "checkpoint); singleton prune and oversized-block salting are "
+        "in-row expressions (no Window, no join-back); pairs come from "
+        "Generate (explode) nodes — small blocks via the nested clique "
+        "explode, large blocks via the two dual-hub star explodes, "
+        "unioned — no self-join; the only pair-sized exchange is the "
+        "dropDuplicates dedup. Every pair/key column is a LONG (surrogate "
+        "ids — no url or block-key strings in any shuffle); bit_count(xor) "
+        "prefilter is a codegen'd expression. Before the grouping, the "
+        "hot-key census (second plan) reads the band stream over the "
+        "checkpointed representatives (Scan ExistingRDD, explode-only): a "
+        "1/128 pmod(xxhash64(id)) member sample and one map-side-combined "
+        "count agg whose exchange carries ~the sampled rows, collected to "
+        "the driver; a key it flags is pre-salted row-level through a "
+        "broadcast join before the grouping (none is, at this scale).",
+        "\n".join([fmt(pairs), "-- hot-key census --",
+                   fmt(blocking.hot_key_census(band_stream,
+                                               blocking.DEFAULT_HOT_BOUND))]),
     ))
 
     # 4. scoring (the only pandas UDF in the pair path)
